@@ -35,20 +35,19 @@ object Tables {
   def basePath(warehouse: String, cfg: TableConfig): String =
     s"$warehouse/${cfg.schema}/${cfg.tableBase}_base"
 
-  /** Session-level codec tuning: Parquet codec levels flow through the Hadoop
-    * configuration, not write options (reference plumbs them as Iceberg table
-    * properties via ALTER, src/sqlHelpers.ts:141-149). gzip level is not
-    * exposed by parquet-java through Spark — documented deviation. */
-  def applyCodecConf(spark: SparkSession, c: CodecSpec): Unit = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    c.codec.toLowerCase match {
-      case "zstd" =>
-        hc.setInt("parquet.compression.codec.zstd.level", c.level)
-        hc.setInt("io.compression.codec.zstd.level", c.level)
-      case "brotli" =>
-        hc.setInt("compression.brotli.quality", c.level)
-      case _ => // snappy/lz4/gzip: level not tunable via parquet-java
-    }
+  /** Codec tuning as per-write options: Parquet codec levels are Hadoop
+    * configuration keys, and writer options reach the write job's Hadoop
+    * configuration, so each write carries its own level without touching
+    * the session-wide one that concurrent variant loads share (reference
+    * plumbs them as Iceberg table properties via ALTER,
+    * src/sqlHelpers.ts:141-149). gzip level is not exposed by parquet-java
+    * through Spark — documented deviation. */
+  private def codecOptions(c: CodecSpec): Map[String, String] = c.codec.toLowerCase match {
+    case "zstd" => Map(
+      "parquet.compression.codec.zstd.level" -> c.level.toString,
+      "io.compression.codec.zstd.level" -> c.level.toString)
+    case "brotli" => Map("compression.brotli.quality" -> c.level.toString)
+    case _ => Map.empty // snappy/lz4/gzip: level not tunable via parquet-java
   }
 
   /** Iceberg-style partition transform string → (derived column name,
@@ -89,7 +88,6 @@ object Tables {
       partitioning: Seq[String] = Nil,
       sortedBy: Seq[String] = Nil
   ): Unit = {
-    applyCodecConf(df.sparkSession, c)
     val transforms = partitioning.map(partitionTransform)
     val derived = transforms.filterNot { case (n, _) => df.columns.contains(n) }
     val withParts = derived.foldLeft(df) { case (d, (n, e)) => d.withColumn(n, e) }
@@ -99,6 +97,7 @@ object Tables {
     val writer = sorted.write
       .mode("overwrite")
       .option("compression", c.codec.toLowerCase)
+      .options(codecOptions(c))
       .format(format.toLowerCase)
     val partCols = transforms.map(_._1)
     (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)

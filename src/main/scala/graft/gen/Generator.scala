@@ -21,8 +21,10 @@ object Generator {
 
   /** Target rows per generated partition: keeps task sizes bounded at any
     * scale (a 1B-row wide load → ~4000 tasks, not 32). 2^18 wide rows ≈
-    * 80 MB uncompressed — small enough that a 100k-row batch still fans out
-    * across executors, large enough to amortize task overhead. */
+    * 80 MB uncompressed — large enough to amortize task overhead, so a
+    * batch of up to 2^18 rows (the reference's 100k-row batch included) is
+    * one partition and one task; batch loads get their parallelism from
+    * running several batches at once. */
   val RowsPerPartition: Long = 1L << 18
 
   /** ceil(rows / RowsPerPartition), clamped to [1, 4 × parallelism] so one

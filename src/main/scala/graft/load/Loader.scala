@@ -23,8 +23,11 @@ import graft.model._
   * generated rows are a pure function of (seed, id), a re-run regenerates
   * byte-identical data for any remaining batch — resume is exact, not
   * approximate. Batch writes land in per-batch subdirectories (see
-  * [[graft.ddl.Tables]]), so `concurrency` Spark jobs can overlap safely;
-  * within each job Spark parallelizes across all executor slots.
+  * [[graft.ddl.Tables]]), so `concurrency` Spark jobs can overlap safely.
+  * Each job is one task per batch of up to 2^18 rows
+  * ([[graft.gen.Generator.RowsPerPartition]]) unless
+  * `LoadPlan.batchPartitions` splits it, so the load's parallelism is the
+  * number of batches in flight, not the executor slot count.
   */
 object Loader {
 

@@ -11,8 +11,11 @@ import graft.model.{CodecSpec, SizeRow}
   *
   * `data_bytes` = sum of data-file lengths from a recursive FS listing
   * (what `SUM(file_size_in_bytes)` reads from `$files`); `rows` from a
-  * metadata-only Parquet count (Spark answers `count()` from footers without
-  * scanning data); `bytes_per_row` with NULL-safe division
+  * Parquet count that reads footers only (Spark answers `count()` without
+  * scanning column data). That count is not the whole cost: `Tables.read`
+  * first lists the variant and runs a schema-inference Spark job that reads
+  * one file's footer, so every measurement launches that job before the
+  * count. `bytes_per_row` with NULL-safe division
   * (`SUM(a)/NULLIF(SUM(b),0)`, reference: bench.ts:131-140). Plain Parquet
   * has no manifests, so `manifest_bytes` is 0 when requested and omitted
   * otherwise (reference gates it by `LOAD.includeManifestBytes`).

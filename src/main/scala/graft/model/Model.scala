@@ -80,9 +80,10 @@ final case class TableConfig(
   * (and output files) per batch. `None` keeps the generator's size-based
   * default (one task per ≤2^18-row batch). The reference's Trino executes
   * each 100k-row INSERT with intra-query parallelism across all worker
-  * threads; with `concurrency` below the core count, single-task batches
-  * leave the engine mostly idle, so the load bench splits each batch
-  * across the cores one concurrency slot owns. */
+  * threads. Splitting each batch the same way was measured in
+  * [[graft.bench.LoadBench]] and rejected: it was slower and wrote more
+  * bytes per row at every scale tried, so the load bench runs 1 task per
+  * batch and the split stays a knob for batches larger than one executor. */
 final case class LoadPlan(
     startId: Long = 1L,
     totalRows: Long = 1000000L,

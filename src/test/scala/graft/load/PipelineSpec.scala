@@ -335,6 +335,30 @@ class PipelineSpec extends SparkSpec {
     df.unpersist()
   }
 
+  test("concurrent variant loads each write with their own zstd level") {
+    val wh = Files.createTempDirectory("graft_lvl_par").toString
+    val cfg = Schemas.narrowOrders
+    val plan = LoadPlan(totalRows = 40000, batchRows = 20000, concurrency = 2)
+    val levels = Seq(1, 19)
+    def load(run: String, level: Int): Long = {
+      val codec = CodecSpec("zstd", level)
+      val path = s"$wh/$run/l$level"
+      Loader.loadTable(spark, cfg, plan.copy(checkpointDir = s"$wh/$run/cp$level"), codec, path,
+        quiet = true)
+      Sizes.measure(spark, s"l$level", path, codec).data_bytes
+    }
+    val sequential = levels.map(l => l -> load("seq", l)).toMap
+    val start = new java.util.concurrent.CyclicBarrier(levels.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(levels.size)
+    val concurrent =
+      try levels.map(l => pool.submit(() => { start.await(); l -> load("par", l) }))
+        .map(_.get()).toMap
+      finally pool.shutdown()
+    info(s"sequential $sequential, concurrent $concurrent")
+    assert(sequential(19) < sequential(1))
+    assert(concurrent == sequential, "a concurrent load wrote with another load's level")
+  }
+
   test("end-to-end variant load: checkpointed batches, sizes, partitioned variant") {
     val wh = Files.createTempDirectory("graft_wh").toString
     val cp = Files.createTempDirectory("graft_cp").toString

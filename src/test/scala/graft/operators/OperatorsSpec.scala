@@ -36,6 +36,21 @@ class OperatorsSpec extends SparkSpec {
     assert(out("aa") == ((2L, 2L)) && out("bb") == ((9L, 1L)))
   }
 
+  /** Output columns of each shuffle exchange that sits directly on a scan
+    * (no exchange or query stage below it) in the executed plan. */
+  private def firstExchangeColumns(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+    df.collect()
+    val h = new AdaptiveSparkPlanHelper {}
+    h.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if h.find(e.child) {
+        case _: Exchange | _: QueryStageExec | _: ReusedExchangeExec => true
+        case _ => false
+      }.isEmpty => e.output.map(_.name)
+    }
+  }
+
   test("exactCounts slim path matches the classic plan (dups, nulls, singletons)") {
     // a file-backed frame with exact dups, a null key, and unique rows —
     // written to parquet so stats are known and the size gate can fire
@@ -52,11 +67,15 @@ class OperatorsSpec extends SparkSpec {
     spark.conf.set("spark.graft.exactSlim.minBytes", "0")
     try {
       val slim = Dedup.exactCounts(df, "id", Seq("t"))
-      // the slim plan's first exchange must not carry the key column
-      val p = slim.queryExecution.executedPlan.toString
       assert(canon(slim.collect()) == classic,
         "slim exactCounts diverged from the classic plan")
       assert(classic == Seq((1L, 3L), (3L, 2L), (7L, 1L), (9L, 1L)))
+      // the slim plan's first exchange must not carry the key column; the
+      // classic plan's does, so the check can tell the two shapes apart
+      val slimFirst = firstExchangeColumns(slim)
+      assert(slimFirst.nonEmpty && slimFirst.forall(!_.contains("t")),
+        s"slim plan's first exchange carries the key: $slimFirst")
+      assert(firstExchangeColumns(Dedup.exact(df, "id", Seq("t"))).exists(_.contains("t")))
       // and the broadcast-cap fallback is still the classic result
       spark.conf.set("spark.graft.exactSlim.maxBroadcastKeys", "0")
       assert(canon(Dedup.exactCounts(df, "id", Seq("t")).collect()) == classic,
