@@ -38,6 +38,12 @@ trait TableFormat {
   /** Total data-file bytes — the `$files` `SUM(file_size_in_bytes)`. */
   def dataBytes(spark: SparkSession, path: String): Long
 
+  /** Total rows — the `$files` `SUM(record_count)`. The default counts a
+    * full [[read]] (a Spark job); formats that keep per-file record counts
+    * answer from metadata instead. */
+  def recordCount(spark: SparkSession, path: String, format: String = "PARQUET"): Long =
+    read(spark, path, format).count()
+
   /** Total manifest/metadata bytes — the `$manifests` sum; 0 for formats
     * without a metadata layer. */
   def manifestBytes(spark: SparkSession, path: String): Long
@@ -57,6 +63,13 @@ object HadoopPathFormat extends TableFormat {
 
   override def dataBytes(spark: SparkSession, path: String): Long =
     graft.measure.Sizes.listDataBytes(spark, path)
+
+  /** Parquet: the footers' row counts over the same files [[dataBytes]]
+    * sums, no Spark job. */
+  override def recordCount(spark: SparkSession, path: String, format: String): Long =
+    if (!format.equalsIgnoreCase("PARQUET")) super.recordCount(spark, path, format)
+    else ParquetFooter.rows(spark.sparkContext.hadoopConfiguration,
+      graft.measure.Sizes.listDataFiles(spark, path).map(f => (f.getPath, f.getLen)))
 
   /** Plain directories carry no manifests. */
   override def manifestBytes(spark: SparkSession, path: String): Long = 0L
@@ -108,16 +121,9 @@ class ManifestSidecarFormat(statCols: Seq[String] = Nil) extends TableFormat {
     val spark = df.sparkSession
     val hfs = fs(spark, path)
     val batchDir = new Path(path, s"batch=$batchIndex")
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Path)]
-    val it = hfs.listFiles(batchDir, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        val rel = f.getPath.toUri.getPath.stripPrefix(
-          batchDir.toUri.getPath).stripPrefix("/")
-        files += ((s"batch=$batchIndex/$rel", f.getLen, f.getPath))
-      }
+    val files = graft.measure.Sizes.listDataFiles(spark, batchDir.toString).map { f =>
+      val rel = f.getPath.toUri.getPath.stripPrefix(batchDir.toUri.getPath).stripPrefix("/")
+      (s"batch=$batchIndex/$rel", f.getLen, f.getPath)
     }
     // Per-file column bounds. Parquet: LIFTED FROM THE FOOTERS the write
     // already produced — zero data re-read, the same place Iceberg's
@@ -310,6 +316,13 @@ class ManifestSidecarFormat(statCols: Seq[String] = Nil) extends TableFormat {
   override def dataBytes(spark: SparkSession, path: String): Long =
     manifests(spark, path).flatMap(_._2.files).map(_.bytes).sum
 
+  /** Parquet: the footers' row counts of the manifest-listed files only (a
+    * torn write stays invisible), no file listing and no Spark job. */
+  override def recordCount(spark: SparkSession, path: String, format: String): Long =
+    if (!format.equalsIgnoreCase("PARQUET")) super.recordCount(spark, path, format)
+    else ParquetFooter.rows(spark.sparkContext.hadoopConfiguration,
+      manifests(spark, path).flatMap(_._2.files).map(e => (new Path(s"$path/${e.path}"), e.bytes)))
+
   override def manifestBytes(spark: SparkSession, path: String): Long = {
     val hfs = fs(spark, path)
     manifests(spark, path).map { case (p, _) => hfs.getFileStatus(p).getLen }.sum
@@ -394,12 +407,9 @@ object ManifestSidecarFormat extends ManifestSidecarFormat(Nil) {
       file: org.apache.hadoop.fs.Path,
       schema: org.apache.spark.sql.types.StructType,
       cols: Seq[String]): Map[String, (Option[String], Option[String], Long)] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+    ParquetFooter.read(conf, file) { footer =>
+      val blocks = footer.getBlocks.asScala.toSeq
       cols.flatMap { c =>
         schema.fields.find(_.name == c).map { field =>
           var lo: Option[Comparable[Any]] = None
@@ -428,7 +438,7 @@ object ManifestSidecarFormat extends ManifestSidecarFormat(Nil) {
             hi.flatMap(v => boundToString(field.dataType, v)), nulls))
         }
       }.toMap
-    } finally reader.close()
+    }
   }
 
   private val tsFmt = java.time.format.DateTimeFormatter
@@ -468,4 +478,29 @@ object ManifestSidecarFormat extends ManifestSidecarFormat(Nil) {
     if (numericSql.contains(tpe) || tpe.startsWith("decimal"))
       BigDecimal(a).compare(BigDecimal(b))
     else a.compareTo(b)
+}
+
+/** Parquet footer access for metadata answers: per-file statistics
+  * ([[ManifestSidecarFormat.footerStats]]) and record counts. */
+private[graft] object ParquetFooter {
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.hadoop.fs.Path
+  import org.apache.parquet.hadoop.ParquetFileReader
+  import org.apache.parquet.hadoop.metadata.ParquetMetadata
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+
+  /** Opens `file`, reads only its footer, and applies `f` to it. */
+  def read[T](conf: Configuration, file: Path)(f: ParquetMetadata => T): T = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try f(reader.getFooter) finally reader.close()
+  }
+
+  /** Summed row-group row counts of `files` (path, length). A zero-byte
+    * file has no footer and holds no rows; Spark's reader skips it too. */
+  def rows(conf: Configuration, files: Seq[(Path, Long)]): Long = {
+    import scala.jdk.CollectionConverters._
+    files.collect { case (f, len) if len > 0 =>
+      read(conf, f)(_.getBlocks.asScala.map(_.getRowCount).sum)
+    }.sum
+  }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.GenExpressions
 import graft.model._
 
 /** Spec→`Column` expression compiler: the Spark-native replacement for the
@@ -17,10 +18,11 @@ import graft.model._
   *     from `xxhash64(seed, id, column, salt)` mapped to uniform [0,1), so a
   *     row's content is a pure function of (seed, id) — independent of
   *     partitioning, batching, and retries. Same distributions, reproducible.
-  *   - Hash-based draws are legal inside higher-order-function lambdas (the
-  *     array generator), where Spark's analyzer rejects `rand()`.
-  *   - Everything stays inside whole-stage codegen: only built-in expressions,
-  *     no UDFs.
+  *   - Every expression supports whole-stage codegen: built-ins with a
+  *     `doGenCode`, plus the fused string kernel
+  *     [[graft.functions.GenExpressions.SeededHex]]; no UDFs and no
+  *     higher-order functions (Spark's `transform` is `CodegenFallback`, so
+  *     arrays are built by element position instead).
   */
 object ColumnExprs {
 
@@ -88,11 +90,7 @@ object ColumnExprs {
       case StringSpec(length, _) => // reference: src/sqlHelpers.ts:41-43
         // Reference takes substr(uuid-hex, 1, len), silently capping at 32
         // chars; we chain md5 blocks so the string always has `length` chars.
-        val blocks = (length + 31) / 32
-        val hex = concat((0 until blocks).map { b =>
-          md5(concat_ws("/", (lit(seed) +: id +: lit(s"$name/s$b") +: idx): _*))
-        }: _*)
-        substring(hex, 1, length)
+        GenExpressions.seeded_hex(seed, id, name, idx, length)
       case DateSpec(start, end, _) => // reference: src/sqlHelpers.ts:61-64
         val dspan = daysBetween(start, end)
         date_add(lit(start).cast(DateType), floor(u("v") * lit(dspan + 1)).cast(IntegerType))
@@ -111,10 +109,18 @@ object ColumnExprs {
         val mn = math.max(0, minLen)
         val span = math.max(0, maxLen - mn)
         val nExpr = (lit(mn) + floor(u("len") * lit(span + 1))).cast(IntegerType)
-        transform(
-          sequence(lit(1), nExpr),
-          x => columnExpr(s"$name.elem", elem, seed, id, idx :+ x)
-        )
+        // Element i is salted with i: the first n elements are the
+        // reference's `transform(sequence(1, n), x -> elem(x))`.
+        def at(i: Int): Column = columnExpr(s"$name.elem", elem, seed, id, idx :+ lit(i))
+        // Sliced by nExpr even for a fixed length, so the column is nullable
+        // for every length spec; that is part of the stored Parquet schema.
+        def drawn = slice(array((1 to mn + span).map(at): _*), lit(1), nExpr)
+        // Reference parity: `sequence(1, 0)` is [1, 0] in Trino and Spark,
+        // so a drawn length of 0 yields the two elements 1 and 0.
+        def zeroDraw = when(nExpr === 0, array(at(1), at(0)))
+        if (mn > 0) drawn
+        else if (span == 0) zeroDraw // always drawn; no else, so nullable
+        else zeroDraw.otherwise(drawn)
     }
     wrapNullable(value, spec.nullable, u("null")).as(name)
   }

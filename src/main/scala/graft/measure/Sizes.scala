@@ -1,6 +1,6 @@
 package graft.measure
 
-import org.apache.hadoop.fs.{FileSystem, Path, RemoteIterator}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 import graft.model.{CodecSpec, SizeRow}
@@ -9,39 +9,39 @@ import graft.model.{CodecSpec, SizeRow}
   * Iceberg `$files` / `$manifests` metadata aggregations
   * (reference: src/commands/bench.ts:124-168).
   *
-  * `data_bytes` = sum of data-file lengths from a recursive FS listing
-  * (what `SUM(file_size_in_bytes)` reads from `$files`); `rows` from a
-  * Parquet count that reads footers only (Spark answers `count()` without
-  * scanning column data). That count is not the whole cost: `Tables.read`
-  * first lists the variant and runs a schema-inference Spark job that reads
-  * one file's footer, so every measurement launches that job before the
-  * count. `bytes_per_row` with NULL-safe division
+  * Both sums come from metadata and launch no Spark job:
+  * `data_bytes` = sum of data-file lengths (`SUM(file_size_in_bytes)`),
+  * `rows` = sum of the data files' record counts (`SUM(record_count)`),
+  * each through the table format ([[graft.ddl.TableFormat.dataBytes]] /
+  * [[graft.ddl.TableFormat.recordCount]]; for Parquet the counts are read
+  * from the file footers, other formats fall back to a `count()` job).
+  * `bytes_per_row` with NULL-safe division
   * (`SUM(a)/NULLIF(SUM(b),0)`, reference: bench.ts:131-140). Plain Parquet
   * has no manifests, so `manifest_bytes` is 0 when requested and omitted
   * otherwise (reference gates it by `LOAD.includeManifestBytes`).
   */
 object Sizes {
 
-  /** Recursive data-file byte count — the plain-filesystem `$files`
-    * aggregate, exposed for [[graft.ddl.HadoopPathFormat]]. Skips
-    * `_`/`.`-prefixed bookkeeping files AND everything under `_`/`.`-
-    * prefixed directories (`_SUCCESS`, `_manifests/…`) — the same hidden-
-    * path rule Spark's file index applies when reading. */
-  private[graft] def listDataBytes(spark: SparkSession, dir: String): Long = {
-    val fs = FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+  /** The data files under `dir` (or `dir` itself if it is a file) — what
+    * Spark's file index reads. Skips `_`/`.`-prefixed bookkeeping files AND
+    * everything under `_`/`.`-prefixed directories (`_SUCCESS`, `.crc`,
+    * `_manifests/…`), the hidden-path rule Spark applies when reading.
+    * Walks with `listStatus`: on the local filesystem `listFiles` forks a
+    * process per file to read its permissions. */
+  private[graft] def listDataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
     val p = new Path(dir)
-    if (!fs.exists(p)) return 0L
-    val root = p.toUri.getPath.stripSuffix("/") + "/"
-    var total = 0L
-    val it: RemoteIterator[org.apache.hadoop.fs.LocatedFileStatus] = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = f.getPath.toUri.getPath.stripPrefix(root)
-      val hidden = rel.split("/").exists(c => c.startsWith("_") || c.startsWith("."))
-      if (!hidden) total += f.getLen
-    }
-    total
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hidden(s: FileStatus) = { val n = s.getPath.getName; n.startsWith("_") || n.startsWith(".") }
+    def walk(s: FileStatus): Seq[FileStatus] =
+      if (s.isFile) Seq(s)
+      else fs.listStatus(s.getPath).toSeq.filterNot(hidden).flatMap(walk)
+    if (!fs.exists(p)) Nil else walk(fs.getFileStatus(p))
   }
+
+  /** Recursive data-file byte count — the plain-filesystem `$files`
+    * aggregate, exposed for [[graft.ddl.HadoopPathFormat]]. */
+  private[graft] def listDataBytes(spark: SparkSession, dir: String): Long =
+    listDataFiles(spark, dir).map(_.getLen).sum
 
   def measure(
       spark: SparkSession,
@@ -53,7 +53,7 @@ object Sizes {
       tableFormat: graft.ddl.TableFormat = graft.ddl.HadoopPathFormat
   ): SizeRow = {
     val dataBytes = tableFormat.dataBytes(spark, path)
-    val rows = if (dataBytes == 0) 0L else tableFormat.read(spark, path, format).count()
+    val rows = if (dataBytes == 0) 0L else tableFormat.recordCount(spark, path, format)
     val bpr = if (rows == 0) 0.0 else dataBytes.toDouble / rows
     val manifests =
       if (includeManifestBytes) Some(tableFormat.manifestBytes(spark, path)) else None

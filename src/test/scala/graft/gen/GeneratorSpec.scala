@@ -1,5 +1,7 @@
 package graft.gen
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -124,5 +126,71 @@ class GeneratorSpec extends SparkSpec {
     val r9 = df.filter(col("row_9").isNotNull).agg(min("row_9"), max("row_9")).head()
     assert(r9.getInt(0) >= 1000 && r9.getInt(1) <= 10000)
     df.unpersist()
+  }
+
+  /** `rows:sum of row xxhash64s:md5 of the schema JSON` — changes if any
+    * value, row, type or nullability does. */
+  private def digest(df: DataFrame, cols: Seq[String]): String = {
+    val r = df.agg(count(lit(1)),
+      sum(xxhash64(cols.map(col): _*).cast(DecimalType(38, 0)))).head()
+    val schema = java.security.MessageDigest.getInstance("MD5")
+      .digest(df.select(cols.map(col): _*).schema.json.getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString.take(12)
+    s"${r.getLong(0)}:${r.getDecimal(1)}:$schema"
+  }
+
+  /** Edge specs the shipped schemas do not reach. */
+  private val edgeSpecs = TableConfig("c", "s", "edge", columns = Seq(
+    "id" -> BigintSpec(1, 1),
+    "a0" -> ArraySpec(IntSpec(0, 100), minLen = 0, maxLen = 3),
+    "a00" -> ArraySpec(EnumSpec(EnumBase.Str, Seq("x", "y")), minLen = 0, maxLen = 0),
+    "astr" -> ArraySpec(StringSpec(12, 0.2), minLen = 1, maxLen = 4, nullable = 0.1),
+    "nstr" -> StringSpec(10, 0.3),
+    "s70" -> StringSpec(70),
+    "s0" -> StringSpec(0),
+    "a64" -> ArraySpec(BigintSpec(-50, 50), minLen = 2, maxLen = 64),
+    "astr40" -> ArraySpec(StringSpec(40), minLen = 0, maxLen = 2),
+    "afix" -> ArraySpec(DateSpec("2024-01-01", "2024-12-31", 0.1), 3, 3),
+    "adbl" -> ArraySpec(DoubleSpec(-1, 1, 0.5), minLen = 0, maxLen = 5, nullable = 0.2)
+  ), idColumn = Some("id"))
+
+  // Frozen digests, first taken from the `transform`/`md5` formulation of the
+  // generator; generated values must never change silently (stored variants,
+  // sampled-row checks and codec byte counts all depend on them).
+  private val frozen = Map(
+    "narrowOrders" -> "20000:-257037471540170346887:6e2b7fb8ad69",
+    "wideEvents" -> "20000:-215946628954934868258:c6e291ea4c46",
+    "a0" -> "5000:-30442752159788173532:4c765ce666af",
+    "a00" -> "5000:31177879179951361327:fc9818443b1f",
+    "astr" -> "5000:-171477638585971935288:cbf23df9c4ab",
+    "nstr" -> "5000:323655694535010730257:4472bbc18dd5",
+    "s70" -> "5000:385577499058398831446:ac8faacda25c",
+    "s0" -> "5000:108933911812162308972:ea7692413ed5",
+    "a64" -> "5000:-172779274539075109754:8d939046c121",
+    "astr40" -> "5000:590077844887505492419:20b609713471",
+    "afix" -> "5000:-787351814431436844309:578c9da7f146",
+    "adbl" -> "5000:-50259060698946388986:6635a54054f6")
+
+  test("generated values are frozen: shipped schemas and edge specs") {
+    val got = Seq(Schemas.narrowOrders -> "narrowOrders", Schemas.wideEvents -> "wideEvents")
+      .map { case (cfg, key) =>
+        val df = Generator.generate(spark, cfg, 1, N, seed = 1, numPartitions = Some(4))
+        key -> digest(df, df.columns.toSeq)
+      } ++ {
+        val df = Generator.generate(spark, edgeSpecs, 1, 5000, seed = 7, numPartitions = Some(3))
+          .cache()
+        try edgeSpecs.columns.map(_._1).filter(_ != "id").map(c => c -> digest(df, Seq("id", c)))
+        finally df.unpersist()
+      }
+    val diff = got.filter { case (k, v) => !frozen.get(k).contains(v) }
+    assert(diff.isEmpty, diff.map { case (k, v) => s""""$k" -> "$v"""" }.mkString("\n", ",\n", ""))
+  }
+
+  test("generator projection has no CodegenFallback expression for either shipped schema") {
+    Seq(Schemas.narrowOrders, Schemas.wideEvents).foreach { cfg =>
+      val plan = Generator.generate(spark, cfg, 1, 10, 1, Some(1)).queryExecution.optimizedPlan
+      val fallbacks = plan.expressions.flatMap(_.collect { case e: CodegenFallback => e.prettyName })
+      assert(fallbacks.isEmpty, s"${cfg.tableBase}: ${fallbacks.distinct.mkString(", ")}")
+    }
   }
 }

@@ -68,6 +68,31 @@ class PipelineSpec extends SparkSpec {
     assert(size.rows == 5000 && size.data_bytes > 0)
   }
 
+  test("Sizes.measure on Parquet reads footers: no Spark job, rows equal a count " +
+      "with _SUCCESS, .crc, a zero-row and a zero-byte part file present") {
+    val wh = Files.createTempDirectory("graft_footer").toString
+    val cfg = Schemas.narrowOrders
+    val codec = CodecSpec("zstd", 3)
+    val path = Tables.variantPath(wh, cfg, codec)
+    Tables.writeBatch(graft.gen.Generator.generate(spark, cfg, 1, 3000, 1, Some(2)),
+      path, 0, codec)
+    Tables.writeBatch(graft.gen.Generator.generate(spark, cfg, 3001, 0, 1, Some(1)),
+      path, 1, codec)
+    Files.createFile(java.nio.file.Paths.get(s"$path/batch=1/part-zero-bytes.parquet"))
+    val files = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(java.nio.file.Paths.get(path))
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList finally walk.close()
+    }
+    def named(p: String => Boolean) = files.filter(f => p(f.getFileName.toString))
+    assert(named(_ == "_SUCCESS").nonEmpty && named(_.endsWith(".crc")).nonEmpty)
+    val partBytes = named(_.startsWith("part-")).map(Files.size).sum
+    var size: SizeRow = null
+    assert(jobsLaunchedBy { size = Sizes.measure(spark, "footer_t", path, codec) } == 0)
+    assert(size.rows == Tables.read(spark, path).count() && size.rows == 3000)
+    assert(size.data_bytes == partBytes)
+  }
+
   test("TableFormat seam: an alternate format drops into load + measure unchanged") {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.sql.{DataFrame, SparkSession}

@@ -1,10 +1,7 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.TimestampType
@@ -16,33 +13,6 @@ class TestTablesSpec extends SparkSpec {
   /** The sf0.001 fixture directory, as the shared `sf` reader resolves it. */
   private lazy val dir =
     new org.apache.hadoop.fs.Path(sf("sf0.001", "orders").inputFiles.head).getParent.toUri.getPath
-
-  /** Spark jobs that `body` launches on the calling thread. A sentinel job
-    * in another group runs after it; once the listener has seen the
-    * sentinel start, it has seen every job `body` started. */
-  private def jobsLaunchedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"test-tables-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == tag => jobs.incrementAndGet()
-          case Some(g) if g == s"$tag-sentinel" => sentinelSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$tag-sentinel", "sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def relationOf(df: DataFrame) =
     df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l }.get
