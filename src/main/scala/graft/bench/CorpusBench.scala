@@ -53,7 +53,7 @@ import graft.operators.{ConnectedComponents, Contamination, Dedup, Rank, Similar
 object CorpusBench {
 
   /** Sums shuffle-write and spill bytes across all tasks since creation. */
-  final class ShuffleTally extends SparkListener {
+  private final class ShuffleTally extends SparkListener {
     val written = new AtomicLong
     val spilled = new AtomicLong
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -62,6 +62,16 @@ object CorpusBench {
         written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
       }
+    }
+  }
+
+  /** Removes `dir` and everything under it; a missing path is a no-op. */
+  private[bench] def deleteTree(dir: String): Unit = {
+    val p = Paths.get(dir)
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.deleteIfExists(f))
+      finally s.close()
     }
   }
 
@@ -461,7 +471,6 @@ object CorpusBench {
           .head().getLong(0)
       }, valueField = "checksum")
       bench("ngram_posting", d => Dedup.ngramJaccard(d, "doc_id", "text", threshold = 0.3), shSized)
-      bench("ngram_join", d => Dedup.ngramJaccardJoin(d, "doc_id", "text", threshold = 0.3))
       bench("dedup_clusters", d =>
         ConnectedComponents.components(
           Dedup.ngramJaccard(d, "doc_id", "text", threshold = 0.3), "id_a", "id_b"),
@@ -593,14 +602,6 @@ object CorpusBench {
       benchOn("knn_join", embs, e =>
         Similarity.knnJoin(e, "vec_id", "embedding", k = 5,
           planes = planes, tables = 4), candSized)
-      // the bounded-heap comparison path (measured-and-rejected default;
-      // fenced out of the operators API — see Similarity.topKStage): its
-      // correctness needs the global pair distinct knnJoin eliminated, so
-      // the composition exists only here, as a measurement
-      benchOn("knn_join_topk", embs, e =>
-        Similarity.topKStage(
-          Similarity.scoredCandidates(e, "vec_id", "embedding",
-            planes = planes, tables = 4), k = 5))
       // SemDeDup: nLists grows with n so expected cluster size stays ~256
       // and per-cell pair work is ~128 evals/member, linear in n total;
       // assignment is the in-row portable expression (no dim explode) —
@@ -872,12 +873,6 @@ object CorpusBench {
       if (opFilter.exists(_.exists(_.startsWith("knn_index_compact")))) {
         val idxPath = s"$stageDir/knnidxc_$n"
         val fragSave = s"$stageDir/knnidxc_frag_$n"
-        def deleteTree(dir: String): Unit = {
-          val p = Paths.get(dir)
-          if (Files.exists(p))
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
-        }
         def linkTree(src: String, dst: String): Unit = {
           val s0 = Paths.get(src)
           Files.walk(s0).forEach { p =>
@@ -920,12 +915,6 @@ object CorpusBench {
       // KnnIndex.shouldCompact defaults to cite these rows.
       if (opFilter.exists(_.exists(_.startsWith("knn_index_read_amp")))) {
         val idxPath = s"$stageDir/knnidxra_$n"
-        def deleteTree(dir: String): Unit = {
-          val p = Paths.get(dir)
-          if (Files.exists(p))
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
-        }
         deleteTree(idxPath)
         val baseEmb = embs.filter(col("vec_id") % 10 =!= 0)
         graft.operators.KnnIndex.build(baseEmb, "vec_id", "embedding", idxPath)
@@ -980,12 +969,6 @@ object CorpusBench {
       // recall is comparable at every step.
       if (opFilter.exists(_.exists(_.startsWith("knn_index_tombstone")))) {
         val idxPath = s"$stageDir/knnidxts_$n"
-        def deleteTree(dir: String): Unit = {
-          val p = Paths.get(dir)
-          if (Files.exists(p))
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
-        }
         deleteTree(idxPath)
         val baseEmb = embs.filter(col("vec_id") % 10 =!= 0)
         graft.operators.KnnIndex.build(baseEmb, "vec_id", "embedding", idxPath)
@@ -1027,12 +1010,6 @@ object CorpusBench {
         val hashes = spark.read.parquet(hashPath)
           .select(col("id"), col("hash"))
         val sigPath = s"$stageDir/sigidxt_$n"
-        def deleteTree(dir: String): Unit = {
-          val p = Paths.get(dir)
-          if (Files.exists(p))
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
-        }
         deleteTree(sigPath)
         val base = hashes.filter(col("id") % 10 =!= 0)
         graft.multimodal.Multimodal.buildSigIndex(base, sigPath, bands = 4)
@@ -1113,12 +1090,6 @@ object CorpusBench {
       // wall, shuffle, spill; rows/s = batch_rows / sec.
       if (opFilter.exists(_.exists(_.startsWith("knn_index_ingest_mine")))) {
         val idxPath = s"$stageDir/knnidxim_$n"
-        def deleteTree(dir: String): Unit = {
-          val p = Paths.get(dir)
-          if (Files.exists(p))
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
-        }
         deleteTree(idxPath)
         val labeled = embs
           .withColumn("lbl", pmod(xxhash64(col("vec_id"), lit("hn")), lit(16L)))
@@ -1150,12 +1121,6 @@ object CorpusBench {
       // cost of the policy.
       if (opFilter.exists(_.exists(_.startsWith("knn_index_ingest_maint")))) {
         val idxPath = s"$stageDir/knnidximm_$n"
-        def deleteTree(dir: String): Unit = {
-          val p = Paths.get(dir)
-          if (Files.exists(p))
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
-        }
         deleteTree(idxPath)
         val labeled = embs
           .withColumn("lbl", pmod(xxhash64(col("vec_id"), lit("hn")), lit(16L)))
@@ -1203,12 +1168,6 @@ object CorpusBench {
         val ckptDir = s"$stageDir/knnidxis_ckpt_$n"
         val watchDir = s"$stageDir/knnidxis_in_$n"
         val feedDir = s"$stageDir/knnidxis_feed_$n"
-        def deleteTree(dir: String): Unit = {
-          val p = Paths.get(dir)
-          if (Files.exists(p))
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
-        }
         Seq(idxPath, ckptDir, watchDir, feedDir).foreach(deleteTree)
         Files.createDirectories(Paths.get(watchDir))
         val labeled = embs
@@ -1333,12 +1292,6 @@ object CorpusBench {
         val watchDir = s"$stageDir/sigidxs_in_$n"
         val feedDir = s"$stageDir/sigidxs_feed_$n"
         val outDir = s"$stageDir/sigidxs_verdicts_$n"
-        def deleteTree(dir: String): Unit = {
-          val p = Paths.get(dir)
-          if (Files.exists(p))
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
-        }
         Seq(sigPath, ckptDir, watchDir, feedDir, outDir).foreach(deleteTree)
         Files.createDirectories(Paths.get(watchDir))
         graft.multimodal.Multimodal.buildSigIndex(
@@ -1391,12 +1344,6 @@ object CorpusBench {
         val hashes = spark.read.parquet(hashPath)
           .select(col("id"), col("hash"))
         val sigPath = s"$stageDir/sigidxra_$n"
-        def deleteTree(dir: String): Unit = {
-          val p = Paths.get(dir)
-          if (Files.exists(p))
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.deleteIfExists(f))
-        }
         deleteTree(sigPath)
         graft.multimodal.Multimodal.buildSigIndex(
           hashes.filter(col("id") % 10 =!= 0), sigPath, bands = 4)

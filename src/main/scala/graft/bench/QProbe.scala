@@ -1,5 +1,8 @@
 package graft.bench
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.SparkEntry
@@ -7,8 +10,25 @@ import graft.SparkEntry
 /** Generic per-query stage attribution: runs declared queries under the
   * Bench session config with a stage listener and min-of-N timing.
   * Env: PROBE_Q=q01_pricing_summary,q07_join_agg  PROBE_ITERS=5.
-  * Not part of the benchmark protocol. */
+  * Not part of the benchmark protocol. Rejected alternatives measured with
+  * earlier one-off probes are recorded in docs/REJECTED.md. */
 object QProbe {
+
+  /** Records (stageId, numTasks, wallMs, execMs, cpuMs, shuffleReadKB,
+    * shuffleWriteKB, name) per completed stage. */
+  final class StageTally extends SparkListener {
+    val rows = mutable.ArrayBuffer[String]()
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      val si = sc.stageInfo
+      val wall = (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(-1L)
+      val m = si.taskMetrics
+      rows += f"    stage ${si.stageId}%3d tasks=${si.numTasks}%4d wall=${wall}%5d ms " +
+        f"exec=${m.executorRunTime}%6d ms cpu=${m.executorCpuTime / 1000000}%6d ms " +
+        f"shRead=${m.shuffleReadMetrics.totalBytesRead / 1024}%8d KB " +
+        f"shWrite=${m.shuffleWriteMetrics.bytesWritten / 1024}%8d KB  ${si.name.take(60)}"
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -24,7 +44,7 @@ object QProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val tally = new Q23Probe.StageTally
+    val tally = new StageTally
     spark.sparkContext.addSparkListener(tally)
 
     def runNoop(df: DataFrame): Double = {

@@ -37,8 +37,9 @@ final case class SaturationBudgetExceeded(
   *  - MinHash + LSH: per-row signatures (scan-local), then one shuffle on
   *    (band, bucket) — candidate generation is O(near-dups), never O(N²).
   *  - SimHash: 64-bit signature per row, banded for Hamming-radius search.
-  *  - n-gram Jaccard: inverted-index join with a hot-shingle cutoff so the
-  *    shuffle stays bounded under Zipfian shingle frequencies.
+  *  - n-gram Jaccard: capped posting lists per shingle hash, pairs from a
+  *    local double-explode; the hot-shingle cutoff keeps the shuffle
+  *    bounded under Zipfian shingle frequencies.
   *
   * Execution-shape rules applied everywhere:
   *
@@ -161,13 +162,6 @@ object Dedup {
   private def tokenFrame(df: DataFrame, idCol: String, textCol: String): DataFrame =
     Stage.ensureWide(df.select(col(idCol).as("id"), col(textCol).as("text")))
       .select(col("id"), toks(col("text")).as("tk"))
-
-  /** MinHash signature: `numHashes` longs, slot `i` = min over the shingle
-    * set of a per-slot avalanche mix of the shingle's xxhash64. Native
-    * codegen'd expression — one byte pass per shingle, `numHashes` integer
-    * mixes, no intermediate arrays. Scan-local, no shuffle. */
-  def minhashSignature(sh: Column, numHashes: Int): Column =
-    HashExpressions.minhash_signature(sh, numHashes)
 
   /** Estimated Jaccard from two signatures: fraction of agreeing slots
     * (native codegen'd scalar — no intermediate arrays). */
@@ -603,9 +597,11 @@ object Dedup {
     * formulation. One scan, one shuffle on the shingle hash, pairs emitted
     * from a local double-explode of each capped posting list.
     *
-    * Settled by measurement against [[ngramJaccardJoin]] on the
-    * deterministic corpus (docs/corpusbench_local32.jsonl, local[32],
-    * min-of-2, default Spark confs): posting wins at EVERY scale —
+    * Settled by measurement against the inverted-index self-join
+    * formulation (frequency gate + self-join on the shingle hash; deleted,
+    * numbers and recovery in docs/REJECTED.md) on the deterministic corpus
+    * (docs/corpusbench_local32.jsonl, local[32], min-of-2, default Spark
+    * confs): posting wins at EVERY scale —
     * 0.74 s vs 0.84 s at 5k docs, 1.16 s vs 2.15 s at 50k, 9.8 s vs
     * 24.8 s at 500k — with ~15% less shuffle (1.32 GB vs 1.55 GB at 500k)
     * and 4.7× less spill (7.5 GB vs 35 GB). The one configuration that
@@ -795,63 +791,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Exact n-gram Jaccard similarity via inverted-index join — the
-    * alternative formulation, kept as the measured comparison target for
-    * [[ngramJaccard]] (which beats it at every corpus scale tried; see its
-    * scaladoc for the numbers) and for engines/sessions where a custom
-    * imperative aggregate is unavailable.
-    *
-    * Explode distinct shingles → drop shingles shared by more than
-    * `maxShingleFreq` docs (Zipf guard: a stopword shingle would otherwise
-    * produce a quadratic bucket) → count shared shingles per pair →
-    * `|A∩B| / (|A|+|B|-|A∩B|)`. Pairs sharing only dropped shingles can be
-    * missed — that is the standard recall/cost dial.
-    *
-    * One explicit hash shuffle of the exploded (id, n_sh, sh_h) stream feeds
-    * BOTH the frequency aggregate and the join probe side — the exchange is
-    * canonically identical in the two branches, so the explode+hash pipeline
-    * computes once and everything downstream reads the ReusedExchange,
-    * already clustered on sh_h. Fully codegen'd over primitive rows, but
-    * pays a second pass over the exploded stream (the self-join) that the
-    * posting formulation replaces with a local double-explode. */
-  def ngramJaccardJoin(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double = 0.5,
-      shingleLen: Int = 3,
-      maxShingleFreq: Int = 1000
-  ): DataFrame = {
-    val sh = tokenFrame(df, idCol, textCol)
-      .select(col("id"), HashExpressions.shingle_hashes(col("tk"), shingleLen).as("shs"))
-      .select(col("id"), size(col("shs")).as("n_sh"), explode(col("shs")).as("sh_h"))
-      .repartition(col("sh_h"))
-    // Shingle-frequency gate as an aggregate + join rather than a window (no
-    // sort of the full stream). Kept shingles need 2..maxShingleFreq docs:
-    // singletons (the Zipf tail) cannot form a pair, and hotter shingles are
-    // the quadratic-cost guard.
-    val freqs = sh.groupBy(col("sh_h")).agg(count(lit(1)).as("freq"))
-      .filter(col("freq") >= 2 && col("freq") <= maxShingleFreq)
-      .select(col("sh_h"))
-    val filtered = sh.join(freqs, "sh_h")
-      .select(col("id"), col("n_sh"), col("sh_h"))
-    val l = filtered.as("l")
-    val r = filtered.as("r")
-    l.join(r, col("l.sh_h") === col("r.sh_h"))
-      .filter(col("l.id") < col("r.id"))
-      .groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.n_sh").as("n_a"), col("r.n_sh").as("n_b"))
-      .agg(count(lit(1)).as("inter"))
-      .select(col("id_a"), col("id_b"),
-        round(col("inter") / (col("n_a") + col("n_b") - col("inter")).cast("double"), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** Embedding near-duplicate pairs: cosine ≥ threshold, candidates from
-    * random-hyperplane LSH buckets — the same banded-join shape as MinHash,
-    * so no O(N²) scan. Bucket assignment is one native codegen'd array pass
-    * per row ([[graft.functions.HashExpressions.HyperplaneBuckets]]). */
   /** Edit-distance (Levenshtein) near-duplicate pairs — the dedup modality
     * for SHORT strings (titles, names, headers), where token shingling is
     * too coarse. Candidates must (a) share at least one character trigram
@@ -869,8 +808,8 @@ object Dedup {
     * prefixes — "the", "re:", log-line headers), and a trigram present in
     * f·N docs contributes ~(fN)²/2 candidate pairs before the distinct — the
     * quadratic hazard of every inverted-index blocker. `maxTrigramFreq`
-    * gates the index with the same aggregate+join shape as
-    * [[ngramJaccardJoin]]: only trigrams whose df lies in
+    * gates the index with a df aggregate joined back onto the gram stream
+    * (see [[editDistanceBlocked]]): only trigrams whose df lies in
     * [2, maxTrigramFreq] block (singletons cannot form a pair; hotter
     * trigrams are the quadratic guard), so per-trigram candidate volume is
     * bounded by maxTrigramFreq²/2 regardless of corpus size. Pairs whose
@@ -1052,8 +991,9 @@ object Dedup {
     * oracle — no float/hash-family caveat anywhere in the pipeline.
     *
     * Plan shape: one explicit hash shuffle of the exploded (id, g) stream
-    * feeds the df aggregate and both join sides (ReusedExchange, the
-    * [[ngramJaccardJoin]] gate shape); the rarest-k path adds one skinny
+    * feeds the df aggregate and both join sides (ReusedExchange: the
+    * exchange is canonically identical in every branch, so the gram
+    * pipeline computes once); the rarest-k path adds one skinny
     * (id, g, freq) exchange for its per-id window. */
   private[graft] def editDistanceCandidates(
       t: DataFrame,
@@ -1312,6 +1252,10 @@ object Dedup {
       .filter(col("cosine") >= threshold)
   }
 
+  /** Embedding near-duplicate pairs: cosine ≥ threshold, candidates from
+    * random-hyperplane LSH buckets — the same banded-join shape as MinHash,
+    * so no O(N²) scan. Bucket assignment is one native codegen'd array pass
+    * per row ([[graft.functions.HashExpressions.HyperplaneBuckets]]). */
   def embeddingNearDups(
       df: DataFrame,
       idCol: String,

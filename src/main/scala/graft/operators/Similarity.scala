@@ -103,7 +103,7 @@ object Similarity {
     * same O(candidates) shape as the dedup LSH joins, never O(N²) — and the
     * per-left top-k is a window rank over the candidate set (the bounded-
     * heap aggregate alternative measured SLOWER at every corpus scale —
-    * see [[topKStage]]).
+    * see docs/REJECTED.md).
     *
     * Exchange-slimmed like [[graft.operators.Dedup.minhashLsh]]: the bucket
     * join ships (id, table, bucket) only — shipping vectors would multiply
@@ -159,7 +159,7 @@ object Similarity {
       tables: Int = 8
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = scoredCandidates(df, idCol, vecCol, planes, tables, dedupe = false)
+    val scored = scoredCandidates(df, idCol, vecCol, planes, tables)
     val w = Window.partitionBy(col("id_a")).orderBy(col("cosine").desc, col("id_b").asc)
     scored
       .withColumn("dup", coalesce(lag(col("id_b"), 1).over(w) === col("id_b"), lit(false)))
@@ -168,20 +168,18 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** The shared candidate pipeline: LSH buckets → skinny multi-probe bucket
-    * join → (optionally) distinct pairs → vector attach → exact cosine per
-    * pair. `dedupe = true` pays the global distinct — required by consumers
-    * that aggregate the pair stream directly (the bounded-heap
-    * [[topKStage]], where a duplicate would enter the heap twice);
-    * [[knnJoin]] passes `false` and removes duplicates inside its rank sort
-    * instead (see there for the measured rationale). */
+  /** The candidate pipeline of [[knnJoin]]: LSH buckets → skinny
+    * multi-probe bucket join → vector attach → exact cosine per pair.
+    * Cross-table/probe duplicate pairs are NOT removed here; [[knnJoin]]
+    * drops them inside its rank sort (see there for the measured
+    * rationale), so a consumer that aggregates this stream directly must
+    * `distinct()` it first. */
   private[graft] def scoredCandidates(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       planes: Int,
-      tables: Int,
-      dedupe: Boolean = true
+      tables: Int
   ): DataFrame = {
     val base = Stage.ensureWide(df.select(col(idCol).as("id"), col(vecCol).as("v")))
       .withColumn("norm", l2norm(col("v")))
@@ -217,13 +215,12 @@ object Similarity {
     // (id, table, bucket) index (n·tables rows); the 20×-larger probe stream
     // streams through unsorted — a sort-merge join here sorted 40M probe
     // rows (2.7 GB task peak) for no benefit at 500k×64d.
-    val joined = probed.select(col("table"), col("bucket"), col("id").as("id_a"))
+    val candidates = probed.select(col("table"), col("bucket"), col("id").as("id_a"))
       .join(buckets.select(col("table"), col("bucket"), col("id").as("id_b"))
           .hint("SHUFFLE_HASH"),
         Seq("table", "bucket"))
       .filter(col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b"))
-    val candidates = if (dedupe) joined.distinct() else joined
     // Attach strategy: broadcast, with a RAISED gate (2 GB vs
     // Stage.attachSide's 256 MB default). For an exact-cosine k-NN join
     // the attach choice is not a tuning knob but the operator's scale
@@ -252,9 +249,8 @@ object Similarity {
           .as("cosine"))
     if (!largeCorpus) scored
     else {
-      // Size the id_a exchange every consumer needs next ([[knnJoin]]'s
-      // rank window, [[topKStage]]'s groupBy — both require
-      // ClusteredDistribution(id_a), which this hash partitioning
+      // Size the id_a exchange [[knnJoin]]'s rank window needs next (it
+      // requires ClusteredDistribution(id_a), which this hash partitioning
       // satisfies, so NO further exchange is inserted: same exchange
       // count as before, just a derived partition count instead of the
       // session constant). The constant was the 5M×64d disaster: ~10×
@@ -278,43 +274,6 @@ object Similarity {
       scored.repartition(parts, col("id_a"))
     }
   }
-
-  /** Per-left top-k as a bounded-heap AGGREGATE
-    * ([[graft.functions.TopK.collect_top_k]]) — identical output, including
-    * ranks, to the window formulation, MEASURED AND REJECTED as the default
-    * for this operator (docs/corpusbench_local32.jsonl, knn_join vs
-    * knn_join_topk rows): 0.77 vs 0.85 s at 5k vectors, 1.81 vs 2.30 s at
-    * 50k, 20.1 vs 27.1 s at 500k, with shuffle bytes EQUAL. Why the classic
-    * "map-side partial top-k" argument fails here: candidate generation
-    * scatters each left id's ~k·occupancy candidates across partitions, so
-    * a partition rarely holds more than k rows per id and partial combine
-    * compresses nothing — the exchange payload is the same, plus queue-
-    * buffer serialization; and above the 128-group threshold
-    * ObjectHashAggregate falls back to sorting the exploded stream anyway
-    * (the same load-bearing fallback the q23 measurements hit). Plan-node
-    * metrics later located the 500k spill precisely: ~14 GB in the global
-    * pair `distinct()` hash aggregates plus ~11 GB in the rank sorts — not
-    * in the vector attach (a 272 MB broadcast at this scale). [[knnJoin]]
-    * now removes both by skipping the distinct and deduping inside its one
-    * rank sort; this aggregate path keeps the distinct because a duplicate
-    * pair would enter the heap twice. Retained for shapes where one partition
-    * holds many candidates per group (c ≫ k locally) — there the heap
-    * genuinely shrinks the exchange.
-    *
-    * NOT exported as an operator: the global pair `distinct()` its
-    * correctness requires (a duplicate pair would enter the heap twice and
-    * evict a legitimate neighbor) is exactly the ~22 GB-spill stage
-    * [[knnJoin]] eliminated, so the composition lives ONLY in the bench
-    * harness ([[graft.bench.CorpusBench]]'s knn_join_topk row) as the
-    * measured comparison — nobody reaches for it at scale by accident. */
-  private[graft] def topKStage(scored: DataFrame, k: Int): DataFrame =
-    scored.groupBy(col("id_a"))
-      .agg(graft.functions.TopK.collect_top_k(
-        struct(negate(col("cosine")).as("nc"), col("id_b")), k, reverse = true).as("tk"))
-      .select(col("id_a"), posexplode(col("tk")))
-      .select(col("id_a"), col("col.id_b").as("id_b"),
-        negate(col("col.nc")).as("cosine"),
-        (col("pos") + 1).cast("int").as("rank"))
 
   /** The window formulation of the final top-k — the measured default. */
   private def topKStageWindow(scored: DataFrame, k: Int): DataFrame = {

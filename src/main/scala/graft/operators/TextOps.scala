@@ -385,9 +385,9 @@ object TextOps {
     * ~500k documents into a few dozen input splits and each split explodes
     * to hundreds of MB of window rows — the downstream exchange's
     * map-side shuffle writer then overruns its execution-memory share and
-    * spills the stream to disk before it ever crosses the wire (SpanProbe
-    * attributed 5.4 of the 7.3 GB winnow spill at 500k docs to exactly
-    * this, invariant to REDUCE-side partition counts because it happens in
+    * spills the stream to disk before it ever crosses the wire (a per-stage
+    * listener attributed 5.4 of the 7.3 GB winnow spill at 500k docs to
+    * exactly this, invariant to REDUCE-side partition counts because it happens in
     * the map tasks). Costs one cheap exchange of the compressed doc
     * stream; sized with the same expansion math as the window exchange
     * itself. */
@@ -455,7 +455,7 @@ object TextOps {
     *  - A hash-count + SHUFFLE_HASH probe-join gate (no sort anywhere) was
     *    skew-immune but crossed the stream twice and measured slower on
     *    every variant — and left the spill intact, which is what exposed
-    *    the real source: SpanProbe attributed the bulk to the MAP-side
+    *    the real source: per-stage attribution put the bulk on the MAP-side
     *    shuffle writer of the window exchange (too few scan splits, each
     *    exploding hundreds of MB — fixed upstream by
     *    [[widenForExpansion]]).
@@ -592,29 +592,17 @@ object TextOps {
     spark.createDataFrame(merged, outSchema)
   }
 
-  /** Per-doc accounting columns off a merged-interval array frame — shared
-    * tail of [[dupSpanStats]] / [[decontaminateSpans]]: span count and
-    * covered chars read IN-ROW from the array (size + one fold), no
-    * explode, no second aggregation. */
-  // --- stage-attribution surface for the bench.SpanProbe diagnostic ---
+  // --- window-selection subplans, exposed for plan audits (PlanAuditSpec) ---
   private[graft] def probeWinnowWindows(t: DataFrame, winLen: Int, k: Int): DataFrame =
     winnowWindows(t, winLen, k)
   private[graft] def probeModPWindows(t: DataFrame, winLen: Int, stride: Int,
       modP: Int): DataFrame =
     spanWindows(t, winLen, stride, modP)
-  private[graft] def probeWindowFreqs(t: DataFrame, winLen: Int, k: Int): DataFrame =
-    windowFreqs(winnowWindows(t, winLen, k), 2, windowExpansion(winLen, 5, 0, k))
-  private[graft] def probeGatedInstances(t: DataFrame, winLen: Int, k: Int): DataFrame =
-    dupWindowInstances(
-      winnowWindows(t, winLen, k).select(col("id"), col("start"), col("w")),
-      2, windowExpansion(winLen, 5, 0, k))
-  private[graft] def probeMergedArrays(t: DataFrame, winLen: Int, k: Int): DataFrame = {
-    val wins = winnowWindows(t, winLen, k).select(col("id"), col("start"), col("w"))
-    val expand = windowExpansion(winLen, 5, 0, k)
-    mergedSpanArrays(dupWindowInstances(wins, 2, expand), winLen,
-      sizedParts(wins, expand))
-  }
 
+  /** Per-doc accounting columns off a merged-interval array frame — shared
+    * tail of [[dupSpanStats]] / [[decontaminateSpans]]: span count and
+    * covered chars read IN-ROW from the array (size + one fold), no
+    * explode, no second aggregation. */
   private def spanAccounting(t: DataFrame, ivsDf: DataFrame): DataFrame =
     // SHUFFLE_HASH: the merged-array side is RDD-backed (size statistics
     // pinned at defaultSizeInBytes), so the planner would otherwise pick a

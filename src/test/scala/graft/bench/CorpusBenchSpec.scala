@@ -43,4 +43,21 @@ class CorpusBenchSpec extends SparkSpec {
     assert(math.abs(cos(e(0L), e(40L))) < 0.5, "unrelated vectors should be near-orthogonal")
     assert(e(0L).length == 64)
   }
+
+  test("deleteTree removes a nested tree; a missing path is a no-op") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("corpusbench-deltree")
+    val tree = root.resolve("idx")
+    Files.createDirectories(tree.resolve("members/cell=1"))
+    Files.createDirectories(tree.resolve("meta"))
+    Files.writeString(tree.resolve("members/cell=1/part-0.parquet"), "x")
+    Files.writeString(tree.resolve("meta/_SUCCESS"), "")
+    Files.writeString(root.resolve("sibling.txt"), "keep")
+    CorpusBench.deleteTree(tree.toString)
+    assert(!Files.exists(tree), "tree not removed")
+    assert(Files.exists(root.resolve("sibling.txt")), "deleteTree reached outside its root")
+    CorpusBench.deleteTree(tree.toString) // already gone: no-op, no throw
+    CorpusBench.deleteTree(root.toString)
+    assert(!Files.exists(root))
+  }
 }

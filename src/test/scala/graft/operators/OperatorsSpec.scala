@@ -98,11 +98,10 @@ class OperatorsSpec extends SparkSpec {
     } yield (a, b) -> j).toMap
   }
 
-  test("ngramJaccard (join and postings formulations) matches brute-force exact Jaccard") {
+  test("ngramJaccard (postings formulation) matches brute-force exact Jaccard") {
     val expected = bruteJaccard.filter(_._2 >= 0.3)
     Seq[(String, org.apache.spark.sql.DataFrame)](
-      "postings" -> Dedup.ngramJaccard(docs, "doc_id", "text", threshold = 0.3),
-      "join" -> Dedup.ngramJaccardJoin(docs, "doc_id", "text", threshold = 0.3)
+      "postings" -> Dedup.ngramJaccard(docs, "doc_id", "text", threshold = 0.3)
     ).foreach { case (name, q) =>
       val got = q.as[(Long, Long, Double)].collect()
         .map { case (a, b, j) => (a, b) -> j }.toMap
@@ -957,16 +956,22 @@ class OperatorsSpec extends SparkSpec {
     assert(dupWinners.nonEmpty) // no ArrayIndexOutOfBounds on duplicate ids
   }
 
-  test("knnJoin: bounded-heap aggregate top-k ≡ window top-k, row for row") {
+  test("knnJoin: in-sort lag dedup ≡ distinct + window top-k, row for row") {
+    import org.apache.spark.sql.expressions.Window
     val emb = sf(dir, "embeddings")
-    val win = Similarity.knnJoin(emb, "vec_id", "embedding", k = 4)
+    val got = Similarity.knnJoin(emb, "vec_id", "embedding", k = 4)
       .as[(Long, Long, Double, Int)].collect().toSet
-    val agg = Similarity.topKStage(
-        Similarity.scoredCandidates(emb, "vec_id", "embedding",
-          planes = 6, tables = 8), k = 4)
+    // reference: the same candidate stream, duplicates removed by a global
+    // distinct() before a plain row_number() top-k
+    val w = Window.partitionBy($"id_a").orderBy($"cosine".desc, $"id_b".asc)
+    val ref = Similarity.scoredCandidates(emb, "vec_id", "embedding",
+        planes = 6, tables = 8)
+      .distinct()
+      .withColumn("rank", row_number().over(w))
+      .filter($"rank" <= 4)
       .as[(Long, Long, Double, Int)].collect().toSet
-    assert(agg == win,
-      s"missing=${(win -- agg).take(5)} extra=${(agg -- win).take(5)}")
+    assert(got == ref,
+      s"missing=${(ref -- got).take(5)} extra=${(got -- ref).take(5)}")
   }
 
   test("annTopK recall vs brute-force cosine top-k") {

@@ -112,7 +112,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("Window"), s"lag-dedup window missing:\n$p")
   }
 
-  test("every banded self-join reuses its exchange (simhash, ngram, embedding)") {
+  test("every banded self-join reuses its exchange (simhash, embedding)") {
     // other suites cache these tables; a cache hit replaces the scan (and the
     // exchanges above it) with an InMemoryTableScan, hiding what this test
     // audits — drop session caches so the plans are the production shapes
@@ -128,8 +128,6 @@ class PlanAuditSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("label"))
     val ops = Seq(
       "simhashPairs" -> graft.operators.Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 8),
-      "ngramJaccardJoin" -> graft.operators.Dedup.ngramJaccardJoin(docs, "doc_id", "text",
-        threshold = 0.3),
       "embeddingNearDups" -> graft.operators.Dedup.embeddingNearDups(
         emb.unionByName(dup), "vec_id", "embedding", threshold = 0.99))
     ops.foreach { case (name, q) =>
