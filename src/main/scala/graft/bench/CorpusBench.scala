@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ConnectedComponents, Contamination, Dedup, Rank, Similarity, TextOps, ZOrder}
+import graft.operators.{ConnectedComponents, Contamination, Dedup, Rank, Similarity, Stage, TextOps, ZOrder}
 
 /** Corpus-scale benchmark for the LLM-pipeline operators (minhash, ngram
   * Jaccard, dedup clustering, decontamination) at 10×–100× the sf0.1
@@ -1734,14 +1734,10 @@ object CorpusBench {
       // keep the session constant.
       lazy val evKeyed = {
         val evEst = events.queryExecution.analyzed.stats.sizeInBytes
-        if (evEst <= 64L * 1024 * 1024) events
-        else {
-          val parts = math.max(spark.sessionState.conf.numShufflePartitions,
-            (BigDecimal(evEst) * 6 / BigDecimal(24L << 20))
-              .toBigInt.min(BigInt(
-                graft.operators.Stage.maxExchangeParts(events))).toInt)
-          events.repartition(parts, col("user_id"))
-        }
+        if (evEst <= Stage.ExplodeGateBytes) events
+        else events.repartition(
+          Stage.estimateWidth(events, evEst, 6, Stage.StreamBytesPerTask),
+          col("user_id"))
       }
       // the event-stream benchAct group (see stageFor): forcing evKeyed
       // stages the events parquet AND resolves its sized user exchange

@@ -35,16 +35,6 @@ object LoadBench {
     val rows = sys.env.getOrElse("LOAD_ROWS", "10000000").toLong
     val batchRows = sys.env.getOrElse("LOAD_BATCH", "100000").toLong
     val concurrency = sys.env.getOrElse("LOAD_CONCURRENCY", "4").toInt
-    // tasks (= files) per batch. MEASURED AND REJECTED as a default:
-    // splitting each 100k-row batch across cpus/concurrency tasks was
-    // slower at every scale tried under identical conditions (narrow 10M:
-    // 43.9 s at 8 parts vs 32.3 s at 1; wide 1M: 48.9 vs 45.5) and fatter
-    // on disk (narrow 32.4 → 33.4 B/row, wide 331.5 → 343.8) — zstd-6
-    // compression is the bottleneck and already runs `concurrency`-wide
-    // across batches, so extra tasks only add per-task setup/commit
-    // overhead and shrink the compression window. The knob stays for
-    // cluster shapes where one batch genuinely exceeds a single executor.
-    val batchParts = sys.env.get("LOAD_BATCH_PARTS").map(_.toInt).getOrElse(1)
     val outPath = sys.env.getOrElse("LOADBENCH_OUT", "docs/loadbench_local32.jsonl")
     val wh = sys.env.getOrElse("WAREHOUSE", "/tmp/graft_loadbench")
     val keep = sys.env.get("LOAD_KEEP").contains("1")
@@ -109,8 +99,7 @@ object LoadBench {
       // cold start: a leftover checkpoint would turn the load into a no-op
       wipe(dir); wipe(cpDir)
       val plan = LoadPlan(totalRows = rows, batchRows = batchRows, startId = 1,
-        concurrency = concurrency, checkpointDir = cpDir,
-        batchPartitions = if (batchParts > 1) Some(batchParts) else None)
+        concurrency = concurrency, checkpointDir = cpDir)
       val t0 = System.nanoTime()
       val nBatches = Loader.loadTable(spark, cfg, plan, codec, dir, quiet = true)
       val sec = (System.nanoTime() - t0) / 1e9
@@ -118,7 +107,7 @@ object LoadBench {
       require(size.rows == rows, s"loaded ${size.rows} rows, expected $rows")
       val ref = refSec(t, rows)
       record(
-        f"""{"table":"$t","rows":$rows,"batch_rows":$batchRows,"concurrency":$concurrency,"batch_parts":$batchParts,"codec":"${codec.codec}:${codec.level}","sec":$sec%.1f,"data_bytes":${size.data_bytes},"bytes_per_row":${size.bytes_per_row}%.1f,"n_batches":$nBatches,"ref_sec":$ref%.1f,"ratio_vs_ref":${sec / ref}%.3f,"cpus":$cpus}""")
+        f"""{"table":"$t","rows":$rows,"batch_rows":$batchRows,"concurrency":$concurrency,"codec":"${codec.codec}:${codec.level}","sec":$sec%.1f,"data_bytes":${size.data_bytes},"bytes_per_row":${size.bytes_per_row}%.1f,"n_batches":$nBatches,"ref_sec":$ref%.1f,"ratio_vs_ref":${sec / ref}%.3f,"cpus":$cpus}""")
       if (!keep) { wipe(dir); wipe(cpDir) }
     }
     spark.stop()

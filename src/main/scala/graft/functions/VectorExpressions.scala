@@ -22,13 +22,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   */
 object VectorExpressions {
 
-  private def elemKind(dt: DataType): String = dt match {
-    case ArrayType(FloatType, _)  => "float"
-    case ArrayType(DoubleType, _) => "double"
-    case other                    => throw new IllegalArgumentException(
-      s"vector expression expects array<float|double>, got $other")
-  }
-
   /** SUM(a[i]*b[i]) over two numeric arrays, accumulated in double.
     * NULL if either side is NULL; lengths must match (min length used). */
   case class DotProduct(left: Expression, right: Expression)

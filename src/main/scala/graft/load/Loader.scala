@@ -25,9 +25,8 @@ import graft.model._
   * approximate. Batch writes land in per-batch subdirectories (see
   * [[graft.ddl.Tables]]), so `concurrency` Spark jobs can overlap safely.
   * Each job is one task per batch of up to 2^18 rows
-  * ([[graft.gen.Generator.RowsPerPartition]]) unless
-  * `LoadPlan.batchPartitions` splits it, so the load's parallelism is the
-  * number of batches in flight, not the executor slot count.
+  * ([[graft.gen.Generator.RowsPerPartition]]), so the load's parallelism is
+  * the number of batches in flight, not the executor slot count.
   */
 object Loader {
 
@@ -97,8 +96,7 @@ object Loader {
         Future {
           spark.sparkContext.setJobDescription(s"load $table batch=${b.index}")
           val rows = b.end - b.start + 1
-          val df = Generator.generate(spark, cfg, b.start, rows, seed,
-            numPartitions = plan.batchPartitions)
+          val df = Generator.generate(spark, cfg, b.start, rows, seed)
           tableFormat.writeBatch(df, path, b.index, codec, cfg.format, partitioning, sortedBy)
           this.synchronized {
             done += b.index

@@ -76,25 +76,20 @@ final case class TableConfig(
 
 /** Load plan (reference: src/config/load.ts:2-18).
   *
-  * `batchPartitions` is the intra-batch generate/write parallelism: tasks
-  * (and output files) per batch. `None` keeps the generator's size-based
-  * default (one task per ≤2^18-row batch). The reference's Trino executes
-  * each 100k-row INSERT with intra-query parallelism across all worker
-  * threads. Splitting each batch the same way was measured in
-  * [[graft.bench.LoadBench]] and rejected: it was slower and wrote more
-  * bytes per row at every scale tried, so the load bench runs 1 task per
-  * batch and the split stays a knob for batches larger than one executor. */
+  * Each batch is generated and written by one task per ≤2^18 rows (the
+  * generator's size-based default). The reference's Trino executes each
+  * 100k-row INSERT with intra-query parallelism across all worker threads;
+  * splitting each batch the same way was measured and rejected (slower and
+  * more bytes per row at every scale tried — see docs/REJECTED.md). */
 final case class LoadPlan(
     startId: Long = 1L,
     totalRows: Long = 1000000L,
     batchRows: Long = 100000L,
     concurrency: Int = 4,
-    createBaseSchema: Boolean = true,
     compactAfterLoad: Boolean = false,
     checkpointDir: String = ".checkpoints",
     includeManifestBytes: Boolean = false,
-    resultsCsv: String = "results_sizes.csv",
-    batchPartitions: Option[Int] = None
+    resultsCsv: String = "results_sizes.csv"
 )
 
 /** One (codec, level) compression variant (reference: src/config/codecs.ts:3-12). */

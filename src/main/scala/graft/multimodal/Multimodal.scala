@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Stage
+
 /** Multimodal (image/audio/video) column handling for training-data
   * pipelines: media as opaque `binary` columns with typed metadata, processed
   * by batch-shaped per-partition functions.
@@ -202,29 +204,26 @@ object Multimodal {
     require(bands > 1 && 64 % bands == 0, "bands must divide 64 (and be > 1)")
     val width = 64 / bands
     val mask = (1L << width) - 1
-    val spark = hashes.sparkSession
-    val floor = spark.sessionState.conf.numShufflePartitions
     // row-count estimate for the band exchange: explicit hint, else the
     // analyzed estimate over ~24 B/row for stats-backed plans, else one
     // count job (decode-derived frames are priced by their media source's
     // scaled estimate — overestimates only widen, which is benign)
     val n =
       if (nRows > 0) nRows
-      else if (graft.operators.Stage.statsKnown(hashes))
+      else if (Stage.statsKnown(hashes))
         // ~12 B/row divisor: an (id, hash) row is 16 B raw but parquet
         // stats report compressed bytes — overestimating n only widens
         // the exchange, which is benign; undersizing builds is not
         (hashes.queryExecution.analyzed.stats.sizeInBytes / 12).toLong
       else hashes.count()
-    val parts = math.max(floor,
-      math.min(graft.operators.Stage.maxExchangeParts(hashes),
-        n * bands * 96L / (16L << 20)).toInt)
+    val parts = Stage.width(hashes, n * bands * 96L / Stage.BuildBytesPerTask)
     val banded0 = hashes.select(col("id"), col("hash"),
       explode(sequence(lit(0), lit(bands - 1))).as("band"))
       .withColumn("bits",
         expr(s"shiftrightunsigned(hash, band * $width) & $mask"))
     val banded =
-      if (parts > floor) banded0.repartition(parts, col("band"), col("bits"))
+      if (parts > hashes.sparkSession.sessionState.conf.numShufflePartitions)
+        banded0.repartition(parts, col("band"), col("bits"))
       else banded0
     banded.as("l")
       .join(banded.as("r").hint("SHUFFLE_HASH"),
@@ -599,7 +598,7 @@ object Multimodal {
     val spark = hashes.sparkSession
     val floor = spark.sparkContext.defaultParallelism
     val est =
-      if (graft.operators.Stage.statsKnown(hashes))
+      if (Stage.statsKnown(hashes))
         (hashes.queryExecution.analyzed.stats.sizeInBytes / 12).toLong
       else hashes.count()
     val parts = math.max(math.min(floor, bands * SigBuckets),
@@ -829,22 +828,16 @@ object Multimodal {
     val prunedLive = sigTombstonesDf(spark, path).fold(pruned)(ts =>
       pruned.join(broadcast(ts.select(col("id")).distinct()),
         Seq("id"), "left_anti"))
-    // broadcast gate, the KnnIndex probeGate rule: |delta|·bands skinny
-    // rows at ~48 B × 2 in-memory expansion vs min(2 GB, maxResultSize)
+    // broadcast gate ([[Stage.driverCollectGate]]): |delta|·bands skinny
+    // rows at ~48 B × 2 in-memory expansion
     val nDelta = math.max(1L, delta.count())
-    val mrs = spark.sparkContext.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    val gate = if (mrs <= 0) 2L << 30 else math.min(2L << 30, mrs)
     val joined =
-      if (nDelta * bands * 48L * 2 <= gate)
+      if (nDelta * bands * 48L * 2 <= Stage.driverCollectGate(spark))
         prunedLive.join(broadcast(banded), Seq("band", "bits"))
       else {
-        val floor = spark.sessionState.conf.numShufflePartitions
         val memBytes = pruned.queryExecution.analyzed.stats.sizeInBytes
-        val want = (memBytes / BigInt(24L << 20))
-          .max(BigInt(nDelta * bands * 96L) / BigInt(16L << 20))
-        val parts = math.max(floor, want.min(BigInt(
-          graft.operators.Stage.maxExchangeParts(pruned))).toInt)
+        val parts = Stage.width(pruned, (memBytes / Stage.StreamBytesPerTask)
+          .max(BigInt(nDelta * bands * 96L) / Stage.BuildBytesPerTask))
         prunedLive.repartition(parts, col("band"), col("bits"))
           .join(banded.repartition(parts, col("band"), col("bits"))
             .hint("SHUFFLE_HASH"), Seq("band", "bits"))

@@ -96,8 +96,7 @@ object ConnectedComponents {
     val m = sym0.count()
     val floor = edges.sparkSession.sessionState.conf.numShufflePartitions
     // ~48 B of join/sort state per (src, dst) edge row, ~32 MB per task
-    val parts = math.max(floor,
-      math.min(Stage.maxExchangeParts(edges), m * 48L / (32L << 20)).toInt)
+    val parts = Stage.width(edges, m * 48L / (32L << 20))
     val sym =
       if (parts > floor) {
         val rekeyed = sym0.repartition(parts, col("dst")).localCheckpoint(true)

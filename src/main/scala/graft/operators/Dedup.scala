@@ -101,7 +101,7 @@ object Dedup {
     * (including every driver SF) keep the classic plan bit-for-bit. */
   def exactCounts(df: DataFrame, idCol: String, keyCols: Seq[String]): DataFrame = {
     val minBytes = df.sparkSession.conf
-      .get("spark.graft.exactSlim.minBytes", (64L * 1024 * 1024).toString).toLong
+      .get("spark.graft.exactSlim.minBytes", Stage.ExplodeGateBytes.toString).toLong
     val large = !df.isStreaming && Stage.statsKnown(df) &&
       df.queryExecution.analyzed.stats.sizeInBytes > minBytes
     lazy val classic = exact(df, idCol, keyCols).select(col("keep_id"), col("n_copies"))
@@ -195,17 +195,27 @@ object Dedup {
     * nearly free; on a network-shuffle cluster the 7× byte reduction is
     * the term that scales.
     *
-    * LAZINESS CAVEAT (scale shape only): above the 256 MB signature-size
-    * threshold, CONSTRUCTING this DataFrame runs one eager Spark job —
-    * the exact pre-dedup pair volume Σ_bucket C(df, 2) that sizes the
-    * pair exchange (Catalyst's size-only estimator prices a self-join
-    * quadratically, so the plan cannot be sized lazily). To keep that
-    * job from paying the scan→tokenize→signature pipeline twice, `sig`
-    * is persisted (MEMORY_AND_DISK) before the volume job and the
-    * returned plan reads the same cached frame; the cache entry lives in
-    * the session CacheManager (keyed by plan — repeated calls over the
-    * same input reuse it) until evicted or `spark.catalog.clearCache()`.
-    * Below the threshold construction is fully lazy and nothing caches.
+    * LAZINESS CAVEAT: CONSTRUCTING this DataFrame runs one eager Spark job
+    * on either side of the 256 MB signature-size threshold.
+    *
+    * Above the threshold the job counts the exact pre-dedup pair volume
+    * Σ_bucket C(df, 2) that sizes the pair exchange (Catalyst's size-only
+    * estimator prices a self-join quadratically, so the plan cannot be
+    * sized lazily). To keep that job from paying the
+    * scan→tokenize→signature pipeline twice, `sig` is persisted
+    * (MEMORY_AND_DISK) before the volume job and the returned plan reads
+    * the same cached frame; the cache entry lives in the session
+    * CacheManager (keyed by plan — repeated calls over the same input
+    * reuse it) until evicted or `spark.catalog.clearCache()`.
+    *
+    * Below the threshold the job is an eager `localCheckpoint()` of the
+    * signature frame (batch inputs only; a streaming input stays lazy).
+    * Three consequences: the returned frame is a SNAPSHOT of the input as
+    * it was at construction — later changes to the input's files are not
+    * seen; the checkpoint is NOT fault-tolerant — its blocks live on the
+    * executors with no lineage to recompute them, so losing one fails the
+    * query; and the blocks are freed only when the returned frame is
+    * garbage-collected (the ContextCleaner), not when the query finishes.
     *
     * Returns (id_a, id_b, est_jaccard) with id_a < id_b.
     */
@@ -232,7 +242,7 @@ object Dedup {
     // 5k-doc bench corpus because they defeat the broadcast plan); above
     // it every exchange is sized.
     val sigEst = sig0.queryExecution.optimizedPlan.stats.sizeInBytes
-    val smallCorpus = sigEst <= 256L * 1024 * 1024
+    val smallCorpus = sigEst <= Stage.BroadcastPlanBytes
     // Small path: materialize the signature frame ONCE per invocation
     // (eager localCheckpoint). The broadcast plan references the signature
     // pipeline from FOUR independent subtrees — the band join's shuffled
@@ -297,9 +307,7 @@ object Dedup {
           .agg(count(lit(1)).as("bdf"))
           .agg(coalesce(sum(expr("bdf * (bdf - 1) div 2")), lit(0L)))
           .head().getLong(0)
-        Seq(df.sparkSession.sessionState.conf.numShufflePartitions,
-          math.min(Stage.maxExchangeParts(df), volume / (1L << 20)).toInt,
-          Stage.sizedBuildParts(sig)).max
+        math.max(Stage.width(df, volume / (1L << 20)), Stage.sizedBuildParts(sig))
       }
     val candidates =
       if (smallCorpus) rawPairs.distinct()
@@ -692,8 +700,7 @@ object Dedup {
     // task at 5M docs, just over the ~75 MB/task execution-memory share at
     // 32 concurrent tasks on the 8 GB fork heap (one spill generation
     // each, ~140 GB of managed-spill accounting). Over-estimating is
-    // benign (smaller, more numerous tasks); the floor keeps small frames
-    // at session parallelism.
+    // benign (smaller, more numerous tasks).
     //
     // With this sizing the REDUCE side is clean (per-stage probe at 5M:
     // ~50 MB of reduce spill across 1084 tasks). The MAP-side writer term —
@@ -713,13 +720,8 @@ object Dedup {
     // measured 7.5 GB of sort spill on the small path — while the headline
     // tables (≤ 1 MB) stay far below any plausible gate. The large shape's
     // only fixed cost is one exchange of the compact raw stream.
-    val large = textEst > 64L * 1024 * 1024
-    val shParts = {
-      val floor = df.sparkSession.sessionState.conf.numShufflePartitions
-      val want = (BigDecimal(textEst) * 24 / BigDecimal(48L << 20))
-        .toBigInt.min(BigInt(Stage.maxExchangeParts(df))).toInt
-      math.max(floor, want)
-    }
+    val large = textEst > Stage.ExplodeGateBytes
+    val shParts = Stage.estimateWidth(df, textEst, 24, Stage.SortBytesPerTask)
     // Large shape: exchange the COMPACT 1× raw (id, text) stream to the
     // sized width BEFORE tokenize/shingle/explode, so the 24× exploded
     // stream is BORN in shParts map tasks. Without this the explode runs
@@ -1060,11 +1062,9 @@ object Dedup {
       throw SaturationBudgetExceeded(volume, budget, sat.windows,
         sat.alphabet, sat.gramSpace, sat.meanDf, exactVolume = true)
     }
-    val floor = t.sparkSession.sessionState.conf.numShufflePartitions
     // ~48 bytes of sort state per pair row (UnsafeRow + sorter pointer),
     // ~48 MB in-memory per task
-    val parts = math.max(floor,
-      math.min(Stage.maxExchangeParts(blocked), volume / (1L << 20)).toInt)
+    val parts = Stage.width(t, volume / (1L << 20))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("id_a")).orderBy(col("id_b"))
     blocked.as("a")
@@ -1129,12 +1129,11 @@ object Dedup {
     * saturated (df ≥ 2 passes ~everything) and vol/2 in the sparse regime
     * (the historical figure, measured safe through 5M titles). */
   private[graft] def priceGramParts(vol: Long, saturated: Boolean, floor: Int,
-      maxParts: Long = 65536L): Int = {
+      maxParts: Long): Int = {
     val gatedEst = if (saturated) vol else vol / 2
-    val sortParts = vol * 40L / (48L << 20)
+    val sortParts = vol * 40L / Stage.SortBytesPerTask
     val buildParts = gatedEst * 48L / (12L << 20)
-    math.max(floor,
-      math.min(maxParts, math.max(sortParts, buildParts)).toInt)
+    Stage.clamp(floor, maxParts, math.max(sortParts, buildParts))
   }
 
   private[graft] def gramExchangeParts(t: DataFrame, gramLen: Int): Int =
@@ -1148,7 +1147,7 @@ object Dedup {
   private[graft] def gramPlan(t: DataFrame,
       gramLen: Int): (Int, Option[GramSaturation]) = {
     val est = t.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= 64L * 1024 * 1024) (0, None)
+    if (est <= Stage.ExplodeGateBytes) (0, None)
     else {
       val vol = t.agg(coalesce(sum(greatest(length(col("s")) - (gramLen - 1),
         lit(0)).cast("long")), lit(0L))).head().getLong(0)

@@ -582,9 +582,7 @@ object KnnIndex {
   private def writeMembersTo(base: DataFrame, meta: Meta, dirBytes: Long,
       dest: String, mode: SaveMode,
       withCnt: Boolean = true): Unit = {
-    val floor = base.sparkSession.sessionState.conf.numShufflePartitions
-    val dirParts = math.max(floor,
-      math.min(Stage.maxExchangeParts(base), dirBytes / (16L << 20)).toInt)
+    val dirParts = Stage.width(base, dirBytes / Stage.BuildBytesPerTask)
     val codes = array((0 until meta.m).map(s =>
       graft.functions.VectorExpressions.nearest_centroid(
         slice(col("v"), s * meta.subDim + 1, meta.subDim), meta.codebooks(s))): _*)
@@ -867,15 +865,6 @@ object KnnIndex {
     Meta(nLists, dims, m, ks, subDim, cb)
   }
 
-  /** The broadcast gate both delta joins share: the 2 GB executor-fit want
-    * CAPPED at spark.driver.maxResultSize (the vectorBroadcastGate rule —
-    * the probe collect passes through the driver). */
-  private def probeGate(spark: SparkSession): Long = {
-    val mrs = spark.sparkContext.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    if (mrs <= 0) 2L << 30 else math.min(2L << 30, mrs)
-  }
-
   /** Estimated broadcast payload of the exploded probe stream —
     * nDelta·nprobe·fanout·cells rows of (id, vector, cell[, label]) at 2×
     * in-memory expansion; `rowOver` is the per-row non-vector overhead
@@ -910,7 +899,8 @@ object KnnIndex {
       nprobe: Int = 4, cellsPerSuper: Int = 1, payload: Boolean = false): String = {
     val meta = metaFor(spark, path)
     val over = probeRowOver(spark, path, payload)
-    if (probeBytesFor(meta, nDelta, nprobe, cellsPerSuper, over) <= probeGate(spark))
+    if (probeBytesFor(meta, nDelta, nprobe, cellsPerSuper, over) <=
+        Stage.driverCollectGate(spark))
       "broadcast_probes"
     else "shuffled_probes"
   }
@@ -1028,9 +1018,9 @@ object KnnIndex {
       if (probedBuckets.length < Buckets)
         members.filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*))
       else members
-    // Probe broadcast gate — the shared probeGate/probeBytesFor arithmetic
+    // Probe broadcast gate — the shared Stage.driverCollectGate/probeBytesFor arithmetic
     // (deltaProbeRoute reports this exact decision to callers)
-    val gate = probeGate(spark)
+    val gate = Stage.driverCollectGate(spark)
     val probeBytes = probeBytesFor(meta, nDelta, nprobe, cellsPerSuper,
       probeRowOver(spark, path, payload = false))
     val joined =
@@ -1039,12 +1029,9 @@ object KnnIndex {
         // sized cell exchange: members priced at the 24 MB/task stream-
         // writer discipline (file stats — the members are source-backed),
         // probes at the 16 MB/task unspillable-build discipline
-        val floor = spark.sessionState.conf.numShufflePartitions
         val memBytes = pruned.queryExecution.analyzed.stats.sizeInBytes
-        val want = (memBytes / BigInt(24L << 20))
-          .max(BigInt(probeBytes) / BigInt(16L << 20))
-        val parts = math.max(floor,
-          want.min(BigInt(Stage.maxExchangeParts(base))).toInt)
+        val parts = Stage.width(base, (memBytes / Stage.StreamBytesPerTask)
+          .max(BigInt(probeBytes) / Stage.BuildBytesPerTask))
         pruned.repartition(parts, col("cell"))
           .join(probes.repartition(parts, col("cell")).hint("SHUFFLE_HASH"),
             Seq("cell"))
@@ -1065,9 +1052,8 @@ object KnnIndex {
             shortlist, col("vmem"), rescoreK).as("tk"))
     // rank merge of the per-(cell, batch-row) winner arrays — the delta's
     // only exchange on the broadcast path, ∝ |delta| winner structs
-    val floor = spark.sessionState.conf.numShufflePartitions
-    val rankParts = math.max(floor, math.min(Stage.maxExchangeParts(base),
-      nDelta * nprobe * fanout * cellsPerSuper * rescoreK * 80L / (48L << 20)).toInt)
+    val rankParts = Stage.width(base,
+      nDelta * nprobe * fanout * cellsPerSuper * rescoreK * 80L / Stage.SortBytesPerTask)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("id_a")).orderBy(col("cosine").desc, col("id_b").asc)
     val flatCols = Seq(col("id_a"), col("nb.id").as("id_b")) ++
@@ -1187,19 +1173,16 @@ object KnnIndex {
         members.filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*))
       else members
     // same probe broadcast gate as knnJoinDelta, the label's probe-row
-    // width priced in (shared probeGate/probeBytesFor arithmetic)
-    val gate = probeGate(spark)
+    // width priced in (shared Stage.driverCollectGate/probeBytesFor arithmetic)
+    val gate = Stage.driverCollectGate(spark)
     val probeBytes = probeBytesFor(meta, nDelta, nprobe, cellsPerSuper,
       probeRowOver(spark, path, payload = true))
     val joined =
       if (probeBytes <= gate) pruned.join(broadcast(probes), Seq("cell"))
       else {
-        val floor = spark.sessionState.conf.numShufflePartitions
         val memBytes = pruned.queryExecution.analyzed.stats.sizeInBytes
-        val want = (memBytes / BigInt(24L << 20))
-          .max(BigInt(probeBytes) / BigInt(16L << 20))
-        val parts = math.max(floor,
-          want.min(BigInt(Stage.maxExchangeParts(base))).toInt)
+        val parts = Stage.width(base, (memBytes / Stage.StreamBytesPerTask)
+          .max(BigInt(probeBytes) / Stage.BuildBytesPerTask))
         pruned.repartition(parts, col("cell"))
           .join(probes.repartition(parts, col("cell")).hint("SHUFFLE_HASH"),
             Seq("cell"))
@@ -1210,9 +1193,8 @@ object KnnIndex {
           col("lbl_a"), col("v_a"), col("mem"), cand, meta.codebooks,
           meta.subDim),
         col("vmem"), rescoreK).as("tk"))
-    val floor = spark.sessionState.conf.numShufflePartitions
-    val rankParts = math.max(floor, math.min(Stage.maxExchangeParts(base),
-      nDelta * nprobe * fanout * cellsPerSuper * rescoreK * 100L / (48L << 20)).toInt)
+    val rankParts = Stage.width(base,
+      nDelta * nprobe * fanout * cellsPerSuper * rescoreK * 100L / Stage.SortBytesPerTask)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("id_a")).orderBy(col("cosine").desc, col("id_b").asc)
     val flat = perRow

@@ -32,31 +32,19 @@ import org.apache.spark.sql.types.LongType
 object Rank {
 
   /** Partition count for the range exchange: the explicit override wins;
-    * otherwise derive from Catalyst's no-action size estimate (×2 in-memory
-    * expansion, ~48 MB of sort state per task, floored at the session
-    * parallelism, capped at 65536). The session default alone is a
+    * otherwise [[Stage.estimateWidth]] with a ×2 in-memory expansion at
+    * ~48 MB of sort state per task. The session default alone is a
     * constant while inputs grow — at 5M full-text documents the 32-way
     * range sort measured 4–5 GB of spill per rank call; size-derived
     * counts keep per-task sort state flat at any corpus size. RDD-backed
     * inputs report `defaultSizeInBytes` (effectively infinite) and fall
-    * back to the session floor rather than the cap.
-    *
-    * The floor is `spark.sql.shuffle.partitions` — the same session
-    * constant every other sized exchange in the engine floors at
-    * (Stage.sizedBuildParts, TextOps.sizedParts); flooring this one at
-    * `defaultParallelism` instead would silently diverge on clusters
-    * where the two settings differ. */
-  private def sizedParts(df: DataFrame, numPartitions: Int,
-      bytesPerPart: Long = 48L << 20): Int =
+    * back to the session floor rather than the cap. */
+  private def sizedParts(df: DataFrame, numPartitions: Int): Int =
     if (numPartitions > 0) numPartitions
-    else {
-      val floor = df.sparkSession.sessionState.conf.numShufflePartitions
-      val stats = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (stats >= BigInt(Long.MaxValue) / 4) floor
-      else
-        math.max(floor, (BigDecimal(stats) * 2 / BigDecimal(bytesPerPart))
-          .toBigInt.min(BigInt(Stage.maxExchangeParts(df))).toInt)
-    }
+    else if (df.queryExecution.optimizedPlan.stats.sizeInBytes >=
+        BigInt(Long.MaxValue) / 4)
+      df.sparkSession.sessionState.conf.numShufflePartitions
+    else Stage.estimateWidth(df, 2, Stage.SortBytesPerTask)
 
   /** Append a 1-based global `row_number`-style rank column ordered by
     * `sortCols`. Exact at any scale; one range shuffle. `numPartitions`

@@ -25,24 +25,16 @@ object Similarity {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** The raised 2 GB broadcast gate the vector attaches use, CAPPED at the
-    * session's `spark.driver.maxResultSize` (0 = unlimited): the broadcast
-    * collect passes the vector table through the driver, so a gate above
-    * the collect ceiling turns a completable SHUFFLE_HASH plan into a
-    * hard driver abort on stock configs (maxResultSize defaults to 1 GB).
-    * Below the cap the attach falls back to SHUFFLE_HASH with a log note
-    * instead of failing — sessions that want the broadcast path at 5M×64d
-    * scale must raise maxResultSize (the bench sessions set 4 g). */
+  /** The raised broadcast gate the vector attaches use
+    * ([[Stage.driverCollectGate]]: the broadcast collect passes the vector
+    * table through the driver). Below the 2 GB want the attach falls back
+    * to SHUFFLE_HASH with a log note instead of failing. */
   private def vectorBroadcastGate(df: DataFrame): Long = {
-    val want = 2L << 30
-    val mrs = df.sparkSession.sparkContext.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    if (mrs <= 0 || mrs >= want) want
-    else {
+    val gate = Stage.driverCollectGate(df.sparkSession)
+    if (gate < Stage.DriverCollectBytes)
       log.info(s"vector broadcast gate capped at spark.driver.maxResultSize=" +
-        s"$mrs bytes (raise it to 2g+ to keep large vector attaches broadcast)")
-      mrs
-    }
+        s"$gate bytes (raise it to 2g+ to keep large vector attaches broadcast)")
+    gate
   }
 
   /** Hyperplane count sized so LSH bucket occupancy stays O(1): with
@@ -199,7 +191,7 @@ object Similarity {
     // whole optimizer batch list per call — pure driver latency on top of
     // the main query's own optimization, visible at sf0.1 scale.
     val baseEst = base.queryExecution.analyzed.stats.sizeInBytes
-    val largeCorpus = baseEst > 256L * 1024 * 1024
+    val largeCorpus = baseEst > Stage.BroadcastPlanBytes
     val rawBuckets = base.select(col("id"),
       posexplode(hyperplaneBuckets(col("v"), planes, tables)))
       .withColumnRenamed("pos", "table").withColumnRenamed("col", "bucket")
@@ -267,10 +259,8 @@ object Similarity {
       val volume = dfb
         .agg(coalesce(sum(col("n") * col("n")), lit(0L)).cast("double"))
         .head().getDouble(0) * (planes + 1)
-      val floor = df.sparkSession.sessionState.conf.numShufflePartitions
       // ~80 B of sort state per (id_a, id_b, cosine) row, ~48 MB per task
-      val parts = math.max(floor,
-        math.min(Stage.maxExchangeParts(df), (volume * 80 / (48L << 20)).toLong).toInt)
+      val parts = Stage.width(df, (volume * 80 / Stage.SortBytesPerTask).toLong)
       scored.repartition(parts, col("id_a"))
     }
   }
@@ -569,7 +559,6 @@ object Similarity {
         slice(col("v"), s * pq.subDim + 1, pq.subDim), pq.codebooks(s).centroids)): _*)
     val assignCell = graft.functions.VectorExpressions
       .portable_ivf_assign(col("v"), lists, dims)
-    val floor = spark.sessionState.conf.numShufflePartitions
     // The cell-join partition count is sized from BOTH of the stage's
     // memory consumers, each known exactly from n (no Generate blinding
     // the estimator):
@@ -598,14 +587,8 @@ object Similarity {
     // shortlist depth — price the exchange at that bound
     val outPerCell = if (balancedPerLabel) cand.toLong else k.toLong
     val outBytes = n * nprobe * fanout * cellsPerSuper * outPerCell * (32L + lblW)
-    // the 65536-class caps below are conf-tied (Stage.maxExchangeParts):
-    // at true 100 TB scale the winner volume ÷ 65536 exceeds the
-    // 16–48 MB/task discipline these sizings target, and the deployment
-    // must raise spark.graft.maxExchangeParts rather than silently hand
-    // each task a larger share
-    val maxParts = Stage.maxExchangeParts(df)
-    val dirParts = math.max(floor, math.min(maxParts,
-      math.max(dirBytes / (16L << 20), outBytes / (24L << 20))).toInt)
+    val dirParts = Stage.width(df, math.max(dirBytes / Stage.BuildBytesPerTask,
+      outBytes / Stage.StreamBytesPerTask))
     // Two directories, separately exchanged: column pruning splits the
     // shared member subtree anyway (each branch keeps only its payload),
     // so the codes exchange ships ~40 B/member and only the vector
@@ -655,9 +638,10 @@ object Similarity {
     val probeParts =
       if (!statsKnown) 0
       else (BigDecimal(rawBytes) * nprobe * fanout * cellsPerSuper /
-        BigDecimal(24L << 20)).toBigInt.min(BigInt(maxParts)).toInt
+        BigDecimal(Stage.StreamBytesPerTask)).toBigInt
+        .min(BigInt(Stage.maxExchangeParts(df))).toInt
     val probeIn =
-      if (statsKnown && rawBytes > 256L * 1024 * 1024 &&
+      if (statsKnown && rawBytes > Stage.BroadcastPlanBytes &&
           probeParts > spark.sparkContext.defaultParallelism)
         base.repartition(probeParts, col("id"))
       else base
@@ -727,9 +711,8 @@ object Similarity {
     // The reduce-side explode feeds the rank window in place (Generate
     // preserves the id_a hash partitioning), measured spill-free at 635
     // parts.
-    val rankParts = math.max(floor,
-      math.min(maxParts,
-        n * nprobe * fanout * cellsPerSuper * outPerCell * (80L + lblW) / (48L << 20)).toInt)
+    val rankParts = Stage.width(df,
+      n * nprobe * fanout * cellsPerSuper * outPerCell * (80L + lblW) / Stage.SortBytesPerTask)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("id_a")).orderBy(col("cosine").desc, col("id_b").asc)
     labelCol match {
@@ -915,9 +898,8 @@ object Similarity {
     val ranked =
       if (broadcastable) joined
       else {
-        val floor = df.sparkSession.sessionState.conf.numShufflePartitions
-        val winParts = math.max(floor, math.min(Stage.maxExchangeParts(df),
-          nRows * oversample * k * 64L / (48L << 20)).toInt)
+        val winParts = Stage.width(df,
+          nRows * oversample * k * 64L / Stage.SortBytesPerTask)
         joined.repartition(winParts, col("id_a"))
       }
     ranked.withColumn("rank", row_number().over(w))

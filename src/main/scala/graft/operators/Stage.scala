@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Typed failure for an explicit `dims` argument that disagrees with the
   * data: a wrong width silently DEGRADES the vector family (truncated or
@@ -15,20 +15,100 @@ final case class DimsMismatchException(explicitDims: Int, sampledDims: Int)
         s"$sampledDims (first sampled row) — drop the dims argument to derive " +
         "it, or pass the true width")
 
-/** Partitioning helpers shared by the corpus operators. */
+/** Partitioning helpers shared by the corpus operators, and the one rule
+  * that sizes every exchange whose width the engine derives itself.
+  *
+  * **Width** = `max(floor, min(cap, want))` ([[clamp]]):
+  *  - floor: `spark.sql.shuffle.partitions`, so small inputs keep the
+  *    session width;
+  *  - cap: `spark.graft.maxExchangeParts` ([[maxExchangeParts]]);
+  *  - want: the site's priced in-memory bytes ÷ a per-task target —
+  *    [[SortBytesPerTask]] (48 MB of spill-capable sort state),
+  *    [[StreamBytesPerTask]] (24 MB of shuffle-writer stream) or
+  *    [[BuildBytesPerTask]] (16 MB of unspillable hash build). A site with
+  *    its own measured target names it next to its reason.
+  *
+  * [[width]] applies the clamp with a frame's session floor and cap;
+  * [[estimateWidth]] prices `want` from a Catalyst estimate × the site's
+  * expansion. Each call site keeps only its pricing (rows × bytes/row, or
+  * which estimate it reads) and the measurement behind it.
+  *
+  * **Gates** shared across operators:
+  *  - [[BroadcastPlanBytes]] (256 MB): the [[attachSide]] broadcast
+  *    threshold, and the small/large plan switch of the operators that key
+  *    their shape on it;
+  *  - [[ExplodeGateBytes]] (64 MB): the switch for plans whose explode
+  *    multiplies a compressed estimate ~6–24× before the first exchange;
+  *  - [[driverCollectGate]]: 2 GB capped at `spark.driver.maxResultSize`,
+  *    for broadcasts whose collect passes through the driver. */
 object Stage {
 
-  /** The cap every sized exchange in this codebase applies to its derived
-    * partition count — conf-tied (`spark.graft.maxExchangeParts`, default
-    * 65536) rather than a literal, because the cap is CLUSTER arithmetic:
-    * the sizing discipline targets ≤ ~16–48 MB per task, so once a stage's
-    * priced volume exceeds cap × target the per-task share grows past the
-    * discipline silently. 65536 is unreachable headroom at the local
-    * protocol (48 MB × 65536 ≈ 3 TB of priced volume per stage), but a
-    * true 100 TB deployment whose winner volume exceeds that must RAISE
-    * the conf — this knob is how, without a rebuild. */
+  /** Per-task target for spill-capable sort and aggregate state. */
+  val SortBytesPerTask: Long = 48L << 20
+  /** Per-task target for a stream through a shuffle writer's pages. */
+  val StreamBytesPerTask: Long = 24L << 20
+  /** Per-task target for an unspillable SHUFFLE_HASH build ([[sizedBuild]]). */
+  val BuildBytesPerTask: Long = 16L << 20
+  /** Broadcast-plan threshold on a Catalyst size estimate. */
+  val BroadcastPlanBytes: Long = 256L << 20
+  /** Large-shape threshold for plans that explode their input. */
+  val ExplodeGateBytes: Long = 64L << 20
+  /** Executor-fit want of a driver-collected broadcast ([[driverCollectGate]]). */
+  val DriverCollectBytes: Long = 2L << 30
+
+  /** The cap of the sizing rule — conf-tied (`spark.graft.maxExchangeParts`,
+    * default 65536) rather than a literal, because the cap is CLUSTER
+    * arithmetic: once a stage's priced volume exceeds cap × target the
+    * per-task share grows past the target silently. 65536 is unreachable
+    * headroom at the local protocol (48 MB × 65536 ≈ 3 TB of priced volume
+    * per stage), but a true 100 TB deployment whose winner volume exceeds
+    * that must RAISE the conf — this knob is how, without a rebuild. */
   def maxExchangeParts(df: DataFrame): Long =
     df.sparkSession.conf.get("spark.graft.maxExchangeParts", "65536").toLong
+
+  /** The sizing rule itself: `want` capped at `cap`, floored at `floor`.
+    * `want` is a BigInt so estimates past Long range price without
+    * overflow. `cap` must fit an Int: a larger one wraps in the Int
+    * conversion and yields the floor. */
+  def clamp(floor: Int, cap: Long, want: BigInt): Int =
+    math.max(floor, want.min(BigInt(cap)).toInt)
+
+  /** [[clamp]] with `df`'s session floor and conf cap. */
+  def width(df: DataFrame, want: BigInt): Int =
+    clamp(df.sparkSession.sessionState.conf.numShufflePartitions,
+      maxExchangeParts(df), want)
+
+  /** [[width]] priced from Catalyst's no-action optimized-plan estimate of
+    * `df`: estimate × `expand` (what the stats cannot see — in-memory
+    * expansion of compressed bytes, an explode's row multiplication) ÷
+    * `bytesPerTask`. */
+  def estimateWidth(df: DataFrame, expand: BigDecimal, bytesPerTask: Long): Int =
+    estimateWidth(df, df.queryExecution.optimizedPlan.stats.sizeInBytes,
+      expand, bytesPerTask)
+
+  /** [[estimateWidth]] from an estimate the caller already read — e.g. the
+    * analyzed plan's, which also fed the caller's gate. */
+  def estimateWidth(df: DataFrame, est: BigInt, expand: BigDecimal,
+      bytesPerTask: Long): Int =
+    width(df, (BigDecimal(est) * expand / BigDecimal(bytesPerTask)).toBigInt)
+
+  /** Broadcast gate for a build the driver collects: [[DriverCollectBytes]]
+    * (what fits an executor), CAPPED at the session's
+    * `spark.driver.maxResultSize` (0 = unlimited). A gate above the collect
+    * ceiling would turn a completable SHUFFLE_HASH plan into a hard driver
+    * abort on stock configs (maxResultSize defaults to 1 GB); below the
+    * cap the caller falls back to its shuffled plan. Sessions that want
+    * the broadcast path at 5M×64d scale must raise maxResultSize (the
+    * bench sessions set 4 g). */
+  def driverCollectGate(spark: SparkSession): Long =
+    driverCollectGate(spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g"))
+
+  /** [[driverCollectGate]] for a given `spark.driver.maxResultSize` in
+    * bytes — the pure rule, since a running session's value is fixed. */
+  def driverCollectGate(maxResultSize: Long): Long =
+    if (maxResultSize <= 0) DriverCollectBytes
+    else math.min(DriverCollectBytes, maxResultSize)
 
   /** Derive the vector width from one sampled row — the dims = 0 default
     * of every public vector entry point — and FAIL FAST (typed
@@ -181,7 +261,7 @@ object Stage {
     * action, propagated from file sizes — so a 100 TB embedding table
     * correctly falls back to the shuffle path. `key` is the payload's
     * join column (every attach in this codebase keys on the payload id). */
-  def attachSide(df: DataFrame, maxBroadcastBytes: Long = 256L * 1024 * 1024,
+  def attachSide(df: DataFrame, maxBroadcastBytes: Long = BroadcastPlanBytes,
       key: String = "id"): DataFrame = {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= maxBroadcastBytes) org.apache.spark.sql.functions.broadcast(df)
@@ -191,8 +271,8 @@ object Stage {
   /** Pre-partition a SHUFFLE_HASH build side on its join keys so each
     * partition's hash relation stays inside a task's execution-memory
     * share at any payload size (hash relations cannot spill). Sized from
-    * Catalyst's no-action size estimate with a 2× in-memory expansion,
-    * floored at the session parallelism, capped at 65536.
+    * Catalyst's no-action size estimate with a 2× in-memory expansion at
+    * [[BuildBytesPerTask]].
     *
     * 16 MB of estimated bytes per partition (not 32): the relation itself
     * expands the raw bytes ~2-3×, and 32 concurrent unspillable builds
@@ -200,9 +280,8 @@ object Stage {
     * the 32 MB target's attach builds died with "can't acquire memory to
     * build hash relation" on the protocol 8 GB heap; 16 MB keeps the
     * resident build set near ~1 GB at full concurrency. */
-  def sizedBuild(df: DataFrame, keys: Seq[String],
-      buildBytesPerPart: Long = 16L * 1024 * 1024): DataFrame =
-    df.repartition(sizedBuildParts(df, buildBytesPerPart),
+  def sizedBuild(df: DataFrame, keys: Seq[String]): DataFrame =
+    df.repartition(sizedBuildParts(df),
       keys.map(org.apache.spark.sql.functions.col): _*)
 
   /** The partition count [[sizedBuild]] would choose — exposed so a caller
@@ -213,12 +292,6 @@ object Stage {
     * measured as a heap OOM building 94 MB hash relations at 5M docs.
     * Taking max(probe count, build count) for both sides keeps every
     * build bounded and costs the probe nothing. */
-  def sizedBuildParts(df: DataFrame,
-      buildBytesPerPart: Long = 16L * 1024 * 1024): Int = {
-    val floor = df.sparkSession.sessionState.conf.numShufflePartitions
-    val est = BigDecimal(df.queryExecution.optimizedPlan.stats.sizeInBytes) * 2
-    val want = (est / BigDecimal(buildBytesPerPart)).toBigInt
-      .min(BigInt(maxExchangeParts(df))).toInt
-    math.max(floor, want)
-  }
+  def sizedBuildParts(df: DataFrame): Int =
+    estimateWidth(df, 2, BuildBytesPerTask)
 }

@@ -71,17 +71,14 @@ object SubstringIndex {
   /** Sized range-partition count for a posting write: one skinny aggregate
     * over the text column prices the exact posting volume (Σ max(len-2, 0)
     * — Catalyst's size-only estimate cannot see the explode), ~48 bytes of
-    * sort/write state per posting row, floored at the session shuffle
-    * parallelism. The eager job is deliberate and documented: it is the
-    * same exchange-sizing discipline as Dedup.minhashLsh / Rank.sizedParts,
-    * and a one-pass scan of ONE column is noise next to the write it
-    * sizes. */
+    * sort/write state per posting row ([[Stage.width]]). The eager job is
+    * deliberate and documented: it is the same exchange-sizing discipline
+    * as Dedup.minhashLsh, and a one-pass scan of ONE column is noise next
+    * to the write it sizes. */
   private def sizedParts(df: DataFrame, textCol: String): Int = {
     val volume = df.agg(coalesce(sum(greatest(length(col(textCol)) - 2, lit(0))
       .cast("long")), lit(0L))).head().getLong(0)
-    val floor = df.sparkSession.sessionState.conf.numShufflePartitions
-    math.max(floor,
-      math.min(Stage.maxExchangeParts(df), volume * 48L / (48L << 20)).toInt)
+    Stage.width(df, volume * 48L / Stage.SortBytesPerTask)
   }
 
   /** Build the index at `path` as batch 0 (overwrites any previous batch

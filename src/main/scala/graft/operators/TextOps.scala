@@ -360,11 +360,9 @@ object TextOps {
   }
 
   /** Hash-repartition `df` by `key` with the partition count sized from
-    * Catalyst's no-action size estimate (same stats source as
-    * [[Stage.attachSide]]) so each partition's downstream sort fits task
-    * memory (~48 MB in-memory per task) — never below the session's
-    * shuffle parallelism, capped at 65536 (a runaway-stats guard, not a
-    * scale ceiling). `spark.sql.shuffle.partitions` is a SESSION constant,
+    * Catalyst's no-action size estimate ([[Stage.estimateWidth]]) so each
+    * partition's downstream sort fits task memory (~48 MB in-memory per
+    * task). `spark.sql.shuffle.partitions` is a SESSION constant,
     * but the window stream it has to carry grows with the corpus: pinning
     * the exchange at the session count means per-task sort state grows
     * linearly with data and eventually spills, while a size-derived count
@@ -376,9 +374,9 @@ object TextOps {
     * measured 25× below its in-memory sort footprint at 500k docs (219 MB
     * scan vs ~5.5 GB of window rows). Callers pass the algebraic expansion
     * of their explode (rows-per-input-byte × bytes-per-row). */
-  private def sizedByKey(df: DataFrame, key: Column, expand: Double = 1.0,
-      bytesPerPart: Long = 48L << 20): DataFrame =
-    df.repartition(sizedParts(df, expand, bytesPerPart), key)
+  private def sizedByKey(df: DataFrame, key: Column,
+      expand: Double = 1.0): DataFrame =
+    df.repartition(sizedParts(df, expand), key)
 
   /** Round-robin the DOC stream before a window explode so each task's
     * EXPLODED output fits task memory. Without this the parquet scan packs
@@ -403,15 +401,8 @@ object TextOps {
     * the count from the pre-boundary window stream (an upper bound: the
     * gated/matched stream is a subset with skinnier rows) and pass it
     * down. */
-  private def sizedParts(df: DataFrame, expand: Double,
-      bytesPerPart: Long = 48L << 20): Int = {
-    val floor = df.sparkSession.sessionState.conf.numShufflePartitions
-    val est = BigDecimal(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes) * expand
-    val want = (est / BigDecimal(bytesPerPart)).toBigInt
-      .min(BigInt(Stage.maxExchangeParts(df))).toInt
-    math.max(floor, want)
-  }
+  private def sizedParts(df: DataFrame, expand: Double): Int =
+    Stage.estimateWidth(df, expand, Stage.SortBytesPerTask)
 
   /** In-memory bytes of window-stream sort state per COMPRESSED input byte
     * — the `expand` for [[sizedByKey]]: ×2 parquet→raw text, one window

@@ -233,8 +233,10 @@ class OperatorsSpec extends SparkSpec {
     // the re-priced build count: saturation prices the UNSPILLABLE gate
     // build from the full window volume, not the sparse-regime half
     val vol = 2L * 1000 * 1000 * 1000
-    val sat = Dedup.priceGramParts(vol, saturated = true, floor = 32)
-    val sparse = Dedup.priceGramParts(vol, saturated = false, floor = 32)
+    val sat = Dedup.priceGramParts(vol, saturated = true, floor = 32,
+      maxParts = 65536L)
+    val sparse = Dedup.priceGramParts(vol, saturated = false, floor = 32,
+      maxParts = 65536L)
     assert(sat >= 2 * sparse - 1 && sat > sparse,
       s"saturated pricing must double the build count once the build term " +
         s"dominates (mod integer division): $sat vs $sparse")

@@ -114,6 +114,38 @@ class RoutingSpec extends SparkSpec {
     }
   }
 
+  test("the width clamp: below the floor gives the floor, inside passes " +
+      "through, above the conf cap gives the cap, past Int range gives the cap") {
+    assert(Stage.clamp(4, 100L, 0) == 4)
+    assert(Stage.clamp(4, 100L, 3) == 4)
+    assert(Stage.clamp(4, 100L, 57) == 57)
+    assert(Stage.clamp(4, 100L, 101) == 100)
+    assert(Stage.clamp(4, 100L, BigInt(Int.MaxValue) + 1) == 100)
+    // the frame form: session floor, spark.graft.maxExchangeParts cap
+    val floor = spark.sessionState.conf.numShufflePartitions
+    assert(Stage.width(emb, 0) == floor)
+    assert(Stage.width(emb, floor - 1) == floor)
+    assert(Stage.width(emb, 1000) == 1000)
+    assert(Stage.width(emb, BigInt(Int.MaxValue) + 1) == 65536)
+    spark.conf.set("spark.graft.maxExchangeParts", "128")
+    try {
+      assert(Stage.width(emb, 127) == 127)
+      assert(Stage.width(emb, 129) == 128)
+      assert(Stage.width(emb, BigInt(Long.MaxValue) * 4) == 128)
+    } finally spark.conf.unset("spark.graft.maxExchangeParts")
+  }
+
+  test("driver-collect gate: 2 GB, capped at spark.driver.maxResultSize " +
+      "(0 = unlimited)") {
+    val gb = 1L << 30
+    assert(Stage.driverCollectGate(0L) == 2 * gb)
+    assert(Stage.driverCollectGate(gb) == gb)
+    assert(Stage.driverCollectGate(4 * gb) == 2 * gb)
+    // the session form reads the running session's setting (1g default)
+    assert(Stage.driverCollectGate(spark) == Stage.driverCollectGate(
+      spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")))
+  }
+
   test("maxExchangeParts is conf-tied: a sized exchange's derived partition " +
       "count caps at spark.graft.maxExchangeParts, not a baked-in literal") {
     assert(Stage.maxExchangeParts(emb) == 65536L)
@@ -133,6 +165,22 @@ class RoutingSpec extends SparkSpec {
       assert(parts.contains(128),
         s"band exchange must size at the conf cap 128, got $parts")
     } finally spark.conf.unset("spark.graft.maxExchangeParts")
+    def exchangeParts(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+          r.optNumPartitions
+      }.flatten
+    // between floor and cap the plan carries the priced count itself:
+    // 10M hinted rows · 4 bands · 96 B / 16 MB = 228.9 → 228
+    val hashes = emb.select($"vec_id".as("id"), xxhash64($"embedding").as("hash"))
+    assert(exchangeParts(graft.multimodal.Multimodal.hashNearDups(hashes,
+      maxHamming = 3, bands = 4, nRows = 10L * 1000 * 1000)).contains(228))
+    // estimate-sized: a 100M-row range estimates 8 B/row = 800 MB with no
+    // job run; sizedBuild prices 800 MB × 2 / 16 MB = 95.4 → 95
+    val range = spark.range(100L * 1000 * 1000).toDF()
+    assert(range.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      BigInt(800L * 1000 * 1000))
+    assert(exchangeParts(Stage.sizedBuild(range, Seq("id"))) == Seq(95))
   }
 
   test("deltaProbeRoute matches the executed probe attach, both regimes") {
