@@ -156,12 +156,9 @@ object ScanBench {
         val filesPerBatch = 8
         val prevSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
         spark.conf.set("spark.sql.files.maxPartitionBytes", String.valueOf(16L << 20))
-        // INT96 (Spark's parquet-compatibility default) carries no ordered
-        // footer statistics, so row_1 bounds would lift as None and nothing
-        // would ever prune — see TableFormat.footerStats. The clustered
-        // tree writes micros.
-        val prevTs = spark.conf.get("spark.sql.parquet.outputTimestampType")
-        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        // writeBatch stores row_1 as INT64 micros, whose ordered footer
+        // statistics give the manifest its bounds (INT96 would carry none,
+        // so nothing would prune — see TableFormat.footerStats).
         try {
           for (b <- batches) {
             val src = spark.read.parquet(s"$path/batch=$b")
@@ -174,7 +171,6 @@ object ScanBench {
           }
         } finally {
           spark.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-          spark.conf.set("spark.sql.parquet.outputTimestampType", prevTs)
         }
         System.err.println(
           f"[scanbench] clustered rewrite: ${batches.length} batches x $filesPerBatch files " +

@@ -118,7 +118,14 @@ class ManifestSidecarFormat(statCols: Seq[String] = Nil) extends TableFormat {
       codec: CodecSpec, format: String, partitioning: Seq[String],
       sortedBy: Seq[String]): Unit = {
     Tables.writeBatch(df, path, batchIndex, codec, format, partitioning, sortedBy)
-    val spark = df.sparkSession
+    commitManifest(df.sparkSession, path, batchIndex, df.schema, format, partitioning)
+  }
+
+  /** Records the manifest of the data files under `<path>/batch=<i>`, which
+    * hold rows of `schema` in `format`: the commit half of [[writeBatch]]. */
+  private[graft] def commitManifest(spark: SparkSession, path: String, batchIndex: Int,
+      schema: org.apache.spark.sql.types.StructType, format: String,
+      partitioning: Seq[String]): Unit = {
     val hfs = fs(spark, path)
     val batchDir = new Path(path, s"batch=$batchIndex")
     val files = graft.measure.Sizes.listDataFiles(spark, batchDir.toString).map { f =>
@@ -141,13 +148,13 @@ class ManifestSidecarFormat(statCols: Seq[String] = Nil) extends TableFormat {
     val stats: Map[String, Map[String, (Option[String], Option[String], Long)]] =
       if (statCols.isEmpty) Map.empty
       else {
-        val present = statCols.filter(c => df.schema.fieldNames.contains(c)
+        val present = statCols.filter(c => schema.fieldNames.contains(c)
           && !partitioning.contains(c))
         if (present.isEmpty) Map.empty
         else if (format.equalsIgnoreCase("PARQUET"))
           files.map { case (rel, _, abs) =>
             rel -> footerStats(spark.sparkContext.hadoopConfiguration, abs,
-              df.schema, present)
+              schema, present)
           }.toMap
         else {
           import org.apache.spark.sql.functions._
@@ -172,7 +179,6 @@ class ManifestSidecarFormat(statCols: Seq[String] = Nil) extends TableFormat {
         }
       }
     val types = if (statCols.isEmpty) "" else {
-      val schema = df.schema
       val typed = statCols.flatMap(c =>
         schema.fields.find(_.name == c).map(f =>
           s""""${esc(c)}":"${f.dataType.sql.toLowerCase}""""))
@@ -398,10 +404,11 @@ object ManifestSidecarFormat extends ManifestSidecarFormat(Nil) {
     * .planRange]] treats as unprunable. Values serialize through
     * [[boundToString]] so footer-sourced manifests are byte-identical in
     * shape to scan-sourced ones. Timestamps written as INT96 (Spark's
-    * compatibility default) carry no ordered footer stats — their bounds
-    * stay absent and such files are never pruned; write with
-    * `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS` to make
-    * time-range skipping effective. */
+    * compatibility default, e.g. a plain `df.write.parquet`) carry no
+    * ordered footer stats — their bounds stay absent and such files are
+    * never pruned. [[Tables.writeBatch]] stores timestamps as INT64 micros
+    * ([[IcebergParquetFormat]]), whose bounds make time-range skipping
+    * effective. */
   private[ddl] def footerStats(
       conf: org.apache.hadoop.conf.Configuration,
       file: org.apache.hadoop.fs.Path,

@@ -1,6 +1,11 @@
 package graft.ddl
 
+import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 import graft.model.{CodecSpec, TableConfig}
 
@@ -78,7 +83,9 @@ object Tables {
   /** Write one batch of rows into its own subdirectory of the variant,
     * optionally hive-partitioned by Iceberg-style transforms and sorted
     * within partitions (reference: README.md:85-86 `partitioning` /
-    * `sorted_by` table options). */
+    * `sorted_by` table options). Parquet goes through
+    * [[IcebergParquetFormat]], so timestamps are stored as Iceberg stores
+    * them. */
   def writeBatch(
       df: DataFrame,
       path: String,
@@ -98,7 +105,8 @@ object Tables {
       .mode("overwrite")
       .option("compression", c.codec.toLowerCase)
       .options(codecOptions(c))
-      .format(format.toLowerCase)
+      .format(if (format.equalsIgnoreCase("PARQUET")) classOf[IcebergParquetFormat].getName
+        else format.toLowerCase)
     val partCols = transforms.map(_._1)
     (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
       .save(s"$path/batch=$batchIndex")
@@ -128,4 +136,28 @@ object Tables {
     * plain tree (Parquet only; ORC has no merge option). */
   def readMergedSchema(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").option("basePath", path).parquet(path)
+}
+
+/** Parquet written the way Iceberg's spec stores it: every timestamp as
+  * INT64 micros, not Spark's INT96 default (12 bytes per value instead of
+  * 8, no ordered footer statistics). Spark's `prepareWrite` copies the
+  * session's `spark.sql.parquet.outputTimestampType` into the write job's
+  * Hadoop configuration, overriding any per-write option; this format
+  * resets the key on that job configuration afterwards, so each write
+  * carries micros without touching the session conf that concurrent
+  * variant loads share. Values and the read type (`timestamp`) are
+  * unchanged. Documented deviation: the footer annotation is
+  * `TIMESTAMP(MICROS, isAdjustedToUTC=true)`, where Iceberg's `timestamp`
+  * type has `false`; the stored bytes are the same. */
+class IcebergParquetFormat extends ParquetFileFormat {
+  override def prepareWrite(
+      sparkSession: SparkSession,
+      job: Job,
+      options: Map[String, String],
+      dataSchema: StructType): OutputWriterFactory = {
+    val factory = super.prepareWrite(sparkSession, job, options, dataSchema)
+    job.getConfiguration.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
+    factory
+  }
 }

@@ -6,10 +6,10 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst kernels for the table generator ([[graft.gen.ColumnExprs]]).
@@ -24,6 +24,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * decimal digits without a string, and only `length` hex chars written
   * straight into the result's bytes. Output is bit-identical to the
   * composition it replaces.
+  *
+  * A generated double was Spark's `round(x, 6)`, which rounds every value
+  * through `BigDecimal.valueOf(x).setScale(6, HALF_UP).doubleValue()`.
+  * [[RoundHalfUp]] gives the same bits from double arithmetic and keeps
+  * the BigDecimal route for the inputs where that arithmetic cannot decide
+  * ([[roundHalfUp]]).
   */
 object GenExpressions {
 
@@ -102,6 +108,64 @@ object GenExpressions {
   /** `seeded_hex` over `id +: idx`; see [[SeededHex]]. */
   def seeded_hex(seed: Long, id: Column, tag: String, idx: Seq[Column], length: Int): Column =
     GraftBridge.toColumn(SeededHex((id +: idx).map(GraftBridge.toExpression), seed, tag, length))
+
+  /** 10^0 … 10^15, each exact in a double. */
+  private val Pow10: Array[Double] = Array.iterate(1.0, 16)(_ * 10)
+
+  /** Spark's double `round(x, scale)`: `x` rounded HALF_UP at `scale`
+    * decimal places of its shortest decimal form, bit for bit.
+    *
+    * Fast path: y = |x|·10^scale in double, then floor or ceil of y by its
+    * fraction against 0.5, then c / 10^scale. The decimal form of `x` and
+    * the product y each sit within a few ulps of the exact |x|·10^scale, so
+    * whenever the fraction is clear of 0.5 by more than y·1e-13 + 1e-9 both
+    * round to the same integer c. With |c| < 2^52 and a scale of 0–15,
+    * `BigDecimal.doubleValue()` returns the correctly rounded quotient
+    * c / 10^scale, which is what the double division gives. A zero result
+    * is +0.0 (BigDecimal has no −0), and the sign of `x` carries over.
+    *
+    * Everything else takes Spark's BigDecimal route: a near-tie, y ≥ 4e15,
+    * NaN or ±∞ (returned as is), or a scale outside 0–15. */
+  def roundHalfUp(x: Double, scale: Int): Double = {
+    if (scale >= 0 && scale < Pow10.length) {
+      val p = Pow10(scale)
+      val y = math.abs(x) * p
+      if (y < 4e15) { // false for NaN and ∞ too
+        val f = math.floor(y)
+        val d = (y - f) - 0.5
+        if (math.abs(d) > y * 1e-13 + 1e-9) {
+          val c = if (d < 0) f else f + 1
+          return if (c == 0) 0.0 else if (x < 0) -(c / p) else c / p
+        }
+      }
+    }
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+
+  /** [[roundHalfUp]] as a Catalyst expression: equal to Spark's
+    * `round(child, scale)` on a double, compiled to one static call. */
+  case class RoundHalfUp(child: Expression, scale: Int)
+      extends UnaryExpression with Serializable {
+    override def dataType: DataType = DoubleType
+    override def checkInputDataTypes(): TypeCheckResult =
+      if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(s"round_half_up expects a double, got ${child.dataType}")
+
+    override protected def nullSafeEval(input: Any): Any =
+      roundHalfUp(input.asInstanceOf[Double], scale)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c => s"graft.functions.GenExpressions.roundHalfUp($c, $scale)")
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** `round(e, scale)` on a double column; see [[RoundHalfUp]]. */
+  def round_half_up(e: Column, scale: Int): Column =
+    GraftBridge.toColumn(RoundHalfUp(GraftBridge.toExpression(e), scale))
 }
 
 /** One reusable MD5 instance fed a message piece by piece, with decimal

@@ -20,7 +20,8 @@ import graft.model._
   *     partitioning, batching, and retries. Same distributions, reproducible.
   *   - Every expression supports whole-stage codegen: built-ins with a
   *     `doGenCode`, plus the fused string kernel
-  *     [[graft.functions.GenExpressions.SeededHex]]; no UDFs and no
+  *     [[graft.functions.GenExpressions.SeededHex]] and the double rounding
+  *     kernel [[graft.functions.GenExpressions.RoundHalfUp]]; no UDFs and no
   *     higher-order functions (Spark's `transform` is `CodegenFallback`, so
   *     arrays are built by element position instead).
   */
@@ -86,7 +87,7 @@ object ColumnExprs {
         val span = math.max(0L, max - min)
         (lit(min) + floor(u("v") * lit(span + 1))).cast(LongType)
       case DoubleSpec(min, max, _) => // reference: src/sqlHelpers.ts:37-40,74-77
-        round(lit(min) + u("v") * lit(max - min), 6)
+        GenExpressions.round_half_up(lit(min) + u("v") * lit(max - min), 6)
       case StringSpec(length, _) => // reference: src/sqlHelpers.ts:41-43
         // Reference takes substr(uuid-hex, 1, len), silently capping at 32
         // chars; we chain md5 blocks so the string always has `length` chars.

@@ -68,10 +68,9 @@ object Stage {
 
   /** The sizing rule itself: `want` capped at `cap`, floored at `floor`.
     * `want` is a BigInt so estimates past Long range price without
-    * overflow. `cap` must fit an Int: a larger one wraps in the Int
-    * conversion and yields the floor. */
+    * overflow. A `cap` past Int range saturates at `Int.MaxValue`. */
   def clamp(floor: Int, cap: Long, want: BigInt): Int =
-    math.max(floor, want.min(BigInt(cap)).toInt)
+    math.max(floor, want.min(BigInt(cap)).min(BigInt(Int.MaxValue)).toInt)
 
   /** [[clamp]] with `df`'s session floor and conf cap. */
   def width(df: DataFrame, want: BigInt): Int =

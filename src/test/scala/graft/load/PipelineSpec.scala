@@ -68,6 +68,51 @@ class PipelineSpec extends SparkSpec {
     assert(size.rows == 5000 && size.data_bytes > 0)
   }
 
+  /** (physical type, logical annotation) of `column` in every Parquet
+    * data file under `dir`, read from the footers. */
+  private def parquetType(dir: String, column: String): Seq[(String, String)] =
+    Sizes.listDataFiles(spark, dir).map { f =>
+      graft.ddl.ParquetFooter.read(spark.sparkContext.hadoopConfiguration, f.getPath) { footer =>
+        val schema: org.apache.parquet.schema.GroupType = footer.getFileMetaData.getSchema
+        val t = schema.getType(column).asPrimitiveType
+        (t.getPrimitiveTypeName.name, String.valueOf(t.getLogicalTypeAnnotation))
+      }
+    }
+
+  test("variant writes store timestamps as Iceberg does: INT64 micros in every " +
+      "footer, read back as timestamp and equal to the generator, session conf " +
+      "untouched; ORC unchanged") {
+    import org.apache.spark.sql.types.TimestampType
+    val wh = Files.createTempDirectory("graft_micros").toString
+    val cp = Files.createTempDirectory("graft_micros_cp").toString
+    val cfg = Schemas.narrowOrders
+    val codec = CodecSpec("zstd", 3)
+    val path = Tables.variantPath(wh, cfg, codec)
+    val tsConf = "spark.sql.parquet.outputTimestampType"
+    val tsConfBefore = spark.conf.get(tsConf)
+    val plan = LoadPlan(totalRows = 3000, batchRows = 1000, startId = 1,
+      concurrency = 2, checkpointDir = cp)
+    assert(Loader.loadTable(spark, cfg, plan, codec, path, quiet = true) == 3)
+    assert(spark.conf.get(tsConf) == tsConfBefore, "the session conf must not move")
+    val types = parquetType(path, "created_at")
+    assert(types.size >= 3 && types.forall(_ == ("INT64", "TIMESTAMP(MICROS,true)")),
+      s"footer types: $types")
+    val back = Tables.read(spark, path)
+    assert(back.schema("created_at").dataType == TimestampType)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cfg.columns.map(c => org.apache.spark.sql.functions.col(c._1)): _*)
+        .collect().sortBy(_.getLong(0)).toSeq
+    val generated = rows(graft.gen.Generator.generate(spark, cfg, 1, 3000))
+    assert(rows(back) == generated)
+    // ORC takes no part in the Parquet format: same rows, same read type
+    val orcPath = s"$wh/orc"
+    Tables.writeBatch(graft.gen.Generator.generate(spark, cfg, 1, 3000), orcPath, 0,
+      codec, "ORC")
+    val orc = Tables.read(spark, orcPath, "ORC")
+    assert(orc.schema("created_at").dataType == TimestampType)
+    assert(rows(orc) == generated)
+  }
+
   test("Sizes.measure on Parquet reads footers: no Spark job, rows equal a count " +
       "with _SUCCESS, .crc, a zero-row and a zero-byte part file present") {
     val wh = Files.createTempDirectory("graft_footer").toString
@@ -269,35 +314,35 @@ class PipelineSpec extends SparkSpec {
     assert(orcFmt.readRange(spark, orcPath, "ORC", "id", Some("150"), Some("160"))
       .filter(col("id").between(150, 160)).count() == 11)
 
-    // Parquet timestamps: under TIMESTAMP_MICROS the footer micros
-    // serialize to the Spark-cast string form, so caller-supplied
-    // "yyyy-MM-dd HH:mm:ss" bounds compare correctly (lexicographic on
-    // that fixed-width form IS time order). Under Spark's INT96 default
-    // the footer carries no ordered stats — bounds stay absent and
-    // NOTHING is pruned, the conservative contract.
+    // Parquet timestamps: writeBatch stores them as INT64 micros, whose
+    // footer values serialize to the Spark-cast string form, so
+    // caller-supplied "yyyy-MM-dd HH:mm:ss" bounds compare correctly
+    // (lexicographic on that fixed-width form IS time order). Under
+    // Spark's INT96 default the footer carries no ordered stats — bounds
+    // stay absent and NOTHING is pruned, the conservative contract.
     val tsFmt2 = new graft.ddl.ManifestSidecarFormat(Seq("ts"))
     val tsPath = s"$wh/t_ts"
     def tsDf(day: Int) = Seq.tabulate(10)(i =>
         java.sql.Timestamp.valueOf(f"2026-01-$day%02d 12:00:$i%02d"))
       .toDF("ts").coalesce(1)
-    val tsConf = "spark.sql.parquet.outputTimestampType"
-    val tsConfBefore = spark.conf.get(tsConf)
-    try {
-      spark.conf.set(tsConf, "TIMESTAMP_MICROS")
-      tsFmt2.writeBatch(tsDf(1), tsPath, 0, codec, "PARQUET")
-      tsFmt2.writeBatch(tsDf(20), tsPath, 1, codec, "PARQUET")
-    } finally spark.conf.set(tsConf, tsConfBefore)
+    tsFmt2.writeBatch(tsDf(1), tsPath, 0, codec, "PARQUET")
+    tsFmt2.writeBatch(tsDf(20), tsPath, 1, codec, "PARQUET")
     val (keptTs, totalTs) = tsFmt2.planRange(spark, tsPath, "ts",
       Some("2026-01-19 00:00:00"), None)
     assert(totalTs == 2 && keptTs.size == 1 && keptTs.head.contains("batch=1"))
     val (keptAll, _) = tsFmt2.planRange(spark, tsPath, "ts",
       Some("2026-01-01 12:00:00"), Some("2026-01-20 23:00:00"))
     assert(keptAll.size == 2)
-    // INT96 write (the session default): no usable footer bounds → no
+    // INT96 files (a plain parquet write under the session default, then
+    // the manifest commit writeBatch runs): no usable footer bounds → no
     // pruning, scans stay correct
     val int96Path = s"$wh/t_ts96"
-    tsFmt2.writeBatch(tsDf(1), int96Path, 0, codec, "PARQUET")
-    tsFmt2.writeBatch(tsDf(20), int96Path, 1, codec, "PARQUET")
+    Seq(1, 20).zipWithIndex.foreach { case (day, b) =>
+      tsDf(day).write.parquet(s"$int96Path/batch=$b")
+      tsFmt2.commitManifest(spark, int96Path, b, tsDf(day).schema, "PARQUET", Nil)
+    }
+    assert(parquetType(int96Path, "ts").forall(_._1 == "INT96"),
+      "the fixture must hold real INT96 timestamps")
     val (kept96, total96) = tsFmt2.planRange(spark, int96Path, "ts",
       Some("2026-01-19 00:00:00"), None)
     assert(total96 == 2 && kept96.size == 2,

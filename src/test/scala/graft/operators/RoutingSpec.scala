@@ -121,6 +121,9 @@ class RoutingSpec extends SparkSpec {
     assert(Stage.clamp(4, 100L, 57) == 57)
     assert(Stage.clamp(4, 100L, 101) == 100)
     assert(Stage.clamp(4, 100L, BigInt(Int.MaxValue) + 1) == 100)
+    // a cap past Int range saturates instead of wrapping to the floor
+    assert(Stage.clamp(4, 3000000000L, BigInt(10).pow(12)) == Int.MaxValue)
+    assert(Stage.clamp(4, 1L << 32, BigInt(10).pow(12)) == Int.MaxValue)
     // the frame form: session floor, spark.graft.maxExchangeParts cap
     val floor = spark.sessionState.conf.numShufflePartitions
     assert(Stage.width(emb, 0) == floor)
