@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+import graft.functions.GenExpressions.roundHalfUp
+
 /** Native expressions for the IVF+PQ batch k-NN join
   * ([[graft.operators.Similarity.knnJoinIvf]]).
   *
@@ -92,10 +94,6 @@ object AnnExpressions {
             s"ivfpq_cell_topk expects (bigint, array<float>, array<struct>), got $other")
       }
 
-    private def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
-        .doubleValue()
-
     def compute(idA: Long, vAraw: ArrayData, members: ArrayData): ArrayData = {
       val m = codebooks.length
       val dims = vAraw.numElements()
@@ -131,7 +129,7 @@ object AnnExpressions {
             var dot = 0.0; var j = 0
             val nn = math.min(dims, vB.numElements())
             while (j < nn) { dot += vA(j) * vB.getFloat(j).toDouble; j += 1 }
-            cos(filled) = if (normB == 0.0) 0.0 else round6(dot / (normA * normB))
+            cos(filled) = if (normB == 0.0) 0.0 else roundHalfUp(dot / (normA * normB), 6)
             ids(filled) = id
             filled += 1
           }
@@ -192,7 +190,7 @@ object AnnExpressions {
         var dot = 0.0; var j = 0
         val nn = math.min(dims, vB.numElements())
         while (j < nn) { dot += vA(j) * vB.getFloat(j).toDouble; j += 1 }
-        resCos(q) = if (normB == 0.0) 0.0 else round6(dot / (normA * normB))
+        resCos(q) = if (normB == 0.0) 0.0 else roundHalfUp(dot / (normA * normB), 6)
         resId(q) = row.getLong(0)
         q += 1
       }
@@ -384,10 +382,6 @@ object AnnExpressions {
             s"cell_rescore_topk expects (array<float>, array<bigint>, array<struct>), got $other")
       }
 
-    private def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
-        .doubleValue()
-
     // derived width, as in [[IvfPqCellShortlist]]: payload-bearing member
     // structs (fields appended after (id, norm, v)) read correctly here
     @transient private lazy val memWidth: Int = third.dataType match {
@@ -432,7 +426,7 @@ object AnnExpressions {
           var dot = 0.0; var j = 0
           val nn = math.min(dims, vB.numElements())
           while (j < nn) { dot += vA(j) * vB.getFloat(j).toDouble; j += 1 }
-          resCos(filled) = if (normB == 0.0) 0.0 else round6(dot / (normA * normB))
+          resCos(filled) = if (normB == 0.0) 0.0 else roundHalfUp(dot / (normA * normB), 6)
           resId(filled) = id
           filled += 1
         }
@@ -508,10 +502,6 @@ object AnnExpressions {
             s"leader_dedup_cell expects array<struct<id,norm,v>>, got $other")
       }
 
-    private def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
-        .doubleValue()
-
     def compute(members: ArrayData): ArrayData = {
       val nMem = members.numElements()
       val ids = new Array[Long](nMem)
@@ -543,7 +533,7 @@ object AnnExpressions {
           val nn = math.min(ve.length, vj.length)
           var dot = 0.0; var t = 0
           while (t < nn) { dot += ve(t) * vj(t); t += 1 }
-          if (round6(dot / (norms(e) * norms(j))) >= tau) keep = 0
+          if (roundHalfUp(dot / (norms(e) * norms(j)), 6) >= tau) keep = 0
           oi += 1
         }
         kept(j) = keep
@@ -775,10 +765,6 @@ object AnnExpressions {
               s"got $other")
       }
 
-    private def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
-        .doubleValue()
-
     def compute(vAraw: ArrayData, sl: ArrayData, members: ArrayData): ArrayData = {
       val nSl = sl.numElements()
       val nMem = members.numElements()
@@ -811,7 +797,7 @@ object AnnExpressions {
           var dot = 0.0; var j = 0
           val nn = math.min(dims, vB.numElements())
           while (j < nn) { dot += vA(j) * vB.getFloat(j).toDouble; j += 1 }
-          resCos(filled) = if (normB == 0.0) 0.0 else round6(dot / (normA * normB))
+          resCos(filled) = if (normB == 0.0) 0.0 else roundHalfUp(dot / (normA * normB), 6)
           resId(filled) = id
           // copy out of the (Unsafe) member buffer: the output array
           // outlives this row's backing bytes
@@ -907,10 +893,6 @@ object AnnExpressions {
               s"ATOMIC payload>>), got $other")
       }
 
-    private def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
-        .doubleValue()
-
     def compute(vAraw: ArrayData, sl: ArrayData, members: ArrayData): ArrayData = {
       val nSl = sl.numElements()
       val nMem = members.numElements()
@@ -943,7 +925,7 @@ object AnnExpressions {
           var dot = 0.0; var j = 0
           val nn = math.min(dims, vB.numElements())
           while (j < nn) { dot += vA(j) * vB.getFloat(j).toDouble; j += 1 }
-          resCos(filled) = if (normB == 0.0) 0.0 else round6(dot / (normA * normB))
+          resCos(filled) = if (normB == 0.0) 0.0 else roundHalfUp(dot / (normA * normB), 6)
           resId(filled) = id
           resPay(filled) =
             if (row.isNullAt(3)) null

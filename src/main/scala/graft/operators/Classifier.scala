@@ -31,9 +31,9 @@ object Classifier {
     * gradient steps at learning rate `lr`, from zero initialization.
     *
     * `df` must carry `labelCol` in {0,1}; features are arbitrary numeric
-    * expressions over its columns. The feature projection is persisted
-    * for the duration of the fit (K scans of the skinny frame) and
-    * unpersisted before returning. */
+    * expressions over its columns. The feature projection is cached
+    * [[Materialize.during]] the fit (K scans of the skinny frame) and
+    * released before returning. */
   def logisticFit(
       df: DataFrame,
       labelCol: Column,
@@ -43,11 +43,9 @@ object Classifier {
   ): Array[Double] = {
     require(featureCols.nonEmpty, "logisticFit needs at least one feature")
     require(iters >= 1, "logisticFit needs at least one iteration")
-    val feats = df.select(
-      (labelCol.cast("double").as("__y") +:
-        featureCols.zipWithIndex.map { case (c, i) => c.cast("double").as(s"__f$i") }): _*)
-      .persist()
-    try {
+    val cols = labelCol.cast("double").as("__y") +:
+      featureCols.zipWithIndex.map { case (c, i) => c.cast("double").as(s"__f$i") }
+    Materialize.during(df.select(cols: _*)) { feats =>
       var w = Array.fill(featureCols.size + 1)(0.0)
       for (_ <- 1 to iters) {
         val err = margin(w, featureCols.indices.map(i => col(s"__f$i"))) - col("__y")
@@ -64,7 +62,7 @@ object Classifier {
         w = w.zipWithIndex.map { case (wj, j) => wj - lr * r.getDouble(j) / n }
       }
       w
-    } finally feats.unpersist(blocking = false)
+    }
   }
 
   /** Predicted probability column for `weights` over `featureCols`. */

@@ -19,14 +19,16 @@ import org.apache.spark.sql.functions._
   * at O(log²n); the propagation loop below is the same join shape, so the
   * star steps can be swapped in without changing the interface.
   *
-  * Iteration discipline at scale: each round's label frame is
-  * `localCheckpoint`ed (eager) — without truncation the lineage doubles per
-  * round and a downstream action would re-execute the whole ladder; blocks
-  * are reference-tracked and freed by the ContextCleaner when the frame is
-  * garbage-collected, so nothing outlives its consumers (the r1-verdict
-  * persist()-leak pattern does not apply). Convergence is detected with a
-  * one-row checksum action per round: per-node labels are monotonically
-  * non-increasing, so the label sum strictly decreases until fixpoint. The
+  * Iteration discipline at scale: each round's label frame is an eager
+  * [[Materialize.checkpoint]] — without truncation the lineage doubles per
+  * round and a downstream action would re-execute the whole ladder. A
+  * superseded round is released as soon as its successor has materialized,
+  * so the returned frame reads the only checkpoint left; free it with
+  * [[Materialize.release]] once the labels are consumed.
+  *
+  * Convergence is detected with a one-row checksum action per round:
+  * per-node labels are monotonically non-increasing, so the label sum
+  * strictly decreases until fixpoint. The
   * sum is taken in DECIMAL(38,0): a LongType sum overflows (ANSI: a
   * job-killing throw; non-ANSI: silent wrap that could alias the equality
   * check) at billion-row corpora with 64-bit hash-derived ids, while 38
@@ -35,27 +37,6 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Free the block-storage copy behind an eager `localCheckpoint` frame.
-    * The checkpointed data lives in the persisted RDD inside the frame's
-    * LogicalRDD leaf — `df.unpersist()` doesn't touch it (the frame was
-    * never `cache()`d) and `df.rdd` would plan a NEW wrapper RDD whose
-    * unpersist is a no-op on the blocks.
-    *
-    * CONTRACT — stronger than "all consumers have materialized": a locally
-    * checkpointed frame has TRUNCATED lineage, so these blocks are its only
-    * copy. After this call the frame must never be referenced again — not
-    * by a later action, and not by a TASK RETRY of a still-running stage
-    * that reads it (either fails with a missing-checkpoint-block error; the
-    * data is irrecoverable, not recomputable). Call sites should drop or
-    * shadow the reference immediately after the call (as the sizing branch
-    * below does by returning `rekeyed` and never touching `sym0` again) so
-    * accidental reuse is impossible. Non-blocking. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** Exact label checksum; NULL (zero rows) coalesces to 0 so an empty edge
     * set converges on the first round instead of NPE-ing on a null slot. */
@@ -80,9 +61,8 @@ object ConnectedComponents {
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     // symmetric closure once; both directions so min labels flow both ways
-    val sym0 = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
+    val sym0 = Materialize.checkpoint(
+      e.unionByName(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     // Size the ITERATION exchanges from the materialized edge count — the
     // one number every round's join and aggregate volume actually tracks —
     // instead of the session partition constant (which under-partitions a
@@ -99,20 +79,15 @@ object ConnectedComponents {
     val parts = Stage.width(edges, m * 48L / (32L << 20))
     val sym =
       if (parts > floor) {
-        val rekeyed = sym0.repartition(parts, col("dst")).localCheckpoint(true)
-        // the eager checkpoint above has materialized — sym0's blocks are
-        // now a dead second copy of the full symmetric edge set that would
-        // otherwise sit in block storage for the whole iteration loop
-        // (exactly at the 5M-doc scale this sizing targets); free them now
-        // rather than waiting for the ContextCleaner to notice the frame
-        // is unreachable after the method returns
-        unpersistCheckpoint(sym0)
+        val rekeyed = Materialize.checkpoint(sym0.repartition(parts, col("dst")))
+        // sym0 is now a dead second copy of the edge set that would sit in
+        // block storage for the whole loop; it is never touched again
+        Materialize.release(sym0)
         rekeyed
       } else sym0
 
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("rep", col("id"))
-      .localCheckpoint(true)
+    var labels = Materialize.checkpoint(sym.select(col("src").as("id")).distinct()
+      .withColumn("rep", col("id")))
     var checksum = checksumOf(labels)
     var iter = 0
     var converged = false
@@ -126,15 +101,14 @@ object ConnectedComponents {
       // one rep candidate per edge endpoint plus the labels)
       val keyed =
         if (parts > floor) propagated.repartition(parts, col("id")) else propagated
-      val next = keyed
+      val next = Materialize.checkpoint(keyed
         .groupBy(col("id"))
-        .agg(min(col("rep")).as("rep"))
-        .localCheckpoint(true)
+        .agg(min(col("rep")).as("rep")))
       val nextSum = checksumOf(next)
       converged = nextSum.compareTo(checksum) == 0
       checksum = nextSum
       // the superseded round's label blocks have no remaining consumer
-      unpersistCheckpoint(labels)
+      Materialize.release(labels)
       labels = next
       iter += 1
     }
@@ -143,6 +117,8 @@ object ConnectedComponents {
         "without reaching a fixpoint — labels are correct only for components " +
         s"with diameter <= $maxIter; raise maxIter (rounds = diameter) or use " +
         "a star-contraction variant for adversarial long-chain graphs")
+    // the labels are checkpointed: the edge set has no consumer left
+    Materialize.release(sym)
     labels
   }
 
@@ -189,18 +165,17 @@ object ConnectedComponents {
       dstCol: String = "id_b",
       maxIter: Int = 50
   ): DataFrame = {
-    val e0 = edges.select(col(srcCol).cast("long").as("src"),
+    val e0 = Materialize.checkpoint(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     var e = e0
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val next = star(star(e, large = true), large = false).localCheckpoint(true)
+      val next = Materialize.checkpoint(star(star(e, large = true), large = false))
       converged = next.count() == e.count() && next.exceptAll(e).isEmpty
-      unpersistCheckpoint(e)
+      Materialize.release(e)
       e = next
       iter += 1
     }

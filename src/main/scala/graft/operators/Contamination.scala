@@ -84,16 +84,16 @@ object Contamination {
   ): DataFrame = {
     val t = stream(train, trainIdCol, trainTextCol, "train_id", shingleLen)
     // The eval shingle stream is read three times (distinct count to size
-    // the filter, the bloom build, the final exact join) — persist it across
+    // the filter, the bloom build, the final exact join) — cache it across
     // the two driver-side actions so the prefilter doesn't triple the eval
     // scan cost it exists to amortize, and release the cache once the bloom
     // bytes are in hand (the lazy join then re-derives the stream once).
-    val e = stream(eval0, evalIdCol, evalTextCol, "eval_id", shingleLen).persist()
-    val bloom = try {
-      val eHashes = e.select(col("sh_h")).distinct()
+    val e = stream(eval0, evalIdCol, evalTextCol, "eval_id", shingleLen)
+    val bloom = Materialize.during(e) { cached =>
+      val eHashes = cached.select(col("sh_h")).distinct()
       val nItems = math.max(eHashes.count(), 1L)
       eHashes.stat.bloomFilter("sh_h", nItems, fpp)
-    } finally e.unpersist(blocking = false)
+    }
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
     val pre = t.filter(org.apache.spark.sql.GraftBridge.toColumn(

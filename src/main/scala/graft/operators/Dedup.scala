@@ -202,20 +202,19 @@ object Dedup {
     * Σ_bucket C(df, 2) that sizes the pair exchange (Catalyst's size-only
     * estimator prices a self-join quadratically, so the plan cannot be
     * sized lazily). To keep that job from paying the
-    * scan→tokenize→signature pipeline twice, `sig` is persisted
-    * (MEMORY_AND_DISK) before the volume job and the returned plan reads
-    * the same cached frame; the cache entry lives in the session
-    * CacheManager (keyed by plan — repeated calls over the same input
-    * reuse it) until evicted or `spark.catalog.clearCache()`.
+    * scan→tokenize→signature pipeline twice, `sig` is
+    * [[Materialize.cached]] before the volume job and the returned plan
+    * reads the same cached frame (repeated calls over the same input reuse
+    * the entry).
     *
-    * Below the threshold the job is an eager `localCheckpoint()` of the
-    * signature frame (batch inputs only; a streaming input stays lazy).
-    * Three consequences: the returned frame is a SNAPSHOT of the input as
-    * it was at construction — later changes to the input's files are not
-    * seen; the checkpoint is NOT fault-tolerant — its blocks live on the
-    * executors with no lineage to recompute them, so losing one fails the
-    * query; and the blocks are freed only when the returned frame is
-    * garbage-collected (the ContextCleaner), not when the query finishes.
+    * Below the threshold the job is an eager [[Materialize.checkpoint]] of
+    * the signature frame (batch inputs only; a streaming input stays lazy).
+    * Two consequences: the returned frame is a SNAPSHOT of the input as it
+    * was at construction — later changes to the input's files are not
+    * seen; and the checkpoint is NOT fault-tolerant — its blocks live on
+    * the executors with no lineage to recompute them, so losing one fails
+    * the query. Either way [[Materialize.release]] of the returned frame
+    * frees the signature storage.
     *
     * Returns (id_a, id_b, est_jaccard) with id_a < id_b.
     */
@@ -251,14 +250,10 @@ object Dedup {
     // so scan → tokenize → 64-slot signature re-ran up to four times per
     // action (static plan shows four `minhashshingles` scans). One ≤256 MB
     // checkpoint removes the recomputes: q21 0.357 → 0.242 s (min-of-5,
-    // local[32], sf0.1), results hash-identical. Blocks are reference-
-    // tracked and freed by the ContextCleaner when the frame is GC'd —
-    // the ConnectedComponents iteration discipline, not a persist() leak;
-    // nothing is keyed on the input across invocations (each call
-    // checkpoints afresh), so repeated runs recompute from the scan.
-    // The large path keeps its lazy pipeline (sized exchanges + the
-    // documented volume-job persist); streaming frames cannot checkpoint.
-    val sig = if (smallCorpus && !sig0.isStreaming) sig0.localCheckpoint() else sig0
+    // local[32], sf0.1), results hash-identical. Each call checkpoints
+    // afresh; the large path stays lazy (sized exchanges + the volume-job
+    // cache); streaming frames cannot checkpoint.
+    val sig = if (smallCorpus && !sig0.isStreaming) Materialize.checkpoint(sig0) else sig0
     // Band buckets as a static array of codegen'd slice hashes — not a
     // higher-order `transform`, which would evaluate interpreted.
     val bandBuckets = array((0 until bands).map(b =>
@@ -298,11 +293,11 @@ object Dedup {
     val pairParts =
       if (smallCorpus) 0
       else {
-        // the eager volume job (see scaladoc) — persist sig FIRST so this
+        // the eager volume job (see scaladoc) — cache sig FIRST so this
         // job and the caller's main query share one scan→signature pass;
         // the banded exchange itself recomputes (exchange reuse does not
         // span jobs) but from the cached frame, not the raw text
-        sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Materialize.cached(sig)
         val volume = banded.groupBy(col("band"), col("bucket"))
           .agg(count(lit(1)).as("bdf"))
           .agg(coalesce(sum(expr("bdf * (bdf - 1) div 2")), lit(0L)))
@@ -858,11 +853,10 @@ object Dedup {
     * of an executor memory/disk death mid-join. [[editDistanceStats]] is
     * the budget-free accounting route at pair-infeasible scale.
     *
-    * Cache note: above the sizing gate the blocking stream is persisted
-    * (MEMORY_AND_DISK) so the volume job, both self-join sides, and the
-    * verify join share one computation; the entry lives in the session
-    * CacheManager until evicted — sessions issuing many large invocations
-    * should `spark.catalog.clearCache()` between them.
+    * Cache note: above the sizing gate the blocking stream is
+    * [[Materialize.cached]] so the volume job, both self-join sides, and
+    * the verify join share one computation; [[Materialize.release]] of the
+    * returned frame frees it.
     *
     * Returns (id_a, id_b, dist) with id_a < id_b, dist ≤ maxDist. */
   def editDistancePairs(
@@ -1029,8 +1023,7 @@ object Dedup {
     val blockedRaw = editDistanceBlocked(t, maxTrigramFreq, rarestK, gramLen, gramParts)
     val blocked =
       if (gramParts == 0) blockedRaw
-      else blockedRaw.repartition(gramParts, col("g"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else Materialize.cached(blockedRaw.repartition(gramParts, col("g")))
     // Pair dedup WITHOUT a `.distinct()`: the distinct's map-side partial
     // aggregate holds one hash entry per distinct pair per JVM — measured
     // 45.8 GB of spill at 500k hot-trigram titles (260M pairs). Instead,
@@ -1058,7 +1051,7 @@ object Dedup {
       val windows = t.agg(coalesce(sum(greatest(length(col("s")) - (gramLen - 1),
         lit(0)).cast("long")), lit(0L))).head().getLong(0)
       val sat = gramSaturation(t, gramLen, windows)
-      if (gramParts != 0) blocked.unpersist(false)
+      if (gramParts != 0) Materialize.release(blocked)
       throw SaturationBudgetExceeded(volume, budget, sat.windows,
         sat.alphabet, sat.gramSpace, sat.meanDf, exactVolume = true)
     }

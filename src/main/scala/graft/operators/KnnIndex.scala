@@ -143,17 +143,7 @@ object KnnIndex {
     val fsb = hadoopFs(spark, path)
     Seq("tombstones", "ingest_log", "staging").foreach(d =>
       fsb.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
-    // deterministic ~64k-vector training sample, the knnJoinIvf recipe —
-    // cached only for the duration of the m·(iters+1) training jobs
-    val sampleEvery = math.max(1L, n / 65536L)
-    val sampled = sampleEvery > 1L
-    val sample =
-      if (!sampled) base
-      else base.filter(pmod(xxhash64(col("id")), lit(sampleEvery)) === 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pq =
-      try Pq.train(sample.select(col("v")), "v", dimsActual, m, ks, iters = 3)
-      finally if (sampled) sample.unpersist(false)
+    val pq = Pq.trainOnSample(base, n, dimsActual, m, ks)
     val meta = Meta(lists, dimsActual, m, ks, pq.subDim,
       pq.codebooks.map(_.centroids))
     Seq((meta.nLists, meta.dims, meta.m, meta.ks, meta.subDim))

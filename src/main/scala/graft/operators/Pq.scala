@@ -67,6 +67,18 @@ object Pq {
     PqCodebook(subDim, books)
   }
 
+  /** [[train]] (3 iterations) on a deterministic xxhash64 sample of ~64k of
+    * `base`'s (`id`, `v`) rows, whatever the corpus size `n`. A thinned
+    * sample is cached [[Materialize.during]] training: each of the m·(iters+1)
+    * jobs would otherwise re-scan the FULL base (~15 s of the 5M wall). */
+  private[graft] def trainOnSample(base: DataFrame, n: Long, dim: Int, m: Int,
+      k: Int): PqCodebook = {
+    val every = math.max(1L, n / 65536L)
+    def fit(sample: DataFrame) = train(sample.select(col("v")), "v", dim, m, k, iters = 3)
+    if (every == 1L) fit(base)
+    else Materialize.during(base.filter(pmod(xxhash64(col("id")), lit(every)) === 0))(fit)
+  }
+
   /** Encode the corpus: (id, code) where `code` is the array of `m`
     * per-sub-space centroid indices — the compressed index (plus, at rest,
     * whatever partition key the caller pairs it with, e.g. an IVF cluster).

@@ -36,14 +36,9 @@ object Rank {
     * ~48 MB of sort state per task. The session default alone is a
     * constant while inputs grow — at 5M full-text documents the 32-way
     * range sort measured 4–5 GB of spill per rank call; size-derived
-    * counts keep per-task sort state flat at any corpus size. RDD-backed
-    * inputs report `defaultSizeInBytes` (effectively infinite) and fall
-    * back to the session floor rather than the cap. */
+    * counts keep per-task sort state flat at any corpus size. */
   private def sizedParts(df: DataFrame, numPartitions: Int): Int =
     if (numPartitions > 0) numPartitions
-    else if (df.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        BigInt(Long.MaxValue) / 4)
-      df.sparkSession.sessionState.conf.numShufflePartitions
     else Stage.estimateWidth(df, 2, Stage.SortBytesPerTask)
 
   /** Append a 1-based global `row_number`-style rank column ordered by

@@ -128,11 +128,9 @@ object Similarity {
     * through the driver, so sessions above ~1 GB of vectors should raise
     * `spark.driver.maxResultSize` (≥ the vector-table size) — otherwise the
     * gate self-caps and the attach degrades to SHUFFLE_HASH; (2) above the
-    * 256 MB estimate threshold the skinny bucket index is persisted
-    * (MEMORY_AND_DISK) and the entry lives in the session CacheManager
-    * until evicted — callers issuing many large invocations in one session
-    * should `spark.catalog.clearCache()` (or unpersist via the catalog)
-    * between them; (3) past ~4M×64d per executor the broadcast attach is
+    * 256 MB estimate threshold the skinny bucket index is
+    * [[Materialize.cached]] — [[Materialize.release]] of the returned frame
+    * frees it; (3) past ~4M×64d per executor the broadcast attach is
     * the operator's measured ceiling — use [[knnJoinIvf]], whose pair
     * stage ships PQ codes and never re-exchanges vectors. The handoff is
     * measured, not asserted: at 5M×64d this path needs a 2× protocol heap
@@ -183,8 +181,7 @@ object Similarity {
     // two subplans are not canonically identical, so there is no
     // ReusedExchange to lean on, and without the cache the vector-hashing
     // scan runs twice), and the candidate-volume job below makes a third
-    // pass. The cache entry lives in the session CacheManager until
-    // evicted; same laziness caveat as Dedup.minhashLsh — above the
+    // pass. Same laziness caveat as Dedup.minhashLsh — above the
     // threshold, CONSTRUCTING this frame runs one eager job. The estimate
     // reads the ANALYZED plan: the size-only stats visitor propagates the
     // same file-size figures either way, but `optimizedPlan` would run the
@@ -196,8 +193,7 @@ object Similarity {
       posexplode(hyperplaneBuckets(col("v"), planes, tables)))
       .withColumnRenamed("pos", "table").withColumnRenamed("col", "bucket")
     val buckets =
-      if (largeCorpus)
-        rawBuckets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (largeCorpus) Materialize.cached(rawBuckets)
       else rawBuckets
     // multi-probe only the query (left) side: exact bucket + 1-bit flips
     val probed = buckets.select(col("id"), col("table"),
@@ -353,15 +349,13 @@ object Similarity {
     * directory rows exactly as it would concentrate any cluster index, and
     * `nLists` is the dial.
     *
-    * The skinny (id, v, norm) base is persisted ONLY while its size
-    * estimate fits comfortably in executor memory (≤ 1 GB): it feeds the
-    * sample, both directories, and the probe side, but at 50M×64d the
-    * ~17 GB deserialized cache was the measured protocol-heap OOM — above
-    * the gate every consumer re-scans the (cheap, page-cached) source
-    * instead, and only the ~64k-vector training sample gets its own cache.
-    * The small-corpus cache entry lives until session eviction —
-    * long-lived sessions should `spark.catalog.clearCache()` between
-    * large invocations.
+    * The skinny (id, v, norm) base is [[Materialize.cached]] ONLY while
+    * its size estimate fits comfortably in executor memory (≤ 1 GB): it
+    * feeds the sample, both directories, and the probe side, but at
+    * 50M×64d the ~17 GB deserialized cache was the measured protocol-heap
+    * OOM — above the gate every consumer re-scans the (cheap, page-cached)
+    * source instead, and only the ~64k-vector training sample gets its own
+    * cache. [[Materialize.release]] of the returned frame frees the base.
     *
     * Where the wall goes (per-stage probe, 5M×64d, local[32]): ~2/3 of the
     * CPU is the deterministic coarse quantizer itself — the probe/assign
@@ -528,9 +522,7 @@ object Similarity {
     // such rows before they cost directory or probe work
     val base0 =
       if (labelCol.isDefined) base1.filter(col("lbl").isNotNull) else base1
-    val base =
-      if (cacheBase) base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base0
+    val base = if (cacheBase) Materialize.cached(base0) else base0
     val n = math.max(1L, base.count())
     val lists = if (nLists > 0) nLists else math.max(8L, n / 64L).toInt
     val cand = math.max(k, if (kCand > 0) kCand else 4 * k)
@@ -538,22 +530,7 @@ object Similarity {
     // (σ/8 tie-gap gate) — the sizings below price the worst case
     // (probeMidsPerTop)
     val fanout = graft.functions.VectorExpressions.probeMidsPerTop(lists)
-    // deterministic training sample: ~64k vectors regardless of corpus size.
-    // Materialized for the duration of training: Pq.train runs m sub-space
-    // k-means loops (m·(iters+1) driver-collected jobs), and without its own
-    // cache entry every one of those jobs re-scans the FULL base cache just
-    // to re-apply this filter — 24 scans of 5M rows to read 64k (~15 s of
-    // the 5M wall, per-stage probe). Unpersisted as soon as training — an
-    // eager, driver-side computation — returns.
-    val sampleEvery = math.max(1L, n / 65536L)
-    val sampled = sampleEvery > 1L
-    val sample =
-      if (!sampled) base
-      else base.filter(pmod(xxhash64(col("id")), lit(sampleEvery)) === 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pq =
-      try Pq.train(sample.select(col("v")), "v", dims, m, ks, iters = 3)
-      finally if (sampled) sample.unpersist(false)
+    val pq = Pq.trainOnSample(base, n, dims, m, ks)
     val codes = array((0 until pq.m).map(s =>
       graft.functions.VectorExpressions.nearest_centroid(
         slice(col("v"), s * pq.subDim + 1, pq.subDim), pq.codebooks(s).centroids)): _*)
@@ -627,8 +604,10 @@ object Similarity {
     // expansion-aware width FIRST bounds the writer at probeVolume/parts;
     // the training/member/count passes keep reading the narrow cache (a
     // cache-wide fix was measured at +43% wall — see the base comment).
-    // Statless inputs (LogicalRDD / localCheckpoint-backed frames) report
-    // spark.sql.defaultSizeInBytes (Long.MaxValue) — without this guard the
+    // Statless inputs (a `createDataFrame(rdd)` LogicalRDD, a streaming
+    // leaf) report spark.sql.defaultSizeInBytes (Long.MaxValue) — a
+    // localCheckpoint leaf carries its origin's estimate and stays known;
+    // without this guard the
     // 256 MB gate always passes and probeParts saturates at the 65536 cap,
     // a pathological exchange of the whole cached base (the same
     // unknown-stats trap Stage.ensureWide guards). Unknown stats keep the

@@ -80,7 +80,10 @@ object Stage {
   /** [[width]] priced from Catalyst's no-action optimized-plan estimate of
     * `df`: estimate × `expand` (what the stats cannot see — in-memory
     * expansion of compressed bytes, an explode's row multiplication) ÷
-    * `bytesPerTask`. */
+    * `bytesPerTask`. A frame without real statistics ([[statsKnown]]
+    * false: a `createDataFrame(rdd)` or streaming leaf) gets the session
+    * floor — its estimate is the `defaultSizeInBytes` sentinel, which
+    * would price the full cap (tens of thousands of empty tasks). */
   def estimateWidth(df: DataFrame, expand: BigDecimal, bytesPerTask: Long): Int =
     estimateWidth(df, df.queryExecution.optimizedPlan.stats.sizeInBytes,
       expand, bytesPerTask)
@@ -89,7 +92,8 @@ object Stage {
     * analyzed plan's, which also fed the caller's gate. */
   def estimateWidth(df: DataFrame, est: BigInt, expand: BigDecimal,
       bytesPerTask: Long): Int =
-    width(df, (BigDecimal(est) * expand / BigDecimal(bytesPerTask)).toBigInt)
+    if (!statsKnown(df)) df.sparkSession.sessionState.conf.numShufflePartitions
+    else width(df, (BigDecimal(est) * expand / BigDecimal(bytesPerTask)).toBigInt)
 
   /** Broadcast gate for a build the driver collects: [[DriverCollectBytes]]
     * (what fits an executor), CAPPED at the session's
@@ -194,15 +198,15 @@ object Stage {
     if (declaredWide) return df
     val bytes = analyzed.stats.sizeInBytes
     if (bytes >= BigInt(conf.defaultSizeInBytes)) {
-      // Unknown stats: non-file leaves (LogicalRDD, streaming sources)
-      // default to spark.sql.defaultSizeInBytes (Long.MaxValue), so the
-      // file-split geometry replay below says nothing about their width —
-      // and its quotient would overflow Int. Streaming plans cannot take
-      // the RDD round-trip at all (`df.rdd` throws AnalysisException on a
-      // streaming Dataset — one of the two statless cases this branch
-      // exists for); their micro-batch width is the source's to decide, so
-      // pass them through unchanged. Batch statless plans ask the RDD
-      // directly; the planner round-trip is the honest price.
+      // Unknown stats: leaves without statistics (`createDataFrame(rdd)`,
+      // streaming sources) default to spark.sql.defaultSizeInBytes
+      // (Long.MaxValue), so the file-split geometry replay below says
+      // nothing about their width — and its quotient would overflow Int.
+      // Streaming plans cannot take the RDD round-trip at all (`df.rdd`
+      // throws AnalysisException on a streaming Dataset); their micro-batch
+      // width is the source's to decide, so pass them through unchanged.
+      // Batch statless plans ask the RDD directly; the planner round-trip
+      // is the honest price.
       if (df.isStreaming) return df
       return if (df.rdd.getNumPartitions < target) widen(df) else df
     }
@@ -227,9 +231,11 @@ object Stage {
     * consequence in knnJoinIvf: probeParts saturated at the 65536 cap and
     * the whole cached base re-exchanged, the exact pathological plan the
     * statless guard exists to prevent. Checking the LEAVES is structural:
-    * a file-backed leaf propagates real file bytes, a LogicalRDD /
-    * localCheckpoint / memory-stream leaf reports exactly the sentinel,
-    * and no projection arithmetic has run yet at the leaf. */
+    * a file-backed leaf propagates real file bytes, a `createDataFrame(rdd)`
+    * LogicalRDD or a streaming leaf reports exactly the sentinel, and no
+    * projection arithmetic has run yet at the leaf. A `localCheckpoint`
+    * leaf ([[Materialize.checkpoint]]) carries its origin plan's estimate,
+    * so checkpointed frames keep their sizing. */
   def statsKnown(df: DataFrame): Boolean = {
     val sentinel = BigInt(df.sparkSession.sessionState.conf.defaultSizeInBytes)
     !df.queryExecution.analyzed.collectLeaves()

@@ -396,10 +396,10 @@ object TextOps {
     * separately so stages downstream of an RDD boundary can size from the
     * frame that still HAS statistics: `createDataFrame(rdd)` plans a
     * LogicalRDD whose size estimate is `spark.sql.defaultSizeInBytes`
-    * (Long.MaxValue), and a sizedByKey directly on such a frame saturates
-    * at the 65536 cap — tens of thousands of empty tasks. Callers compute
-    * the count from the pre-boundary window stream (an upper bound: the
-    * gated/matched stream is a subset with skinnier rows) and pass it
+    * (Long.MaxValue), and a sizedByKey directly on such a frame gets only
+    * the session floor ([[Stage.estimateWidth]] cannot price it). Callers
+    * compute the count from the pre-boundary window stream (an upper bound:
+    * the gated/matched stream is a subset with skinnier rows) and pass it
     * down. */
   private def sizedParts(df: DataFrame, expand: Double): Int =
     Stage.estimateWidth(df, expand, Stage.SortBytesPerTask)

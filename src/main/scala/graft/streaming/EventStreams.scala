@@ -461,10 +461,6 @@ object EventStreams {
       else throw new IllegalArgumentException(
         "semanticDedupFilterStream on a streaming frame needs an explicit " +
           "dims (a stream cannot be sampled before it starts)")
-    // Spark round(x, 6): BigDecimal HALF_UP — the batch op's cosine gate
-    def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
-        .doubleValue()
     val assigned = vecs.select(col(idCol).cast("long").as("vec_id"),
         col(vecCol).as("v"),
         graft.functions.VectorExpressions
@@ -486,7 +482,7 @@ object EventStreams {
               var j = 0
               val n = math.min(rv.length, d.v.length)
               while (j < n) { dot += rv(j).toDouble * d.v(j).toDouble; j += 1 }
-              round6(dot / (rNorm * norm)) >= tau
+              graft.functions.GenExpressions.roundHalfUp(dot / (rNorm * norm), 6) >= tau
             } match {
               case Some((admittedId, _, _)) =>
                 out += SemanticVerdict(d.vec_id, c, is_dup = true, dup_of = admittedId)

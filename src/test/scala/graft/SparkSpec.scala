@@ -5,11 +5,23 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** A streaming query a suite leaves running keeps taking micro-batches in
+    * the shared session, slowing every later suite: stop it and fail. */
+  override def afterAll(): Unit =
+    try {
+      val leaked = SparkSpec.session.streams.active.toSeq
+      leaked.foreach(_.stop())
+      assert(leaked.isEmpty, "streaming queries left running: " +
+        leaked.map(q => Option(q.name).getOrElse(q.id.toString)).mkString(", "))
+    } finally super.afterAll()
+
   def sf(dir: String, table: String) =
     spark.read.parquet(s"/root/testdata/$dir/$table.parquet")
 

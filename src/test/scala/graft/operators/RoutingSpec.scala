@@ -138,6 +138,31 @@ class RoutingSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.maxExchangeParts")
   }
 
+  test("estimateWidth: a statless frame gets the session floor; file-backed " +
+      "and checkpointed frames keep their estimate-priced width") {
+    val floor = spark.sessionState.conf.numShufflePartitions
+    val file = sf("sf0.001", "embeddings")
+    val statless = spark.createDataFrame(file.rdd, file.schema)
+    assert(!Stage.statsKnown(statless))
+    assert(Stage.sizedBuildParts(statless) == floor)
+    assert(Stage.estimateWidth(statless, 2, Stage.SortBytesPerTask) == floor)
+    assert(Stage.estimateWidth(statless, 100000, Stage.BuildBytesPerTask) == floor)
+    // a file-backed frame prices estimate × expand ÷ per-task bytes, as before
+    def priced(df: org.apache.spark.sql.DataFrame): Int =
+      Stage.width(df, (BigDecimal(df.queryExecution.optimizedPlan.stats.sizeInBytes) *
+        100000 / BigDecimal(Stage.BuildBytesPerTask)).toBigInt)
+    assert(priced(file) > floor)
+    assert(Stage.estimateWidth(file, 100000, Stage.BuildBytesPerTask) == priced(file))
+    assert(Stage.sizedBuildParts(file) == Stage.estimateWidth(file, 2, Stage.BuildBytesPerTask))
+    // a checkpoint leaf carries its origin's estimate: still known, still priced
+    val cp = Materialize.checkpoint(file)
+    try {
+      assert(Stage.statsKnown(cp))
+      assert(Stage.estimateWidth(cp, 100000, Stage.BuildBytesPerTask) == priced(cp))
+      assert(priced(cp) > floor)
+    } finally Materialize.release(cp)
+  }
+
   test("driver-collect gate: 2 GB, capped at spark.driver.maxResultSize " +
       "(0 = unlimited)") {
     val gb = 1L << 30

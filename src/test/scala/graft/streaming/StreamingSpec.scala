@@ -94,8 +94,13 @@ class StreamingSpec extends SparkSpec {
     mem.addData(events: _*)
     val q = EventStreams.sessionize(mem.toDS())
       .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
+      .outputMode("append").trigger(Trigger.Once()).start()
+    // one batch over all four events. A processing-time state timeout asks
+    // for a no-data batch after every batch, so under AvailableNow this
+    // query never terminates (nor does processAllAvailable return): it
+    // loops no-data batches for the rest of the JVM
+    try assert(q.awaitTermination(60000), "the single-batch query did not finish")
+    finally q.stop()
     val closed = spark.table("sessions").as[Session].collect()
     assert(closed.length == 1)
     assert(closed.head.user_id == 1 && closed.head.n_events == 2)
