@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Stage
+import graft.operators.{Generations, Stage}
 
 /** Multimodal (image/audio/video) column handling for training-data
   * pipelines: media as opaque `binary` columns with typed metadata, processed
@@ -427,23 +427,19 @@ object Multimodal {
     * function of the hash, which is what makes [[appendSigIndex]] possible
     * — an arriving batch lands in exactly the directories the base build
     * would have put it. A `meta` row pins `bands` so every later
-    * operation slices identically. */
+    * operation slices identically. The members commit as a fresh
+    * generation and the old index's tombstones and ingest markers are
+    * cleared ([[Generations.freshBuild]]). */
   def buildSigIndex(hashes: DataFrame, path: String, bands: Int = 4): Unit = {
     require(bands > 1 && 64 % bands == 0, "bands must divide 64 (and be > 1)")
     val spark = hashes.sparkSession
     import spark.implicits._
-    graft.operators.Generations.withMaintainerLease(spark, path) {
-    Seq(bands).toDF("bands").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
-    // generation-pointer layout (graft.operators.Generations — the
-    // KnnIndex machinery): write a fresh members-gen-N, swap CURRENT,
-    // GC superseded trees after the reader grace window
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val gen = graft.operators.Generations.next(fs, path)
-    writeSigMembers(hashes, bands, s"$path/members-gen-$gen", "overwrite")
-    graft.operators.Generations.commit(fs, path, gen)
-    graft.operators.Generations.vacuum(spark, path)
+    Generations.withMaintainerLease(spark, path) {
+      Generations.freshBuild(spark, path) { dir =>
+        Seq(bands).toDF("bands").coalesce(1)
+          .write.mode("overwrite").parquet(s"$path/meta")
+        writeSigMembers(hashes, bands, dir, "overwrite")
+      }
     }
   }
 
@@ -451,7 +447,7 @@ object Multimodal {
     * generation pointer ([[graft.operators.Generations.resolve]]); legacy
     * pre-generation trees (`path/members`) still resolve. */
   def sigMembersDir(spark: SparkSession, path: String): String =
-    graft.operators.Generations.resolve(spark, path)
+    Generations.resolve(spark, path)
 
   /** Ingest a delta batch of signatures into the stored index — work
     * (banding CPU, bytes written) ∝ |delta|; the base directories are
@@ -459,7 +455,7 @@ object Multimodal {
     * the LIVE generation, the KnnIndex.append contract). */
   def appendSigIndex(newHashes: DataFrame, path: String): Unit = {
     val spark = newHashes.sparkSession
-    graft.operators.Generations.withMaintainerLease(spark, path) {
+    Generations.withMaintainerLease(spark, path) {
       writeSigMembers(newHashes, sigIndexBands(spark, path),
         sigMembersDir(spark, path), "append")
     }
@@ -471,11 +467,8 @@ object Multimodal {
 
   /** Has `batchId` already been committed by [[appendSigBatch]]? */
   def sigIngestCommitted(spark: SparkSession, path: String,
-      batchId: Long): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(s"$path/ingest_log/batch-$batchId"))
-  }
+      batchId: Long): Boolean =
+    Generations.ingestCommitted(spark, path, batchId)
 
   /** EXACTLY-ONCE [[appendSigIndex]]: ingest a signature batch under a
     * caller-supplied batch id (Structured Streaming's `foreachBatch` id —
@@ -486,59 +479,16 @@ object Multimodal {
     * at-least-once duplicates (see [[compactSigIndex]]), so a plain
     * replayed [[appendSigIndex]] can never change an ANSWER — what this
     * path removes is the duplicate BYTES a replay would park in the tree
-    * until forever (no compact dedups them). Same protocol as
-    * [[graft.operators.KnnIndex.appendBatch]]:
-    *
-    *  1. committed-marker check (`ingest_log/batch-<id>`);
-    *  2. stage the banded rows to `staging/batch-<id>` (Overwrite — a
-    *     half-written staging tree is simply rewritten);
-    *  3. delete any `ingest-b<id>-*` files a partial previous move left;
-    *  4. rename staged files into the live `band=/bucket=` layout under
-    *     deterministic batch-scoped names — metadata-only moves;
-    *  5. commit the marker, delete the staging tree.
-    *
-    * A crash between 4 and 5 replays 2–4 onto the same names — idempotent;
-    * earlier crashes leave the live tree untouched. Work ∝ |delta|. */
+    * until forever (no compact dedups them). The staged,
+    * marker-committed protocol is [[Generations]]'s, shared with
+    * [[graft.operators.KnnIndex.appendBatch]]. Work ∝ |delta|. */
   def appendSigBatch(newHashes: DataFrame, path: String,
       batchId: Long): Boolean = {
     val spark = newHashes.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (sigIngestCommitted(spark, path, batchId)) {
-      // a crash between the marker commit and the staging delete leaves
-      // the staged copy behind; the committed replay cleans it (the only
-      // code path guaranteed to run after such a crash)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/staging/batch-$batchId"), true)
-      return false
-    }
-    graft.operators.Generations.withMaintainerLease(spark, path) {
-    val live = sigMembersDir(spark, path)
-    val staging = s"$path/staging/batch-$batchId"
-    writeSigMembers(newHashes, sigIndexBands(spark, path), staging,
-      "overwrite")
-    val leftovers = fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"$live/band=*/bucket=*/ingest-b$batchId-*.parquet"))
-    if (leftovers != null) leftovers.foreach(st => fs.delete(st.getPath, false))
-    val liveRoot = new org.apache.hadoop.fs.Path(live)
-    val staged = fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"$staging/band=*/bucket=*/*.parquet"))
-    var seq = 0
-    if (staged != null) staged.foreach { st =>
-      val bucketDir = st.getPath.getParent
-      val destDir = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(liveRoot, bucketDir.getParent.getName),
-        bucketDir.getName)
-      fs.mkdirs(destDir)
-      fs.rename(st.getPath, new org.apache.hadoop.fs.Path(destDir,
-        s"ingest-b$batchId-$seq.parquet"))
-      seq += 1
-    }
-    val marker = new org.apache.hadoop.fs.Path(s"$path/ingest_log/batch-$batchId")
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    true
+    Generations.appendBatch(spark, path, batchId, "band=*/bucket=*") {
+      (_, staging) =>
+        writeSigMembers(newHashes, sigIndexBands(spark, path), staging,
+          "overwrite")
     }
   }
 
@@ -566,18 +516,12 @@ object Multimodal {
   ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     hashes.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      if (verdictsDir != null) {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(verdictsDir), spark.sparkContext.hadoopConfiguration)
-        val done = new org.apache.hadoop.fs.Path(
-          s"$verdictsDir/batch=$batchId/_SUCCESS")
-        // the verdict ledger must land BEFORE the members commit: replay
-        // after a crash between the two re-reads the batch as still-new
-        // (marker absent ⇒ members absent ⇒ verdicts re-run identically)
-        if (!fs.exists(done) && !sigIngestCommitted(spark, path, batchId))
-          nearDupDelta(batch, path, maxHamming)
-            .write.mode("overwrite").parquet(s"$verdictsDir/batch=$batchId")
-      }
+      // the verdict ledger must land BEFORE the members commit: replay
+      // after a crash between the two re-reads the batch as still-new
+      // (marker absent ⇒ members absent ⇒ verdicts re-run identically)
+      if (verdictsDir != null && !sigIngestCommitted(spark, path, batchId))
+        Generations.writeBatchOnce(spark, verdictsDir, batchId)(
+          nearDupDelta(batch, path, maxHamming))
       appendSigBatch(batch, path, batchId)
       if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0)
         maintainSig(spark, path)
@@ -595,28 +539,32 @@ object Multimodal {
     // dominating the bytes and every later read paying the listing. With
     // it the tree holds ≤ parts files per directory (parts ≪ task count),
     // sized from the banded row volume at ~128 MB per write task.
-    val spark = hashes.sparkSession
-    val floor = spark.sparkContext.defaultParallelism
     val est =
       if (Stage.statsKnown(hashes))
-        (hashes.queryExecution.analyzed.stats.sizeInBytes / 12).toLong
-      else hashes.count()
-    val parts = math.max(math.min(floor, bands * SigBuckets),
-      math.min(bands.toLong * SigBuckets, est * bands * 24L / (128L << 20)).toInt)
+        hashes.queryExecution.analyzed.stats.sizeInBytes / 12
+      else BigInt(hashes.count())
     val banded = hashes
       .select(col("id").cast("long").as("id"), col("hash").cast("long").as("hash"),
         explode(sequence(lit(0), lit(bands - 1))).as("band"))
       .withColumn("bits", expr(s"shiftrightunsigned(hash, band * $width) & $mask"))
       .withColumn("bucket", pmod(col("bits"), lit(SigBuckets)).cast("int"))
-      .repartition(parts, col("band"), col("bucket"))
-    // concurrent partition writers — skip FileFormatWriter's per-task
-    // sort (the KnnIndex.writeMembersTo rule; see compactSigIndex)
-    val prevWriters = spark.conf
-      .get("spark.sql.maxConcurrentOutputFileWriters", "0")
-    spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", "32")
-    try banded.write.mode(mode).partitionBy("band", "bucket").parquet(dest)
-    finally
-      spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", prevWriters)
+    writeSigTree(banded, bands, est * bands * 24 / (128L << 20), dest, mode)
+  }
+
+  /** Write banded signature rows as a `band=/bucket=` tree with `want`
+    * write tasks, clamped to at most one task per (band, bucket)
+    * directory and at least the default parallelism (itself capped at
+    * that directory count). Tasks hold whole (band, bucket) groups, so
+    * few writers are open at once ([[Generations.withConcurrentWriters]]). */
+  private def writeSigTree(rows: DataFrame, bands: Int, want: BigInt,
+      dest: String, mode: String): Unit = {
+    val spark = rows.sparkSession
+    val dirs = bands * SigBuckets
+    val parts = Stage.clamp(
+      math.min(spark.sparkContext.defaultParallelism, dirs), dirs, want)
+    Generations.withConcurrentWriters(spark)(
+      rows.repartition(parts, col("band"), col("bucket"))
+        .write.mode(mode).partitionBy("band", "bucket").parquet(dest))
   }
 
   /** The signature-index compaction-policy inputs — pure FS metadata, no
@@ -632,16 +580,6 @@ object Multimodal {
       if (dirs <= 0) 0.0 else files.toDouble / dirs
   }
 
-  /** The tombstone log as a DataFrame, when any deletes are pending. */
-  private def sigTombstonesDf(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")))
-      Some(spark.read.parquet(s"$path/tombstones"))
-    else None
-  }
-
   /** Tombstone media ids — O(|ids|) append to a side log, no tree
     * rewrite (the [[graft.operators.KnnIndex.delete]] shape for the
     * signature index: the GDPR-removal path a media corpus needs).
@@ -651,21 +589,16 @@ object Multimodal {
     * and truncates it. A tombstone wins over any append of the same id
     * until the next compact — re-adding a deleted id requires compacting
     * first, the standard tombstone semantics. A MAINTAINER operation
-    * like every mutator (the delete-vs-compact truncation race is the
-    * lease's sharpest case). */
+    * like every mutator ([[Generations.tombstone]]). */
   def deleteSig(ids: DataFrame, idCol: String, path: String): Unit =
-    graft.operators.Generations.withMaintainerLease(ids.sparkSession, path) {
-      ids.select(col(idCol).cast("long").as("id")).distinct()
-        .write.mode("append").parquet(s"$path/tombstones")
-    }
+    Generations.tombstone(ids, idCol, path)
 
   /** One FS glob over the live generation. */
   def sigHealth(spark: SparkSession, path: String): SigHealth = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val live = sigMembersDir(spark, path)
-    val files = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"$live/band=*/bucket=*/*.parquet"))).toSeq.flatten
+    val files = Option(Generations.fileSystem(spark, path).globStatus(
+      new org.apache.hadoop.fs.Path(s"$live/band=*/bucket=*/*.parquet")))
+      .toSeq.flatten
     val dirs = files.map(_.getPath.getParent.toString).distinct.size
     SigHealth(dirs.toLong, files.size.toLong)
   }
@@ -686,7 +619,7 @@ object Multimodal {
       maxMeanFilesPerDir: Double = 4.0,
       maxTombstoneFrac: Double = 0.02): Boolean =
     sigHealth(spark, path).meanFilesPerDir > maxMeanFilesPerDir ||
-      sigTombstonesDf(spark, path).exists { ts =>
+      Generations.tombstones(spark, path).exists { ts =>
         val t = ts.select(col("id")).distinct().count()
         t > 0 && {
           val members =
@@ -701,51 +634,27 @@ object Multimodal {
     * files into one coalesced tree — work ∝ |stored bytes|, one
     * (band, bucket)-keyed exchange, rows unchanged (banding is already
     * materialized; [[nearDupDelta]]'s min-id verdicts are insensitive to
-    * any at-least-once append duplicates, so no dedup pass is owed).
-    * Crash- AND reader-safe via the shared generation-pointer swap
-    * ([[graft.operators.Generations]]): the new tree commits by CURRENT
-    * rewrite, superseded generations stay for the GC grace window.
+    * any at-least-once append duplicates, so no dedup pass is owed),
+    * tombstones applied physically. Crash- AND reader-safe via the
+    * shared swap ([[Generations.compactSwap]]).
     * Single-MAINTAINER like [[graft.operators.KnnIndex.compact]]: don't
     * run concurrently with [[appendSigIndex]] (a batch landing mid-rewrite
     * stays in the superseded tree); readers are safe by construction. */
   def compactSigIndex(spark: SparkSession, path: String): Unit =
-    graft.operators.Generations.withMaintainerLease(spark, path) {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    Generations.withMaintainerLease(spark, path) {
     val live = sigMembersDir(spark, path)
     val stored0 = spark.read.parquet(live)
-    // tombstones applied PHYSICALLY here (and the log truncated after the
-    // commit) — the tiny distinct log broadcasts into one anti-join
-    val stored = sigTombstonesDf(spark, path).fold(stored0)(ts =>
+    // the tiny distinct tombstone log broadcasts into one anti-join
+    val stored = Generations.tombstones(spark, path).fold(stored0)(ts =>
       stored0.join(broadcast(ts.select(col("id")).distinct()),
         Seq("id"), "left_anti"))
     val bands = sigIndexBands(spark, path)
-    val bytes = fs.getContentSummary(
+    val bytes = Generations.fileSystem(spark, path).getContentSummary(
       new org.apache.hadoop.fs.Path(live)).getLength
-    // ~128 MB of stored bytes per write task (×2 in-memory expansion),
-    // capped at one task per (band, bucket) directory — the
-    // writeSigMembers sizing read back from the files instead of a count
-    val floor = spark.sparkContext.defaultParallelism
-    val parts = math.max(math.min(floor, bands * SigBuckets),
-      math.min(bands.toLong * SigBuckets, bytes * 2 / (128L << 20)).toInt)
-    val gen = graft.operators.Generations.next(fs, path)
-    // concurrent partition writers — the KnnIndex.writeMembersTo rule:
-    // skip FileFormatWriter's per-task sort (the measured 12 GB one-time
-    // spill on the 50M sig compact); tasks hold whole (band, bucket)
-    // groups, so few writers are open at once
-    val prevWriters = spark.conf
-      .get("spark.sql.maxConcurrentOutputFileWriters", "0")
-    spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", "32")
-    try
-      stored.repartition(parts, col("band"), col("bucket"))
-        .write.mode("overwrite").partitionBy("band", "bucket")
-        .parquet(s"$path/members-gen-$gen")
-    finally
-      spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", prevWriters)
-    graft.operators.Generations.commit(fs, path, gen)
-    val ts = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (fs.exists(ts)) fs.delete(ts, true)
-    graft.operators.Generations.vacuum(spark, path)
+    // ~128 MB of stored bytes per write task (×2 in-memory expansion) —
+    // the writeSigMembers sizing read back from the files instead of a count
+    Generations.compactSwap(spark, path)(
+      writeSigTree(stored, bands, BigInt(bytes) * 2 / (128L << 20), _, "overwrite"))
     }
 
   /** The policy face of [[compactSigIndex]] — compacts IFF
@@ -758,7 +667,7 @@ object Multimodal {
     if (go) compactSigIndex(spark, path)
     // age out generations the PREVIOUS compact superseded (a few FS ops)
     // — the KnnIndex.maintain rule
-    else graft.operators.Generations.vacuum(spark, path)
+    else Generations.vacuum(spark, path)
     go
   }
 
@@ -825,7 +734,7 @@ object Multimodal {
     // logical delete: tombstoned members can no longer be dup_of_old —
     // the arriving copy is re-judged against the SURVIVING corpus (the
     // KnnIndex.knnJoinDelta tombstone rule; tiny distinct log broadcasts)
-    val prunedLive = sigTombstonesDf(spark, path).fold(pruned)(ts =>
+    val prunedLive = Generations.tombstones(spark, path).fold(pruned)(ts =>
       pruned.join(broadcast(ts.select(col("id")).distinct()),
         Seq("id"), "left_anti"))
     // broadcast gate ([[Stage.driverCollectGate]]): |delta|·bands skinny

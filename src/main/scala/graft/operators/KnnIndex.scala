@@ -105,8 +105,10 @@ object KnnIndex {
   }
 
   /** Train + write a fresh index generation at `path` (overwrites any
-    * previous one). `nLists = 0` applies the knnJoinIvf occupancy-64
-    * policy; `dims = 0` derives the width from one sampled row.
+    * previous one, and clears its tombstones and ingest markers — the
+    * [[Generations.freshBuild]] tail). `nLists = 0` applies the
+    * knnJoinIvf occupancy-64 policy; `dims = 0` derives the width from
+    * one sampled row.
     *
     * `payloadCol`, when given, stores one per-member attribute (a label, a
     * source tag, a license class) INSIDE both directory columns —
@@ -135,35 +137,22 @@ object KnnIndex {
     val dimsActual = Stage.deriveDims(base, "v", dims, requireNonEmpty = true)
     val n = math.max(1L, base.count())
     val lists = if (nLists > 0) nLists else math.max(8L, n / 64L).toInt
-    // a fresh generation invalidates every piece of the OLD one's
-    // lifecycle state: stale tombstones would filter new members that
-    // happen to reuse an id, and stale ingest markers would make
-    // [[appendBatch]] silently drop a new campaign's batches whose engine
-    // batch ids collide with the previous stream's
-    val fsb = hadoopFs(spark, path)
-    Seq("tombstones", "ingest_log", "staging").foreach(d =>
-      fsb.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
-    val pq = Pq.trainOnSample(base, n, dimsActual, m, ks)
-    val meta = Meta(lists, dimsActual, m, ks, pq.subDim,
-      pq.codebooks.map(_.centroids))
-    Seq((meta.nLists, meta.dims, meta.m, meta.ks, meta.subDim))
-      .toDF("n_lists", "dims", "m", "ks", "sub_dim")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
-    meta.codebooks.zipWithIndex.flatMap { case (cb, s) =>
-      cb.zipWithIndex.flatMap { case (cent, c) =>
-        cent.zipWithIndex.map { case (x, j) => (s, c, j, x) }
-      }
-    }.toSeq.toDF("sub", "code", "dim", "value")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/codebook")
-    // a fresh GENERATION directory + pointer swap, not an in-place
-    // overwrite: readers mid-query on the old tree keep a complete
-    // snapshot until vacuum's grace window closes over it
-    val gen = Generations.next(fsb, path)
-    writeMembersTo(base, meta, n * rowBytes(meta) * 2,
-      s"$path/members-gen-$gen", SaveMode.Overwrite)
-    Generations.commit(fsb, path, gen)
-    vacuum(spark, path)
-    meta
+    Generations.freshBuild(spark, path) { dir =>
+      val pq = Pq.trainOnSample(base, n, dimsActual, m, ks)
+      val meta = Meta(lists, dimsActual, m, ks, pq.subDim,
+        pq.codebooks.map(_.centroids))
+      Seq((meta.nLists, meta.dims, meta.m, meta.ks, meta.subDim))
+        .toDF("n_lists", "dims", "m", "ks", "sub_dim")
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
+      meta.codebooks.zipWithIndex.flatMap { case (cb, s) =>
+        cb.zipWithIndex.flatMap { case (cent, c) =>
+          cent.zipWithIndex.map { case (x, j) => (s, c, j, x) }
+        }
+      }.toSeq.toDF("sub", "code", "dim", "value")
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/codebook")
+      writeMembersTo(base, meta, n * rowBytes(meta) * 2, dir, SaveMode.Overwrite)
+      meta
+    }
     }
   }
 
@@ -194,26 +183,8 @@ object KnnIndex {
 
   /** Resolve the LIVE members tree for the index at `path` — the single
     * read point every reader and appender goes through, which is what
-    * makes [[compact]] reader-safe: a compaction writes a NEW
-    * `members-gen-<N>` directory beside the live one and commits it by
-    * atomically swapping the tiny `CURRENT` pointer (temp + rename, the
-    * ManifestSidecarFormat ordering), so a query that resolved the tree
-    * before the commit keeps reading a complete, untouched generation
-    * for as long as [[vacuum]]'s grace window (default 15 min,
-    * `spark.graft.index.gcGraceMs`) keeps it on disk.
-    *
-    * Resolution order:
-    *  1. `CURRENT`'s generation, when the file parses and its directory
-    *     exists — the normal path (one FS read, no data job);
-    *  2. a torn/missing `CURRENT` (the delete+rename commit has a
-    *     sub-millisecond absent window; a tampered file is the crash-replay
-    *     spec) falls back to the HIGHEST completely-written generation —
-    *     `_SUCCESS` present (every generation is one parquet Overwrite) and
-    *     not `_SUPERSEDED`-marked, then highest overall;
-    *  3. the pre-generation legacy layout `path/members`.
-    *
-    * Machinery shared with the multimodal signature index —
-    * [[graft.operators.Generations]]. */
+    * makes [[compact]] reader-safe ([[Generations.resolve]] has the
+    * resolution order). */
   def membersDir(spark: SparkSession, path: String): String =
     Generations.resolve(spark, path)
 
@@ -272,14 +243,9 @@ object KnnIndex {
     }
   }
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-
   /** Has `batchId` already been committed by [[appendBatch]]? */
   def ingestCommitted(spark: SparkSession, path: String, batchId: Long): Boolean =
-    hadoopFs(spark, path).exists(
-      new org.apache.hadoop.fs.Path(s"$path/ingest_log/batch-$batchId"))
+    Generations.ingestCommitted(spark, path, batchId)
 
   /** EXACTLY-ONCE [[append]]: ingest a delta batch under a caller-supplied
     * batch id (Structured Streaming's `foreachBatch` id — the unit the
@@ -289,68 +255,20 @@ object KnnIndex {
     * A plain [[append]] is at-least-once under replay: a crash after its
     * files commit but before the caller records progress re-appends the
     * batch, and duplicate members mean duplicate ids in shortlists —
-    * degraded answers, silently. This path makes the replay a no-op:
-    *
-    *  1. committed-marker check (`ingest_log/batch-<id>`) — a fully
-    *     committed batch short-circuits;
-    *  2. the grouped directory rows stage to `staging/batch-<id>`
-    *     (Overwrite — a half-written staging tree from a crashed attempt is
-    *     simply rewritten);
-    *  3. any `ingest-b<id>-*` files a PARTIAL previous move left in the
-    *     live tree are deleted (one FS glob, no data read);
-    *  4. the staged files RENAME into the bucket layout under
-    *     deterministic batch-scoped names (`ingest-b<id>-<seq>.parquet`) —
-    *     metadata-only moves, no byte copy;
-    *  5. the marker commits, the staging tree deletes.
-    *
-    * A crash between 4 and 5 replays 2–4 over the same deterministic names
-    * — idempotent; a crash earlier leaves the live tree untouched. Work is
-    * ∝ |delta| like [[append]] (one staging write + O(files) renames). */
+    * degraded answers, silently. This path makes the replay a no-op via
+    * the staged, marker-committed protocol [[Generations]] states once;
+    * work is ∝ |delta| like [[append]]. */
   def appendBatch(df: DataFrame, idCol: String, vecCol: String, path: String,
-      batchId: Long, payloadCol: String = null): Boolean = {
-    val spark = df.sparkSession
-    if (ingestCommitted(spark, path, batchId)) {
-      // a crash between the marker commit and the staging delete leaves
-      // the staged copy behind; the committed replay is where it gets
-      // cleaned (the only code path guaranteed to run after such a crash)
-      hadoopFs(spark, path).delete(
-        new org.apache.hadoop.fs.Path(s"$path/staging/batch-$batchId"), true)
-      return false
+      batchId: Long, payloadCol: String = null): Boolean =
+    Generations.appendBatch(df.sparkSession, path, batchId, "nl=*/bucket=*") {
+      (live, staging) =>
+        val meta = metaForIn(df.sparkSession, path, live)
+        requirePayloadParity(df, path, payloadCol)
+        val base = prep(df, idCol, vecCol, payloadCol)
+        val n = math.max(1L, base.count())
+        writeMembersTo(base, meta, n * rowBytes(meta) * 2, staging,
+          SaveMode.Overwrite, withCnt = storedHasCntIn(df.sparkSession, live))
     }
-    Generations.withMaintainerLease(spark, path) {
-    val live = membersDir(spark, path)
-    val meta = metaForIn(spark, path, live)
-    requirePayloadParity(df, path, payloadCol)
-    val base = prep(df, idCol, vecCol, payloadCol)
-    val n = math.max(1L, base.count())
-    val staging = s"$path/staging/batch-$batchId"
-    writeMembersTo(base, meta, n * rowBytes(meta) * 2, staging,
-      SaveMode.Overwrite, withCnt = storedHasCntIn(spark, live))
-    val fs = hadoopFs(spark, path)
-    val membersRoot = new org.apache.hadoop.fs.Path(live)
-    val leftovers = fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"$live/nl=*/bucket=*/ingest-b$batchId-*.parquet"))
-    if (leftovers != null) leftovers.foreach(st => fs.delete(st.getPath, false))
-    val staged = fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"$staging/nl=*/bucket=*/*.parquet"))
-    var seq = 0
-    if (staged != null) staged.foreach { st =>
-      val bucketDir = st.getPath.getParent
-      val destDir = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(membersRoot, bucketDir.getParent.getName),
-        bucketDir.getName)
-      fs.mkdirs(destDir)
-      fs.rename(st.getPath, new org.apache.hadoop.fs.Path(destDir,
-        s"ingest-b$batchId-$seq.parquet"))
-      seq += 1
-    }
-    val marker = new org.apache.hadoop.fs.Path(s"$path/ingest_log/batch-$batchId")
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    true
-    }
-  }
 
   /** Continuous ingest: a `foreachBatch` writer that [[appendBatch]]es
     * every micro-batch of an embedding STREAM into the stored index —
@@ -398,14 +316,9 @@ object KnnIndex {
     emb.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       appendBatch(batch, idCol, vecCol, path, batchId, payloadCol)
       val spark = batch.sparkSession
-      if (verdictsDir != null) {
-        val done = new org.apache.hadoop.fs.Path(
-          s"$verdictsDir/batch=$batchId/_SUCCESS")
-        if (!hadoopFs(spark, verdictsDir).exists(done))
-          dedupDelta(batch, idCol, vecCol, path, tau, k, nprobe)
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$verdictsDir/batch=$batchId")
-      }
+      if (verdictsDir != null)
+        Generations.writeBatchOnce(spark, verdictsDir, batchId)(
+          dedupDelta(batch, idCol, vecCol, path, tau, k, nprobe))
       if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0)
         maintain(spark, path)
       ()
@@ -433,12 +346,8 @@ object KnnIndex {
       nprobe: Int = 4
   ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     anchors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val done = new org.apache.hadoop.fs.Path(s"$outDir/batch=$batchId/_SUCCESS")
-      if (!hadoopFs(spark, outDir).exists(done))
-        hardNegativesDelta(batch, idCol, vecCol, labelCol, path, k, nprobe)
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-      ()
+      Generations.writeBatchOnce(batch.sparkSession, outDir, batchId)(
+        hardNegativesDelta(batch, idCol, vecCol, labelCol, path, k, nprobe))
     }
 
   /** Tombstone a set of member ids — O(|ids|) append to a side log, no
@@ -449,15 +358,9 @@ object KnnIndex {
     * deleted id requires compacting first, the standard tombstone
     * semantics.
     *
-    * A MAINTAINER operation like every mutator: a delete racing a
-    * concurrent [[compact]] could land between compact's tombstone read
-    * and its log truncation and be silently LOST — the lease turns that
-    * race into a typed [[ConcurrentMaintainerException]]. */
+    * A MAINTAINER operation like every mutator ([[Generations.tombstone]]). */
   def delete(ids: DataFrame, idCol: String, path: String): Unit =
-    Generations.withMaintainerLease(ids.sparkSession, path) {
-      ids.select(col(idCol).cast("long").as("id")).distinct()
-        .write.mode(SaveMode.Append).parquet(s"$path/tombstones")
-    }
+    Generations.tombstone(ids, idCol, path)
 
   /** Compact the index in place: one directory row per cell again (delta
     * appends leave one per (cell, batch)), tombstones applied physically,
@@ -469,21 +372,12 @@ object KnnIndex {
     * ∝ |stored bytes| — the amortized cost that keeps a long append
     * campaign's read path at its build-time shape.
     *
-    * Crash-safe AND reader-safe (the generation-pointer swap): the
-    * compacted tree is written as a fresh `members-gen-<N>` directory
-    * beside the live one, committed by atomically swapping the tiny
-    * `CURRENT` pointer (temp + rename), and only then is the tombstone
-    * log deleted and the superseded generation handed to [[vacuum]],
-    * which keeps it on disk for a grace window
-    * (`spark.graft.index.gcGraceMs`, default 15 min). A crash at any
-    * point leaves `CURRENT` aimed at a complete generation (a stranded
-    * uncommitted tree is invisible to [[membersDir]] and GC'd later); a
-    * crash before the log delete merely re-applies already-removed ids
-    * (the anti-join of an absent id is a no-op). A READER concurrent with
-    * the swap is safe end-to-end: it resolved the old tree through
-    * [[membersDir]] before the commit and that tree stays complete and
-    * untouched until its grace window closes — the r14 two-rename swap's
-    * missing-tree window is gone.
+    * Crash-safe AND reader-safe: the compacted tree commits through the
+    * generation-pointer swap ([[Generations.compactSwap]] — new
+    * generation, `CURRENT` commit, tombstone-log truncation, [[vacuum]]).
+    * A READER concurrent with the swap resolved the old tree through
+    * [[membersDir]] before the commit, and that tree stays complete and
+    * untouched until its grace window closes.
     *
     * SINGLE-MAINTAINER CONTRACT (writers only, readers are now safe):
     * compact must not run concurrently with
@@ -501,8 +395,7 @@ object KnnIndex {
     Generations.withMaintainerLease(spark, path) {
     val meta0 = metaFor(spark, path)
     val meta = if (nLists > 0) meta0.copy(nLists = nLists) else meta0
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = Generations.fileSystem(spark, path)
     // residue from a PRE-generation (r14) crashed run: tmp is incomplete
     // by definition; an old tree survives only a crash between the two
     // renames, in which case the legacy live tree may be missing —
@@ -529,20 +422,15 @@ object KnnIndex {
     val rows = stored
       .select(explode(col("vmem")).as("r"))
       .select(rowCols: _*)
-    val kept = tombstonesDf(spark, path)
+    val kept = Generations.tombstones(spark, path)
       .fold(rows)(ts => rows.join(ts, Seq("id"), "left_anti"))
     // size the rebuild exchange from the stored file bytes (×2 in-memory
     // expansion) — no count job over the base; a tombstone-heavy log only
     // overestimates, which costs nothing
     val bytes = fs.getContentSummary(
       new org.apache.hadoop.fs.Path(live)).getLength * 2
-    val gen = Generations.next(fs, path)
-    writeMembersTo(kept, meta, bytes, s"$path/members-gen-$gen",
-      SaveMode.Overwrite)
-    Generations.commit(fs, path, gen)
-    val ts = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (fs.exists(ts)) fs.delete(ts, true)
-    vacuum(spark, path)
+    Generations.compactSwap(spark, path)(
+      writeMembersTo(kept, meta, bytes, _, SaveMode.Overwrite))
     meta
     }
 
@@ -643,27 +531,14 @@ object KnnIndex {
     // files meant near-empty reader batches). 8 MB groups ≈ 400 rows ≈
     // ~12 MB decoded per task; the fix rides in the TREE, so any stock
     // session reads it safely.
-    // Concurrent partition writers instead of FileFormatWriter's
-    // sort-by-partition-columns: each write task holds whole buckets (the
-    // repartition above), so at most a handful of (nl, bucket) leaves are
-    // open at once — but the default sort path buffers the task's ENTIRE
-    // ~128 MB share through a spillable sorter whose 75 MB execution
-    // slice (32 concurrent tasks, protocol heap) forces one spill
-    // generation per task at 50M-class generations: the measured
-    // 2.4–16 GB "one-time rewrite spill" on build/compact rows. With
-    // concurrent writers the rows stream straight into the (8 MB
-    // row-group) parquet writers and the sorter never materializes.
-    // Writer memory is bounded: ≤ 32 open writers × one row group.
-    val sess = base.sparkSession
-    val prevWriters = sess.conf
-      .get("spark.sql.maxConcurrentOutputFileWriters", "0")
-    sess.conf.set("spark.sql.maxConcurrentOutputFileWriters", "32")
-    try
+    // Each write task holds whole buckets (the repartition above), so the
+    // rows stream straight into concurrent (8 MB row-group) parquet
+    // writers and FileFormatWriter's sorter never materializes
+    // ([[Generations.withConcurrentWriters]]).
+    Generations.withConcurrentWriters(base.sparkSession)(
       keyed.write.mode(mode)
         .option("parquet.block.size", String.valueOf(8L << 20))
-        .partitionBy("nl", "bucket").parquet(dest)
-    finally
-      sess.conf.set("spark.sql.maxConcurrentOutputFileWriters", prevWriters)
+        .partitionBy("nl", "bucket").parquet(dest))
   }
 
   /** The nLists the stored members were assigned with — read from the
@@ -671,8 +546,7 @@ object KnnIndex {
     * back to the build-time `meta` row for a pre-resplit layout. */
   private def storedNLists(spark: SparkSession, live: String,
       fallback: Int): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(live), spark.sparkContext.hadoopConfiguration)
+    val fs = Generations.fileSystem(spark, live)
     val members = new org.apache.hadoop.fs.Path(live)
     if (!fs.exists(members)) fallback
     else fs.listStatus(members).iterator
@@ -716,11 +590,10 @@ object KnnIndex {
       .select(col("cell"), cnt.as("batch_members"))
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("dir_rows"), sum(col("batch_members")).as("occ"))
-    val tombs = tombstonesDf(spark, path)
+    val tombs = Generations.tombstones(spark, path)
       .map(_.distinct().count()).getOrElse(0L)
-    val fs = hadoopFs(spark, path)
-    val files = fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"$live/nl=*/bucket=*/*.parquet"))
+    val files = Generations.fileSystem(spark, path).globStatus(
+      new org.apache.hadoop.fs.Path(s"$live/nl=*/bucket=*/*.parquet"))
     val nFiles = if (files == null) 0 else files.length
     perCell.agg(
       count(lit(1)).as("cells"),
@@ -769,7 +642,7 @@ object KnnIndex {
     // ids (or ids absent from the tree) would inflate tombstoneFrac and
     // fire shouldCompact prematurely — the log is tiny by design, so the
     // distinct costs nothing
-    val tombs = tombstonesDf(spark, path).map(_.distinct().count()).getOrElse(0L)
+    val tombs = Generations.tombstones(spark, path).map(_.distinct().count()).getOrElse(0L)
     Health(r.getAs[Long]("cells"), r.getAs[Long]("members"),
       r.getAs[Double]("mean_dir_rows"), tombs)
   }
@@ -829,15 +702,6 @@ object KnnIndex {
     if (go) compact(spark, path, nLists)
     else vacuum(spark, path)
     go
-  }
-
-  /** The tombstone log as a DataFrame, when any deletes are pending. */
-  private def tombstonesDf(spark: SparkSession, path: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")))
-      Some(spark.read.parquet(s"$path/tombstones"))
-    else None
   }
 
   /** Load the persisted metadata + codebook. Two bounded driver collects
@@ -985,7 +849,7 @@ object KnnIndex {
     // promote unseen members — exact while `cand` covers the probed cells'
     // surviving members (see the restrict scaladoc), the LSM
     // read-amplification tradeoff compact() resets
-    val tombs = tombstonesDf(spark, path)
+    val tombs = Generations.tombstones(spark, path)
     val rescoreK =
       if (tombs.isDefined || restrict.isDefined || wantPayload) cand
       else k
@@ -1140,7 +1004,7 @@ object KnnIndex {
       .filter(col("pay").isNotNull)
     val nDelta = math.max(1L, base.count())
     val cand = math.max(k, if (kCand > 0) kCand else 4 * k)
-    val tombs = tombstonesDf(spark, path)
+    val tombs = Generations.tombstones(spark, path)
     val rescoreK =
       if (tombs.isDefined || restrict.isDefined || payloadIn.isDefined) cand
       else k

@@ -505,8 +505,12 @@ object EventStreams {
       n_events: Long)
 
   /** Stateful sessionization with `flatMapGroupsWithState`: a session closes
-    * after `gapMs` of inactivity (event-time via watermark + processing-time
-    * state timeout). Emits one row per closed session. */
+    * after `gapMs` of inactivity in EVENT time — when a later event of the
+    * same user arrives more than `gapMs` after it, or when the watermark
+    * passes its last event + `gapMs` (an event-time state timeout). Emits
+    * one row per closed session. Under `Trigger.AvailableNow()` the query
+    * ends once the watermark stops advancing; sessions the watermark has
+    * not passed stay open in the state. */
   def sessionize(
       events: Dataset[Event],
       gapMs: Long = 30 * 60 * 1000L,
@@ -520,7 +524,7 @@ object EventStreams {
 
     src.groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         case (userId, rows, state: GroupState[SessionState]) =>
           if (state.hasTimedOut) {
             val out = state.getOption.map(flush(userId, _)).toIterator
@@ -541,7 +545,7 @@ object EventStreams {
               }
             }
             state.update(st)
-            state.setTimeoutDuration(gapMs)
+            state.setTimeoutTimestamp(st.lastSeen + gapMs)
             closed.result().iterator
           }
       }

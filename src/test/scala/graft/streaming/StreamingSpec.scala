@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkSpec
 import graft.streaming.EventStreams.{Event, Session}
@@ -87,21 +87,26 @@ class StreamingSpec extends SparkSpec {
       Event(1, ts(0), 1, "click", 1.0),
       Event(2, ts(1), 1, "click", 1.0),
       Event(3, ts(40), 1, "click", 1.0),
-      Event(4, ts(2), 2, "view", 1.0) // user 2: single open session, never emitted
+      Event(4, ts(2), 2, "view", 1.0) // user 2: single session, open after the first run
     )
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Event]
+    val dir = java.nio.file.Files.createTempDirectory("graft_sessions").toString
+    // each run drains what is available, then ends; the checkpoint carries
+    // the open sessions and the watermark into the next run
+    def drain(): StreamingQuery = {
+      val q = EventStreams.sessionize(mem.toDS())
+        .writeStream.format("parquet")
+        .option("checkpointLocation", s"$dir/checkpoint")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start(s"$dir/sessions")
+      try assert(q.awaitTermination(60000), "the AvailableNow query did not finish")
+      finally q.stop()
+      q
+    }
+    def emitted(): Array[Session] = spark.read.parquet(s"$dir/sessions").as[Session].collect()
     mem.addData(events: _*)
-    val q = EventStreams.sessionize(mem.toDS())
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").trigger(Trigger.Once()).start()
-    // one batch over all four events. A processing-time state timeout asks
-    // for a no-data batch after every batch, so under AvailableNow this
-    // query never terminates (nor does processAllAvailable return): it
-    // loops no-data batches for the rest of the JVM
-    try assert(q.awaitTermination(60000), "the single-batch query did not finish")
-    finally q.stop()
-    val closed = spark.table("sessions").as[Session].collect()
+    drain()
+    val closed = emitted()
     assert(closed.length == 1)
     assert(closed.head.user_id == 1 && closed.head.n_events == 2)
     assert(closed.head.session_start == ts(0) && closed.head.session_end == ts(1))
@@ -113,6 +118,23 @@ class StreamingSpec extends SparkSpec {
       (1L, ts(0), ts(1), 2L),
       (1L, ts(40), ts(40), 1L),
       (2L, ts(2), ts(2), 1L)))
+
+    // an event 2 h after the last one moves the watermark past both open
+    // sessions: user 1's closes on the gap, user 2's on its event-time
+    // timeout, which Spark fires once the watermark is past it
+    val later = Event(5, Timestamp.valueOf("2024-01-01 02:40:00"), 1, "click", 1.0)
+    mem.addData(later)
+    val watermark = java.time.Instant.parse(
+      drain().lastProgress.eventTime.get("watermark")).toEpochMilli
+    val gapMs = 30 * 60 * 1000L
+    val passed = EventStreams.sessionizeBatch((events :+ later).toDS()).collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3)))
+      .filter(_._3.getTime + gapMs < watermark)
+    val streamed = emitted()
+      .map(s => (s.user_id, s.session_start, s.session_end, s.n_events))
+    assert(passed.length == 3 && streamed.length == 3 && streamed.toSet == passed.toSet,
+      s"watermark ${new Timestamp(watermark)}: streamed ${streamed.toSeq}, " +
+        s"batch sessions it passed ${passed.toSeq}")
   }
 
   test("streaming dedup collapses redelivered events within the watermark") {
