@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Generations, Stage}
+import graft.operators.{Dedup, Generations, Stage}
 
 /** Multimodal (image/audio/video) column handling for training-data
   * pipelines: media as opaque `binary` columns with typed metadata, processed
@@ -690,17 +690,28 @@ object Multimodal {
     * order, chosen because signatures need no stored-side state to compare
     * a batch with itself.
     *
-    * Plan shape: the banded delta (|delta|·bands skinny rows) BROADCASTS
-    * under the maxResultSize-capped gate — the stored members then stream
-    * scan-local through one BroadcastHashJoin with ZERO base exchange —
-    * and the distinct probed (band, bucket) set (a bounded ≤ bands·256-row
-    * collect) prunes the member READ to the touched partitions, decisive
-    * for trickle batches. Past the gate both sides exchange once on
-    * (band, bits), the hashNearDups shape. The min-id verdict aggregates
-    * make cross-band pair multiplicity irrelevant, so no global pair
-    * distinct exists on either path. */
+    * Plan shape: the distinct probed (band, bucket) set (a bounded
+    * ≤ bands·256-row collect) prunes the member READ to the touched
+    * partitions, decisive for trickle batches, and the banded delta
+    * (|delta|·bands skinny rows, priced by [[sigProbeBytes]]) attaches on
+    * (band, bits) through [[graft.operators.Stage.probeAttach]] —
+    * broadcast under the maxResultSize-capped gate (zero base exchange),
+    * else one sized exchange of both sides, the hashNearDups shape. The
+    * min-id verdict aggregates make cross-band pair multiplicity
+    * irrelevant, so no global pair distinct exists on either path. */
   def nearDupDelta(newHashes: DataFrame, path: String,
-      maxHamming: Int = 3): DataFrame = {
+      maxHamming: Int = 3): DataFrame =
+    nearDupDeltaAt(newHashes, path, maxHamming,
+      Stage.driverCollectGate(newHashes.sparkSession))
+
+  /** In-memory price of [[nearDupDelta]]'s banded probe stream:
+    * |delta|·bands skinny rows at ~48 B × 2 in-memory expansion. */
+  private[graft] def sigProbeBytes(nDelta: Long, bands: Int): Long =
+    nDelta * bands * 96L
+
+  /** [[nearDupDelta]] with the probe-attach `gate` given. */
+  private[graft] def nearDupDeltaAt(newHashes: DataFrame, path: String,
+      maxHamming: Int, gate: Long): DataFrame = {
     val spark = newHashes.sparkSession
     val bands = sigIndexBands(spark, path)
     require(maxHamming <= bands - 1,
@@ -737,20 +748,9 @@ object Multimodal {
     val prunedLive = Generations.tombstones(spark, path).fold(pruned)(ts =>
       pruned.join(broadcast(ts.select(col("id")).distinct()),
         Seq("id"), "left_anti"))
-    // broadcast gate ([[Stage.driverCollectGate]]): |delta|·bands skinny
-    // rows at ~48 B × 2 in-memory expansion
     val nDelta = math.max(1L, delta.count())
-    val joined =
-      if (nDelta * bands * 48L * 2 <= Stage.driverCollectGate(spark))
-        prunedLive.join(broadcast(banded), Seq("band", "bits"))
-      else {
-        val memBytes = pruned.queryExecution.analyzed.stats.sizeInBytes
-        val parts = Stage.width(pruned, (memBytes / Stage.StreamBytesPerTask)
-          .max(BigInt(nDelta * bands * 96L) / Stage.BuildBytesPerTask))
-        prunedLive.repartition(parts, col("band"), col("bits"))
-          .join(banded.repartition(parts, col("band"), col("bits"))
-            .hint("SHUFFLE_HASH"), Seq("band", "bits"))
-      }
+    val joined = Stage.probeAttach(prunedLive, banded, Seq("band", "bits"),
+      sigProbeBytes(nDelta, bands), gate)
     val oldQ = joined
       .filter(col("id") =!= col("id_d"))
       .withColumn("hamming",
@@ -761,14 +761,7 @@ object Multimodal {
     // come back (id_a < id_b), so each row's candidate leader is min id_a
     val newQ = hashNearDups(delta, maxHamming, bands, nRows = nDelta)
       .groupBy(col("id_b").as("id_d")).agg(min(col("id_a")).as("min_new"))
-    deltaIds
-      .join(oldQ, col("id") === oldQ("id_d"), "left").drop("id_d")
-      .join(newQ, col("id") === newQ("id_d"), "left").drop("id_d")
-      .select(col("id"),
-        coalesce(col("min_old"), lit(-1L)).as("dup_of_old"),
-        coalesce(col("min_new"), lit(-1L)).as("dup_of_new"),
-        when(col("min_old").isNull && col("min_new").isNull, 1L).otherwise(0L)
-          .as("kept"))
+    Dedup.verdictFold(deltaIds, oldQ, newQ, "id_d")
   }
 
   /** Repartition media so each task holds ~`targetBytesPerTask` of payload.

@@ -596,6 +596,40 @@ object Dedup {
           .as("kept"))
   }
 
+  /** The q87 verdict fold of the stored-index delta operators: every id
+    * of `ids` (one `id` column) exactly once, `dup_of_old` / `dup_of_new`
+    * from the per-row minimums `oldMin` (key, min_old) and `newMin`
+    * (key, min_new), -1 for no match, `kept` when neither matched. `key`
+    * names both minimum frames' id column. */
+  private[graft] def verdictFold(ids: DataFrame, oldMin: DataFrame,
+      newMin: DataFrame, key: String): DataFrame =
+    ids
+      .join(oldMin, col("id") === oldMin(key), "left").drop(key)
+      .join(newMin, col("id") === newMin(key), "left").drop(key)
+      .select(col("id"),
+        coalesce(col("min_old"), lit(-1L)).as("dup_of_old"),
+        coalesce(col("min_new"), lit(-1L)).as("dup_of_new"),
+        when(col("min_old").isNull && col("min_new").isNull, 1L).otherwise(0L)
+          .as("kept"))
+
+  /** [[verdictFold]] from a scored pair stream `pairs` (id_a, id_b,
+    * cosine) over the delta rows `deltaIds` (`id`): a pair qualifies at
+    * cosine ≥ `tau`; its id_b is a stored match unless it is a delta id,
+    * and a delta match counts only from a LOWER id (the greedy leader
+    * rule). */
+  private[graft] def pairVerdicts(pairs: DataFrame, deltaIds: DataFrame,
+      tau: Double): DataFrame = {
+    val qual = pairs
+      .join(deltaIds.select(col("id").as("id_b"), lit(1).as("b_new")),
+        Seq("id_b"), "left")
+      .filter(col("cosine") >= tau)
+    val oldQ = qual.filter(col("b_new").isNull)
+      .groupBy(col("id_a")).agg(min(col("id_b")).as("min_old"))
+    val newQ = qual.filter(col("b_new") === 1 && col("id_b") < col("id_a"))
+      .groupBy(col("id_a")).agg(min(col("id_b")).as("min_new"))
+    verdictFold(deltaIds, oldQ, newQ, "id_a")
+  }
+
   /** Exact n-gram Jaccard similarity — the DEFAULT, zero-join posting-list
     * formulation. One scan, one shuffle on the shingle hash, pairs emitted
     * from a local double-explode of each capped posting list.

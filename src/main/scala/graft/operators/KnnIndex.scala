@@ -29,20 +29,11 @@ import org.apache.spark.sql.functions._
   *    (top-k-of-top-ks is exact — any global top-k member is within the
   *    top-k of its own row).
   *  - [[knnJoinDelta]] answers "k nearest index members for every delta
-  *    row" with ZERO base exchange: the delta's probe rows (id, vector,
-  *    probed cell) BROADCAST, the stored directory streams scan-local
-  *    through the join, and the per-cell ADC shortlist + exact rescore run
-  *    inside the same pipelined projection
-  *    ([[graft.functions.AnnExpressions.IvfPqCellShortlist]] /
-  *    [[graft.functions.AnnExpressions.CellRescoreTopK]] — the knnJoinIvf
-  *    expressions, unchanged). The only exchange is the rank merge of the
-  *    winner arrays, ∝ |delta|·nprobe·k. When the delta outgrows the
-  *    broadcast gate the join degrades to a cell-keyed SHUFFLE_HASH with
-  *    the probes as the (sized) build — one member exchange, still never a
-  *    vector-laden PAIR stream. Small deltas additionally prune the
-  *    directory READ to the probed buckets (partition pruning on the
-  *    bucket column — at 100 TB the bucket is the physical partition key
-  *    and a trickle delta touches a handful of them).
+  *    row" with ZERO base exchange while the probes broadcast: the stored
+  *    directories stream scan-local through the probe join into the
+  *    knnJoinIvf cell expressions, and the only exchange is the rank merge
+  *    of the winner arrays, ∝ |delta|·nprobe·k. [[deltaSearch]] states the
+  *    plan once; [[hardNegativesDelta]] is its label mode.
   *
   * The quantizer-CPU account (the measured 2/3 of knnJoinIvf's wall): per
   * delta pass it is paid for |delta| rows only — assign + encode of the
@@ -172,7 +163,7 @@ object KnnIndex {
     Generations.withMaintainerLease(spark, path) {
     val live = membersDir(spark, path)
     val meta = metaForIn(spark, path, live)
-    requirePayloadParity(df, path, payloadCol)
+    requirePayloadParity(df, path, live, payloadCol)
     val base = prep(df, idCol, vecCol, payloadCol)
     val n = math.max(1L, base.count())
     writeMembersTo(base, meta, n * rowBytes(meta) * 2, live,
@@ -206,10 +197,6 @@ object KnnIndex {
       case _ => None
     }
 
-  private def storedPayloadType(spark: SparkSession,
-      path: String): Option[org.apache.spark.sql.types.DataType] =
-    storedPayloadTypeIn(spark, membersDir(spark, path))
-
   /** Does the stored members tree carry the r14 `cnt` column? Appends must
     * match it (mixed footers read arbitrarily); compact always upgrades. */
   private def storedHasCntIn(spark: SparkSession, live: String): Boolean =
@@ -223,10 +210,9 @@ object KnnIndex {
     * DROP every stored payload during the rebuild. A type-mismatched
     * payload (a string into a long-payload tree) is the same hazard one
     * level down. Fail fast instead, all three ways. */
-  private def requirePayloadParity(df: DataFrame, path: String,
+  private def requirePayloadParity(df: DataFrame, path: String, live: String,
       payloadCol: String): Unit = {
-    val spark = df.sparkSession
-    val stored = storedPayloadType(spark, path)
+    val stored = storedPayloadTypeIn(df.sparkSession, live)
     require(stored.isDefined == (payloadCol != null),
       if (stored.isDefined)
         s"index at $path stores a member payload — append/appendBatch must " +
@@ -263,7 +249,7 @@ object KnnIndex {
     Generations.appendBatch(df.sparkSession, path, batchId, "nl=*/bucket=*") {
       (live, staging) =>
         val meta = metaForIn(df.sparkSession, path, live)
-        requirePayloadParity(df, path, payloadCol)
+        requirePayloadParity(df, path, live, payloadCol)
         val base = prep(df, idCol, vecCol, payloadCol)
         val n = math.max(1L, base.count())
         writeMembersTo(base, meta, n * rowBytes(meta) * 2, staging,
@@ -721,50 +707,55 @@ object KnnIndex {
 
   /** Estimated broadcast payload of the exploded probe stream —
     * nDelta·nprobe·fanout·cells rows of (id, vector, cell[, label]) at 2×
-    * in-memory expansion; `rowOver` is the per-row non-vector overhead
-    * (40 B plain; mining probes add the label's own width — see
-    * [[probeRowOver]], never a flat constant: a wide string label priced
-    * at a fixed 64 B would undercount the gate and push an oversized
-    * exploded stream through the driver collect). */
+    * in-memory expansion: 40 B of non-vector overhead per row, plus
+    * `labelBytes` ([[payloadBytes]]) when mining probes carry the label. */
   private def probeBytesFor(meta: Meta, nDelta: Long, nprobe: Int,
-      cellsPerSuper: Int, rowOver: Long): Long = {
+      cellsPerSuper: Int, labelBytes: Long): Long = {
     val fanout = graft.functions.VectorExpressions.probeMidsPerTop(meta.nLists)
-    nDelta * nprobe * fanout * cellsPerSuper * (meta.dims * 4L + rowOver) * 2
+    nDelta * nprobe * fanout * cellsPerSuper * (meta.dims * 4L + 40L + labelBytes) * 2
   }
 
-  /** Per-probe-row non-vector overhead: 40 B plain; with a label, its
-    * schema-priced width on top (the ivfJoinCore lblW rule —
-    * `defaultSize + 8`, read from the STORED payload type, which analysis
-    * requires to equal the mining labels' type). */
-  private def probeRowOver(spark: SparkSession, path: String,
-      payload: Boolean): Long =
-    if (!payload) 40L
-    else 40L + storedPayloadType(spark, path)
-      .map(_.defaultSize + 8L).getOrElse(24L)
+  /** Schema-priced width of a stored payload riding a probe row or a
+    * winner struct — the ivfJoinCore lblW rule, `defaultSize + 8`, read
+    * from the STORED payload type (which analysis requires to equal the
+    * mining labels' type). Never a flat constant: a wide string label
+    * priced at a fixed 64 B would undercount the gate and push an
+    * oversized exploded stream through the driver collect. */
+  private def payloadBytes(
+      payType: Option[org.apache.spark.sql.types.DataType]): Long =
+    payType.map(_.defaultSize + 8L).getOrElse(24L)
+
+  /** The priced probe stream of a delta of `nDelta` rows — the
+    * `probeBytes` [[deltaSearch]] hands [[Stage.probeAttach]] — from one
+    * resolve of the live generation. */
+  private[graft] def deltaProbeBytes(spark: SparkSession, path: String,
+      nDelta: Long, nprobe: Int = 4, cellsPerSuper: Int = 1,
+      payload: Boolean = false): Long = {
+    val live = membersDir(spark, path)
+    probeBytesFor(metaForIn(spark, path, live), nDelta, nprobe, cellsPerSuper,
+      if (payload) payloadBytes(storedPayloadTypeIn(spark, live)) else 0L)
+  }
 
   /** The probe-attach route [[knnJoinDelta]] (payload = false) or
     * [[hardNegativesDelta]] (payload = true) will take for a delta of
-    * `nDelta` rows — "broadcast_probes" or "shuffled_probes" — computed
-    * from the SAME inputs the operators gate on (stored meta, the
-    * maxResultSize-capped gate, the stored payload type's width), so
-    * recorded evidence and scaladoc claims cannot drift from the executed
-    * plan (the knnJoinAutoRoute move). */
+    * `nDelta` rows — "broadcast_probes" or "shuffled_probes" — the same
+    * [[Stage.probeRoute]] comparison over the same inputs the operators
+    * gate on (stored meta, the maxResultSize-capped gate, the stored
+    * payload type's width), so recorded evidence and scaladoc claims
+    * cannot drift from the executed plan (the knnJoinAutoRoute move). */
   def deltaProbeRoute(spark: SparkSession, path: String, nDelta: Long,
-      nprobe: Int = 4, cellsPerSuper: Int = 1, payload: Boolean = false): String = {
-    val meta = metaFor(spark, path)
-    val over = probeRowOver(spark, path, payload)
-    if (probeBytesFor(meta, nDelta, nprobe, cellsPerSuper, over) <=
-        Stage.driverCollectGate(spark))
-      "broadcast_probes"
-    else "shuffled_probes"
-  }
+      nprobe: Int = 4, cellsPerSuper: Int = 1, payload: Boolean = false): String =
+    Stage.probeRoute(
+      deltaProbeBytes(spark, path, nDelta, nprobe, cellsPerSuper, payload),
+      Stage.driverCollectGate(spark))
 
   /** k nearest INDEX members for every row of `newDf` — same
     * (id_a, id_b, cosine, rank) contract and same per-cell arithmetic as
     * [[graft.operators.Similarity.knnJoinIvf]], against the stored
-    * directories. Call [[append]] first when the delta should also be able
-    * to match itself (the incremental-dedup ingest shape); self-matches
-    * are excluded by id inside the shortlist either way.
+    * directories; the plan is [[deltaSearch]]'s. Call [[append]] first
+    * when the delta should also be able to match itself (the
+    * incremental-dedup ingest shape); self-matches are excluded by id
+    * inside the shortlist either way.
     *
     * `restrict`, when given, limits ANSWERS to members whose id is in the
     * frame (an allow-list — "search only the license-clean / same-language
@@ -799,24 +790,13 @@ object KnnIndex {
     * filtered-ANN shape: "license IN (…) AND lang = 'en' AND
     * quality > q" as one Column over the output's `payload_b`
     * (e.g. `col("payload_b.lang") === "en" &&
-    * col("payload_b.quality") > 0.25`). Same position, same plan (the
-    * payload rides the winner struct; the predicate is a scan-local
-    * filter on the flat winner stream — no attach join), same
+    * col("payload_b.quality") > 0.25`). Same position, same plan, same
     * deepened-rescore exactness contract: exact while `kCand` covers
     * each probed cell's ALLOWED members, so a highly-selective predicate
     * needs `kCand` raised toward occupancy ÷ allowed-fraction. Oracle
     * anchor: [[graft.operators.Similarity
     * .knnJoinIvfPqPortablePayloadWhere]] (q125) — the same conjunction
-    * over the q114 CTE prefix.
-    *
-    * Plan shape: probes (delta × nprobe exploded cells, query vector
-    * attached) BROADCAST while they fit the driver-capped gate — the
-    * stored members then stream scan-local through one BroadcastHashJoin
-    * and the whole shortlist→rescore pipeline runs inside that stage's
-    * projection, so the base crosses NO exchange at any size. Past the
-    * gate both sides exchange once on cell (probes the SHUFFLE_HASH
-    * build, sized), which is the knnJoinIvf shape minus directory
-    * construction. */
+    * over the q114 CTE prefix. */
   def knnJoinDelta(
       newDf: DataFrame,
       idCol: String,
@@ -829,146 +809,25 @@ object KnnIndex {
       restrict: Option[DataFrame] = None,
       payloadIn: Option[Seq[Any]] = None,
       payloadWhere: Option[org.apache.spark.sql.Column] = None
-  ): DataFrame = {
-    val spark = newDf.sparkSession
-    val wantPayload = payloadIn.isDefined || payloadWhere.isDefined
-    // resolve the generation ONCE — meta, payload check, and the member
-    // scan below all read the same snapshot even if a compact commits
-    // mid-query (its superseded tree stays on disk for the grace window)
-    val live = membersDir(spark, path)
-    val meta = metaForIn(spark, path, live)
-    if (wantPayload)
-      require(storedPayloadTypeIn(spark, live).isDefined,
-        s"index at $path was built without a payload column — " +
-          "payloadIn/payloadWhere need build/append(payloadCol = ...)")
-    val base = prep(newDf, idCol, vecCol)
-    val nDelta = math.max(1L, base.count())
-    val cand = math.max(k, if (kCand > 0) kCand else 4 * k)
-    // pending deletes (and member allow-lists / payload predicates): deepen
-    // the exact rescore to the full shortlist so dropped winners don't
-    // promote unseen members — exact while `cand` covers the probed cells'
-    // surviving members (see the restrict scaladoc), the LSM
-    // read-amplification tradeoff compact() resets
-    val tombs = Generations.tombstones(spark, path)
-    val rescoreK =
-      if (tombs.isDefined || restrict.isDefined || wantPayload) cand
-      else k
-    val fanout = graft.functions.VectorExpressions.probeMidsPerTop(meta.nLists)
-    val probes = base.select(col("id").as("id_a"), col("v").as("v_a"),
-      explode_outer(graft.functions.VectorExpressions
-        .portable_ivf_probe(col("v"), meta.nLists, meta.dims, nprobe, cellsPerSuper))
-        .as("cell"))
-      .filter(col("cell").isNotNull)
-    val members = spark.read.parquet(live)
-    // Bucket pruning for trickle deltas: the distinct probed-bucket set is
-    // a bounded collect (≤ Buckets rows). Pushing it as a partition filter
-    // prunes the member READ to the touched buckets — decisive when
-    // |delta|·nprobe ≪ nLists; a no-op (and skipped) once every bucket is
-    // probed.
-    val probedBuckets = probes
-      .select(pmod(col("cell"), lit(Buckets)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0))
-    val pruned =
-      if (probedBuckets.length < Buckets)
-        members.filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*))
-      else members
-    // Probe broadcast gate — the shared Stage.driverCollectGate/probeBytesFor arithmetic
-    // (deltaProbeRoute reports this exact decision to callers)
-    val gate = Stage.driverCollectGate(spark)
-    val probeBytes = probeBytesFor(meta, nDelta, nprobe, cellsPerSuper,
-      probeRowOver(spark, path, payload = false))
-    val joined =
-      if (probeBytes <= gate) pruned.join(broadcast(probes), Seq("cell"))
-      else {
-        // sized cell exchange: members priced at the 24 MB/task stream-
-        // writer discipline (file stats — the members are source-backed),
-        // probes at the 16 MB/task unspillable-build discipline
-        val memBytes = pruned.queryExecution.analyzed.stats.sizeInBytes
-        val parts = Stage.width(base, (memBytes / Stage.StreamBytesPerTask)
-          .max(BigInt(probeBytes) / Stage.BuildBytesPerTask))
-        pruned.repartition(parts, col("cell"))
-          .join(probes.repartition(parts, col("cell")).hint("SHUFFLE_HASH"),
-            Seq("cell"))
-      }
-    // payload-filter mode swaps in the payload rescore so each winner
-    // struct carries the member's payload — the predicate then evaluates
-    // on the flat winner stream with no attach join, the q118 position
-    val shortlist = graft.functions.AnnExpressions.ivfpq_cell_shortlist(
-      col("id_a"), col("v_a"), col("mem"), cand, meta.codebooks, meta.subDim)
-    val perRow =
-      if (!wantPayload)
-        joined.select(col("id_a"),
-          graft.functions.AnnExpressions.cell_rescore_topk(col("v_a"),
-            shortlist, col("vmem"), rescoreK).as("tk"))
-      else
-        joined.select(col("id_a"),
-          graft.functions.AnnExpressions.cell_rescore_payload_topk(col("v_a"),
-            shortlist, col("vmem"), rescoreK).as("tk"))
-    // rank merge of the per-(cell, batch-row) winner arrays — the delta's
-    // only exchange on the broadcast path, ∝ |delta| winner structs
-    val rankParts = Stage.width(base,
-      nDelta * nprobe * fanout * cellsPerSuper * rescoreK * 80L / Stage.SortBytesPerTask)
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("id_a")).orderBy(col("cosine").desc, col("id_b").asc)
-    val flatCols = Seq(col("id_a"), col("nb.id").as("id_b")) ++
-      (if (wantPayload) Seq(col("nb.payload").as("payload_b")) else Nil) ++
-      Seq(col("nb.cosine").as("cosine"))
-    val flat = perRow
-      .repartition(rankParts, col("id_a"))
-      .select(col("id_a"), explode_outer(col("tk")).as("nb"))
-      .filter(col("nb").isNotNull)
-      .select(flatCols: _*)
-    // tombstone filter before the rank cut — a file-backed anti-join the
-    // planner broadcasts while the log is small (its normal state; a log
-    // big enough to shuffle is the signal to compact)
-    val liveFlat = tombs.fold(flat)(ts =>
-      flat.join(ts.select(col("id").as("id_b")), Seq("id_b"), "left_anti"))
-    // allow-list filter, same position: a semi-join the planner broadcasts
-    // while the restriction is dim-sized; the rank below re-numbers over
-    // the survivors (the deepened rescore supplied the depth)
-    val allowedFlat = restrict.fold(liveFlat)(r =>
-      liveFlat.join(r.select(col(r.columns.head).cast("long").as("id_b"))
-        .distinct(), Seq("id_b"), "left_semi"))
-    // payload predicate (set membership over the stored per-member
-    // attribute — "search only license-clean ∧ lang=en members"), at the
-    // exact restrict position: shortlist and rescore ran over ALL members
-    // (deepened), the predicate filters the rescored winners, rank
-    // re-numbers — so the exactness condition is restrict's verbatim.
-    // A scan-local filter over the winner stream: the payload rode the
-    // winner struct out of the cell, no join of any kind
-    val paySet = payloadIn.fold(allowedFlat)(vals =>
-      allowedFlat.filter(col("payload_b").isin(vals: _*)))
-    // general predicate (set + range conjunctions over struct fields),
-    // same position and same scan-local evaluation — the caller's Column
-    // references `payload_b` (e.g. col("payload_b.lang") === "en")
-    val payFlat = payloadWhere.fold(paySet)(pred => paySet.filter(pred))
-    val outCols = Seq(col("id_a"), col("id_b")) ++
-      (if (wantPayload) Seq(col("payload_b")) else Nil) ++
-      Seq(col("cosine"), col("rank"))
-    payFlat
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      // the anti-join moves its key first — restate the contract order
-      .select(outCols: _*)
-  }
+  ): DataFrame =
+    deltaSearch(newDf, idCol, vecCol, None, path, k, nprobe, kCand,
+      cellsPerSuper, restrict, payloadIn, payloadWhere,
+      Stage.driverCollectGate(newDf.sparkSession))
 
   /** Hard-negative mining for an arriving batch against the STORED index —
     * [[graft.operators.Similarity.hardNegativesAnnCell]]'s in-cell label
-    * gate on the [[knnJoinDelta]] lifecycle: for every delta row, the k
-    * most-similar stored members carrying a DIFFERENT label, labels read
-    * from the index's own payload column (a [[build]]/[[append]] with
-    * `payloadCol` — no corpus attach join at any point; the gate runs
-    * inside the ADC shortlist
+    * gate on the [[knnJoinDelta]] lifecycle ([[deltaSearch]]'s label
+    * mode): for every delta row, the k most-similar stored members
+    * carrying a DIFFERENT label, labels read from the index's own payload
+    * column (a [[build]]/[[append]] with `payloadCol` — no corpus attach
+    * join at any point; the gate runs inside the ADC shortlist
     * ([[graft.functions.AnnExpressions.IvfPqCellShortlistLabel]]) so every
     * shortlist slot is a candidate negative, and label_b rides the winner
     * struct ([[graft.functions.AnnExpressions.CellRescorePayloadTopK]]).
     *
     * This is the production mining shape: the anchor stream (a training
-    * batch needing negatives) is |delta|-sized, the corpus is the index,
-    * and the probe side broadcasts under the knnJoinDelta gate — the
-    * stored members cross ZERO exchange. Tombstones are honored the
-    * knnJoinDelta way (deepened rescore + anti-join before the rank cut),
-    * and `restrict` limits mined negatives to an id ALLOW-LIST ("mine
+    * batch needing negatives) is |delta|-sized and the corpus is the
+    * index. `restrict` limits mined negatives to an id ALLOW-LIST ("mine
     * only from the license-clean subset") at the same position and with
     * the same exactness condition as [[knnJoinDelta]]'s — shortlist and
     * rescore over all members, filter, rank re-numbers. `payloadIn`
@@ -995,30 +854,101 @@ object KnnIndex {
       cellsPerSuper: Int = 1,
       restrict: Option[DataFrame] = None,
       payloadIn: Option[Seq[Any]] = None
+  ): DataFrame =
+    deltaSearch(newDf, idCol, vecCol, Some(labelCol), path, k, nprobe, kCand,
+      cellsPerSuper, restrict, payloadIn, None,
+      Stage.driverCollectGate(newDf.sparkSession))
+
+  /** The one delta search behind [[knnJoinDelta]] (`labelCol` None) and
+    * [[hardNegativesDelta]] (`labelCol` set — LABEL mode). Plan shape:
+    *
+    *  - Snapshot: the live generation resolves ONCE ([[membersDir]]) —
+    *    meta, the stored payload type and the member scan all read the
+    *    same tree even if a compact commits mid-query (its superseded
+    *    tree stays on disk for the grace window).
+    *  - Prune: the delta's probe rows (id, vector[, label], probed cell —
+    *    delta × nprobe exploded cells) give the distinct probed-bucket
+    *    set, a bounded collect (≤ [[Buckets]] rows) pushed as a
+    *    partition filter, so the member READ touches only those buckets
+    *    — decisive when |delta|·nprobe ≪ nLists, skipped once every
+    *    bucket is probed.
+    *  - Attach: [[Stage.probeAttach]] on `cell` at `gate`
+    *    ([[Stage.driverCollectGate]] for the public forms; the route
+    *    [[deltaProbeRoute]] reports), with the probes priced by
+    *    [[probeBytesFor]] — broadcast, so the members stream scan-local
+    *    and cross NO exchange at any size, else one sized cell exchange
+    *    of both sides (probes the SHUFFLE_HASH build), the knnJoinIvf
+    *    shape minus directory construction.
+    *  - Shortlist + rescore inside the join's projection: the ADC
+    *    shortlist ([[graft.functions.AnnExpressions.IvfPqCellShortlist]],
+    *    label-gated in label mode) and the exact rescore
+    *    ([[graft.functions.AnnExpressions.CellRescoreTopK]]). When a
+    *    label or payload rides, the payload rescore carries it out of
+    *    the cell in each winner struct. Pending tombstones, a `restrict`
+    *    or a payload filter deepen the rescore to the full shortlist
+    *    (`cand`) so dropped winners don't promote unseen members — exact
+    *    while `cand` covers the probed cells' surviving members, the LSM
+    *    read-amplification tradeoff [[compact]] resets.
+    *  - Rank: the per-(cell, batch-row) winner arrays exchange on id_a —
+    *    the only exchange on the broadcast route, ∝ |delta| winner
+    *    structs at 80 B each plus the riding payload's [[payloadBytes]]
+    *    (the ivfJoinCore rule) — and explode reduce-side.
+    *  - Filters, before the rank cut: the tombstone anti-join and the
+    *    `restrict` semi-join (file-backed / dim-sized, so the planner
+    *    broadcasts them), then `payloadIn` / `payloadWhere` as scan-local
+    *    filters on the flat winner stream (the payload rode the winner
+    *    struct — no join of any kind). `row_number` over (cosine desc,
+    *    id_b asc) re-numbers the survivors and cuts at k.
+    *
+    * Label mode reads the payload as labels: null-label anchors drop,
+    * the shortlist gates on a different label, and the output carries
+    * `label_a`/`label_b`, with `payloadIn` filtering `label_b`. Otherwise
+    * a payload rides only for `payloadIn`/`payloadWhere`, as `payload_b`.
+    * Either way it needs a tree built with a payload column. */
+  private[graft] def deltaSearch(
+      newDf: DataFrame,
+      idCol: String,
+      vecCol: String,
+      labelCol: Option[String],
+      path: String,
+      k: Int,
+      nprobe: Int,
+      kCand: Int,
+      cellsPerSuper: Int,
+      restrict: Option[DataFrame],
+      payloadIn: Option[Seq[Any]],
+      payloadWhere: Option[org.apache.spark.sql.Column],
+      gate: Long
   ): DataFrame = {
     val spark = newDf.sparkSession
-    // one generation snapshot per query, the knnJoinDelta rule
+    val label = labelCol.isDefined
+    val filtered = payloadIn.isDefined || payloadWhere.isDefined
+    val rides = label || filtered
     val live = membersDir(spark, path)
     val meta = metaForIn(spark, path, live)
-    val base = prep(newDf, idCol, vecCol, labelCol)
-      .filter(col("pay").isNotNull)
+    val payType = if (rides) storedPayloadTypeIn(spark, live) else None
+    if (rides)
+      require(payType.isDefined,
+        s"index at $path was built without a payload column — " +
+          (if (label) "hardNegativesDelta" else "payloadIn/payloadWhere") +
+          " needs build/append(payloadCol = ...)")
+    val prepped = prep(newDf, idCol, vecCol, labelCol.orNull)
+    val base = if (label) prepped.filter(col("pay").isNotNull) else prepped
     val nDelta = math.max(1L, base.count())
     val cand = math.max(k, if (kCand > 0) kCand else 4 * k)
     val tombs = Generations.tombstones(spark, path)
     val rescoreK =
-      if (tombs.isDefined || restrict.isDefined || payloadIn.isDefined) cand
-      else k
+      if (tombs.isDefined || restrict.isDefined || filtered) cand else k
     val fanout = graft.functions.VectorExpressions.probeMidsPerTop(meta.nLists)
-    val probes = base.select(col("id").as("id_a"), col("pay").as("lbl_a"),
-      col("v").as("v_a"),
-      explode_outer(graft.functions.VectorExpressions
-        .portable_ivf_probe(col("v"), meta.nLists, meta.dims, nprobe, cellsPerSuper))
-        .as("cell"))
+    val lblA = if (label) Seq(col("lbl_a")) else Nil
+    val probes = base.select(Seq(col("id").as("id_a")) ++
+      (if (label) Seq(col("pay").as("lbl_a")) else Nil) ++
+      Seq(col("v").as("v_a"),
+        explode_outer(graft.functions.VectorExpressions
+          .portable_ivf_probe(col("v"), meta.nLists, meta.dims, nprobe, cellsPerSuper))
+          .as("cell")): _*)
       .filter(col("cell").isNotNull)
     val members = spark.read.parquet(live)
-    require(storedPayloadTypeIn(spark, live).isDefined,
-      s"index at $path was built without a payload column — " +
-        "hardNegativesDelta needs build/append(payloadCol = ...)")
     val probedBuckets = probes
       .select(pmod(col("cell"), lit(Buckets)).cast("int").as("bucket"))
       .distinct().collect().map(_.getInt(0))
@@ -1026,56 +956,55 @@ object KnnIndex {
       if (probedBuckets.length < Buckets)
         members.filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*))
       else members
-    // same probe broadcast gate as knnJoinDelta, the label's probe-row
-    // width priced in (shared Stage.driverCollectGate/probeBytesFor arithmetic)
-    val gate = Stage.driverCollectGate(spark)
-    val probeBytes = probeBytesFor(meta, nDelta, nprobe, cellsPerSuper,
-      probeRowOver(spark, path, payload = true))
-    val joined =
-      if (probeBytes <= gate) pruned.join(broadcast(probes), Seq("cell"))
-      else {
-        val memBytes = pruned.queryExecution.analyzed.stats.sizeInBytes
-        val parts = Stage.width(base, (memBytes / Stage.StreamBytesPerTask)
-          .max(BigInt(probeBytes) / Stage.BuildBytesPerTask))
-        pruned.repartition(parts, col("cell"))
-          .join(probes.repartition(parts, col("cell")).hint("SHUFFLE_HASH"),
-            Seq("cell"))
-      }
-    val perRow = joined.select(col("id_a"), col("lbl_a"),
-      graft.functions.AnnExpressions.cell_rescore_payload_topk(col("v_a"),
+    val payW = if (rides) payloadBytes(payType) else 0L
+    val joined = Stage.probeAttach(pruned, probes, Seq("cell"),
+      probeBytesFor(meta, nDelta, nprobe, cellsPerSuper,
+        if (label) payW else 0L), gate)
+    val shortlist =
+      if (label)
         graft.functions.AnnExpressions.ivfpq_cell_shortlist_label(col("id_a"),
-          col("lbl_a"), col("v_a"), col("mem"), cand, meta.codebooks,
-          meta.subDim),
-        col("vmem"), rescoreK).as("tk"))
-    val rankParts = Stage.width(base,
-      nDelta * nprobe * fanout * cellsPerSuper * rescoreK * 100L / Stage.SortBytesPerTask)
+          col("lbl_a"), col("v_a"), col("mem"), cand, meta.codebooks, meta.subDim)
+      else
+        graft.functions.AnnExpressions.ivfpq_cell_shortlist(
+          col("id_a"), col("v_a"), col("mem"), cand, meta.codebooks, meta.subDim)
+    val rescore =
+      if (rides)
+        graft.functions.AnnExpressions.cell_rescore_payload_topk(col("v_a"),
+          shortlist, col("vmem"), rescoreK)
+      else
+        graft.functions.AnnExpressions.cell_rescore_topk(col("v_a"),
+          shortlist, col("vmem"), rescoreK)
+    val perRow = joined.select(Seq(col("id_a")) ++ lblA ++ Seq(rescore.as("tk")): _*)
+    val rankParts = Stage.width(base, nDelta * nprobe * fanout * cellsPerSuper *
+      rescoreK * (80L + payW) / Stage.SortBytesPerTask)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("id_a")).orderBy(col("cosine").desc, col("id_b").asc)
+    // label mode: the anchor's label rides as label_a, and the members'
+    // payload comes out as label_b instead of payload_b
+    val labelA = if (label) Seq(col("label_a")) else Nil
+    val payB =
+      if (label) Some("label_b") else if (rides) Some("payload_b") else None
     val flat = perRow
       .repartition(rankParts, col("id_a"))
-      .select(col("id_a"), col("lbl_a"), explode_outer(col("tk")).as("nb"))
+      .select(Seq(col("id_a")) ++ lblA ++ Seq(explode_outer(col("tk")).as("nb")): _*)
       .filter(col("nb").isNotNull)
-      .select(col("id_a"), col("lbl_a").as("label_a"),
-        col("nb.id").as("id_b"), col("nb.payload").as("label_b"),
-        col("nb.cosine").as("cosine"))
+      .select(Seq(col("id_a")) ++ lblA.map(_.as("label_a")) ++
+        Seq(col("nb.id").as("id_b")) ++ payB.map(col("nb.payload").as(_)) ++
+        Seq(col("nb.cosine").as("cosine")): _*)
     val liveFlat = tombs.fold(flat)(ts =>
       flat.join(ts.select(col("id").as("id_b")), Seq("id_b"), "left_anti"))
-    // allow-list at the knnJoinDelta position: after rescore, before the
-    // rank cut — rank re-numbers over allowed survivors
     val allowedFlat = restrict.fold(liveFlat)(r =>
       liveFlat.join(r.select(col(r.columns.head).cast("long").as("id_b"))
         .distinct(), Seq("id_b"), "left_semi"))
-    // payload predicate at the same position ("mine negatives only from
-    // classes in {…}"): label_b already rides the winner struct, so the
-    // set-membership filter is scan-local — same deepened-rescore
-    // exactness contract as restrict
-    val payFlat = payloadIn.fold(allowedFlat)(vals =>
-      allowedFlat.filter(col("label_b").isin(vals: _*)))
+    val paySet = payloadIn.fold(allowedFlat)(vals =>
+      allowedFlat.filter(col(payB.get).isin(vals: _*)))
+    val payFlat = payloadWhere.fold(paySet)(pred => paySet.filter(pred))
     payFlat
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("id_a"), col("label_a"), col("id_b"), col("label_b"),
-        col("cosine"), col("rank"))
+      // the anti-join moves its key first — restate the contract order
+      .select(Seq(col("id_a")) ++ labelA ++ Seq(col("id_b")) ++
+        payB.map(col) ++ Seq(col("cosine"), col("rank")): _*)
   }
 
   /** Incremental semantic dedup — the [[graft.operators.Dedup
@@ -1092,7 +1021,8 @@ object KnnIndex {
     * .semanticDedup]]'s ordering). Returns the q87 shape:
     * (id, dup_of_old, dup_of_new, kept) with -1 for no match. Work is
     * |delta|-driven end-to-end: one [[knnJoinDelta]] (zero base exchange
-    * on the broadcast-probe path) plus |delta|-sized verdict joins.
+    * on the broadcast-probe path) plus |delta|-sized verdict joins
+    * ([[Dedup.pairVerdicts]]).
     *
     * Like the native ANN family this is spec-gated (trained PQ shortlist);
     * its oracle anchor is [[graft.operators.Similarity
@@ -1107,24 +1037,7 @@ object KnnIndex {
       tau: Double,
       k: Int = 8,
       nprobe: Int = 4
-  ): DataFrame = {
-    val deltaIds = newDf.select(col(idCol).cast("long").as("id"))
-    val nn = knnJoinDelta(newDf, idCol, vecCol, path, k, nprobe)
-    val qual = nn
-      .join(deltaIds.select(col("id").as("id_b"), lit(1).as("b_new")),
-        Seq("id_b"), "left")
-      .filter(col("cosine") >= tau)
-    val oldQ = qual.filter(col("b_new").isNull)
-      .groupBy(col("id_a")).agg(min(col("id_b")).as("min_old"))
-    val newQ = qual.filter(col("b_new") === 1 && col("id_b") < col("id_a"))
-      .groupBy(col("id_a")).agg(min(col("id_b")).as("min_new"))
-    deltaIds
-      .join(oldQ, col("id") === oldQ("id_a"), "left").drop("id_a")
-      .join(newQ, col("id") === newQ("id_a"), "left").drop("id_a")
-      .select(col("id"),
-        coalesce(col("min_old"), lit(-1L)).as("dup_of_old"),
-        coalesce(col("min_new"), lit(-1L)).as("dup_of_new"),
-        when(col("min_old").isNull && col("min_new").isNull, 1L).otherwise(0L)
-          .as("kept"))
-  }
+  ): DataFrame =
+    Dedup.pairVerdicts(knnJoinDelta(newDf, idCol, vecCol, path, k, nprobe),
+      newDf.select(col(idCol).cast("long").as("id")), tau)
 }

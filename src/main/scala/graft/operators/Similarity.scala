@@ -1525,12 +1525,13 @@ object Similarity {
     * the rank cut REMOVED (`k = kCand`: every shortlisted pair keeps its
     * rescored cosine, so the verdict is a pure function of the exact
     * integer shortlist an ANSI engine replays), then the q87
-    * incremental-dedup rule folds the pairs: a new row is a duplicate when
-    * some shortlisted neighbor clears `tau` and is either a stored member
-    * (`dup_of_old` = min such id) or a LOWER-id row of its own batch
-    * (`dup_of_new` — the greedy leader ordering). Same
-    * (id, dup_of_old, dup_of_new, kept) contract, -1 for no match; every
-    * new id appears exactly once (zero-norm rows trivially kept). */
+    * incremental-dedup rule folds the pairs ([[Dedup.pairVerdicts]]): a
+    * new row is a duplicate when some shortlisted neighbor clears `tau`
+    * and is either a stored member (`dup_of_old` = min such id) or a
+    * LOWER-id row of its own batch (`dup_of_new` — the greedy leader
+    * ordering). Same (id, dup_of_old, dup_of_new, kept) contract, -1 for
+    * no match; every new id appears exactly once (zero-norm rows
+    * trivially kept). */
   def semanticDedupIncrementalPortable(
       oldDf: DataFrame,
       newDf: DataFrame,
@@ -1546,23 +1547,7 @@ object Similarity {
   ): DataFrame = {
     val nn = knnJoinIvfPqPortableIncremental(oldDf, newDf, idCol, vecCol,
       k = kCand, nLists, nprobe, m, ks, kCand, dims)
-    val deltaIds = newDf.select(col(idCol).cast("long").as("id"))
-    val qual = nn
-      .join(deltaIds.select(col("id").as("id_b"), lit(1).as("b_new")),
-        Seq("id_b"), "left")
-      .filter(col("cosine") >= tau)
-    val oldQ = qual.filter(col("b_new").isNull)
-      .groupBy(col("id_a")).agg(min(col("id_b")).as("min_old"))
-    val newQ = qual.filter(col("b_new") === 1 && col("id_b") < col("id_a"))
-      .groupBy(col("id_a")).agg(min(col("id_b")).as("min_new"))
-    deltaIds
-      .join(oldQ, col("id") === oldQ("id_a"), "left").drop("id_a")
-      .join(newQ, col("id") === newQ("id_a"), "left").drop("id_a")
-      .select(col("id"),
-        coalesce(col("min_old"), lit(-1L)).as("dup_of_old"),
-        coalesce(col("min_new"), lit(-1L)).as("dup_of_new"),
-        when(col("min_old").isNull && col("min_new").isNull, 1L).otherwise(0L)
-          .as("kept"))
+    Dedup.pairVerdicts(nn, newDf.select(col(idCol).cast("long").as("id")), tau)
   }
 
   def portableIvfTopK(

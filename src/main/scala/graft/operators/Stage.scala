@@ -40,7 +40,8 @@ final case class DimsMismatchException(explicitDims: Int, sampledDims: Int)
   *  - [[ExplodeGateBytes]] (64 MB): the switch for plans whose explode
   *    multiplies a compressed estimate ~6–24× before the first exchange;
   *  - [[driverCollectGate]]: 2 GB capped at `spark.driver.maxResultSize`,
-  *    for broadcasts whose collect passes through the driver. */
+  *    for broadcasts whose collect passes through the driver — the gate
+  *    of [[probeAttach]], the delta-search probe join. */
 object Stage {
 
   /** Per-task target for spill-capable sort and aggregate state. */
@@ -112,6 +113,36 @@ object Stage {
   def driverCollectGate(maxResultSize: Long): Long =
     if (maxResultSize <= 0) DriverCollectBytes
     else math.min(DriverCollectBytes, maxResultSize)
+
+  /** The [[probeAttach]] route of a probe stream priced at `probeBytes`:
+    * "broadcast_probes" while it fits `gate`, else "shuffled_probes". */
+  def probeRoute(probeBytes: Long, gate: Long): String =
+    if (probeBytes <= gate) "broadcast_probes" else "shuffled_probes"
+
+  /** Attach a |delta|-sized probe stream to stored `members` on `keys` —
+    * the delta-search join of both stored indexes. Under [[probeRoute]]'s
+    * broadcast branch the probes broadcast (the gate is normally
+    * [[driverCollectGate]]: the build is collected through the driver)
+    * and the members stream scan-local through one BroadcastHashJoin, so
+    * the stored side crosses no exchange. Past the gate both sides
+    * exchange once on `keys` with the probes the SHUFFLE_HASH build, at
+    * one width: the members' estimate at [[StreamBytesPerTask]] or the
+    * probes at [[BuildBytesPerTask]], whichever wants more. `probeBytes`
+    * is the caller's in-memory pricing of the probe stream. */
+  def probeAttach(members: DataFrame, probes: DataFrame, keys: Seq[String],
+      probeBytes: Long, gate: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    if (probeRoute(probeBytes, gate) == "broadcast_probes")
+      members.join(broadcast(probes), keys)
+    else {
+      val memBytes = members.queryExecution.analyzed.stats.sizeInBytes
+      val parts = width(members, (memBytes / StreamBytesPerTask)
+        .max(BigInt(probeBytes) / BuildBytesPerTask))
+      members.repartition(parts, keys.map(col): _*)
+        .join(probes.repartition(parts, keys.map(col): _*).hint("SHUFFLE_HASH"),
+          keys)
+    }
+  }
 
   /** Derive the vector width from one sampled row — the dims = 0 default
     * of every public vector entry point — and FAIL FAST (typed

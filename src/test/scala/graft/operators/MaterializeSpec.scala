@@ -106,7 +106,9 @@ class MaterializeSpec extends SparkSpec {
       codeOnly = false),
     Owner("Generations", "index-root lifecycle name or concurrent-writers conf",
       """ingest_log|/tombstones|staging/batch|ingest-b|members-gen-|maxConcurrentOutputFileWriters""".r,
-      codeOnly = true))
+      codeOnly = true),
+    Owner("Dedup", "q87 verdict fold (a dup_of_old column)",
+      """\.as\("dup_of_old"\)""".r, codeOnly = true))
 
   /** `line` without its comment: a scaladoc or block-comment line is
     * dropped whole, a trailing `//` comment is cut. */

@@ -233,4 +233,89 @@ class RoutingSpec extends SparkSpec {
     assert(KnnIndex.deltaProbeRoute(spark, path, 500L * 1000 * 1000) ==
       "shuffled_probes")
   }
+
+  test("probe attach, both routes: gate 0 plans a SHUFFLE_HASH probe join " +
+      "and answers row-equal to the broadcast route (knnJoinDelta with a " +
+      "tombstone and a restrict, hardNegativesDelta with payloadIn, " +
+      "nearDupDelta with a tombstone); the route comparison names the " +
+      "branch that runs") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledHashJoinExec}
+    import graft.multimodal.Multimodal
+    val gates = Seq(0L, Stage.driverCollectGate(spark))
+    // the probe join(s) of a delta plan: a hash join on `keys` whose
+    // build side carries the probe column, named by its route
+    def probeJoins(df: DataFrame, keys: Seq[String], probeCol: String): Seq[String] = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      def names(ks: Seq[Expression]) = ks.flatMap(_.references.map(_.name))
+      plan.collect {
+        case j: ShuffledHashJoinExec if names(j.rightKeys) == keys &&
+            j.right.output.exists(_.name == probeCol) => "shuffled_probes"
+        case j: BroadcastHashJoinExec if names(j.rightKeys) == keys &&
+            j.right.output.exists(_.name == probeCol) => "broadcast_probes"
+      }
+    }
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    def bothRoutes(what: String, keys: Seq[String], probeCol: String,
+        priced: Long)(run: Long => DataFrame): Seq[String] = {
+      val outs = gates.map { g =>
+        val route = Stage.probeRoute(priced, g)
+        assert(route == (if (g == 0L) "shuffled_probes" else "broadcast_probes"))
+        val df = run(g)
+        assert(probeJoins(df, keys, probeCol) == Seq(route),
+          s"$what at gate $g must run $route; plan was:\n" +
+            df.queryExecution.executedPlan)
+        rows(df)
+      }
+      assert(outs.head.nonEmpty, s"$what answered nothing")
+      assert(outs.head == outs.last, s"$what: shuffled and broadcast rows differ")
+      outs.head
+    }
+
+    val path = java.nio.file.Files.createTempDirectory("graft_attach").toString
+    KnnIndex.build(emb.filter($"vec_id" % 5 =!= 0), "vec_id", "embedding",
+      path, nLists = 8, payloadCol = "label")
+    KnnIndex.delete(emb.filter($"vec_id" % 7 === 1).select($"vec_id"),
+      "vec_id", path)
+    val neu = emb.filter($"vec_id" % 5 === 0)
+    val n = neu.count()
+    val allow = emb.filter($"vec_id" % 3 =!= 0).select($"vec_id")
+    bothRoutes("knnJoinDelta", Seq("cell"), "id_a",
+        KnnIndex.deltaProbeBytes(spark, path, n)) { g =>
+      KnnIndex.deltaSearch(neu, "vec_id", "embedding", None, path, k = 3,
+        nprobe = 4, kCand = 0, cellsPerSuper = 1, restrict = Some(allow),
+        payloadIn = None, payloadWhere = None, gate = g)
+    }
+    bothRoutes("hardNegativesDelta", Seq("cell"), "id_a",
+        KnnIndex.deltaProbeBytes(spark, path, n, payload = true)) { g =>
+      KnnIndex.deltaSearch(neu, "vec_id", "embedding", Some("label"), path,
+        k = 3, nprobe = 4, kCand = 0, cellsPerSuper = 1, restrict = None,
+        payloadIn = Some(Seq(1, 3, 5)), payloadWhere = None, gate = g)
+    }
+
+    // signature index: the batch is a one-bit flip of every fifth stored
+    // member, and half of those originals are tombstoned, so their
+    // copies are re-judged against the surviving corpus
+    val sigPath = java.nio.file.Files.createTempDirectory("graft_attach_sig").toString
+    val hashes = emb.select($"vec_id".as("id"), xxhash64($"embedding").as("hash"))
+    Multimodal.buildSigIndex(hashes, sigPath, bands = 4)
+    Multimodal.deleteSig(emb.filter($"vec_id" % 10 === 0).select($"vec_id"),
+      "vec_id", sigPath)
+    val batch = hashes.filter($"id" % 5 === 0)
+      .select(($"id" + 100000L).as("id"), $"hash".bitwiseXOR(lit(1L << 9)).as("hash"))
+    val verdicts = bothRoutes("nearDupDelta", Seq("band", "bits"), "id_d",
+        Multimodal.sigProbeBytes(batch.count(), 4)) { g =>
+      Multimodal.nearDupDeltaAt(batch, sigPath, maxHamming = 3, gate = g)
+    }
+    // both verdicts occur: surviving originals drop their copy, and the
+    // tombstoned ones' copies are kept
+    assert(verdicts.exists(_.endsWith(",0]")) && verdicts.exists(_.endsWith(",1]")),
+      s"verdicts: $verdicts")
+  }
 }
