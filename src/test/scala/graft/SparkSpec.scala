@@ -25,35 +25,49 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def sf(dir: String, table: String) =
     spark.read.parquet(s"/root/testdata/$dir/$table.parquet")
 
-  /** Spark jobs that `body` launches on the calling thread. A sentinel job
-    * in another group runs after it; once the listener has seen the
-    * sentinel start, it has seen every job `body` started. */
+  /** Spark jobs that `body` launches on the calling thread. */
   def jobsLaunchedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"jobs-launched-by-${System.nanoTime()}"
     val jobs = new AtomicInteger
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
+    inJobGroup(tag => new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == tag => jobs.incrementAndGet()
-          case Some(g) if g == s"$tag-sentinel" => sentinelSeen.countDown()
-          case _ =>
-        }
+        if (SparkSpec.groupOf(e.properties).contains(tag)) jobs.incrementAndGet()
+    })(body)
+    jobs.get()
+  }
+
+  /** Runs `body` in a fresh job group while `listener(group)` listens, and
+    * returns once it has seen every event `body` caused. A sentinel job in
+    * another group runs after `body`; both listeners share one queue, so
+    * once the sentinel's start is seen, every earlier event has been. */
+  def inJobGroup(listener: String => SparkListener)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"job-group-${System.nanoTime()}"
+    val sentinelSeen = new CountDownLatch(1)
+    val sentinel = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (SparkSpec.groupOf(e.properties).contains(s"$tag-sentinel")) sentinelSeen.countDown()
     }
-    sc.addSparkListener(listener)
+    val observer = listener(tag)
+    sc.addSparkListener(observer)
+    sc.addSparkListener(sentinel)
     try {
       sc.setJobGroup(tag, "measured")
       try body finally sc.clearJobGroup()
       sc.setJobGroup(s"$tag-sentinel", "sentinel")
       try spark.range(1).count() finally sc.clearJobGroup()
       assert(sentinelSeen.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
+    } finally {
+      sc.removeSparkListener(sentinel)
+      sc.removeSparkListener(observer)
+    }
   }
 }
 
 object SparkSpec {
+  /** The job group a job or stage event was submitted under. */
+  def groupOf(properties: java.util.Properties): Option[String] =
+    Option(properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+
   lazy val session: SparkSession = {
     val s = SparkSession
       .builder()

@@ -1,5 +1,15 @@
 package graft.operators
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,6 +46,25 @@ class RankSpec extends SparkSpec {
         numPartitions = 7)
       .select($"id", $"tile").as[(Long, Long)].collect().toMap
     assert(got == expected)
+    // randomized (rows, tiles, partitions): fewer rows than tiles and than
+    // partitions (so some range partitions are empty) are both in the sweep
+    val rng = new scala.util.Random(41)
+    val shapes = Seq((3, 10, 8), (0, 4, 3), (25, 25, 7)) ++
+      Seq.fill(5)((rng.nextInt(120), 1 + rng.nextInt(20), 1 + rng.nextInt(8)))
+    assert(shapes.exists { case (n, t, _) => n < t } && shapes.exists { case (n, _, p) => n < p })
+    for ((n, tiles, parts) <- shapes) {
+      val data = rng.shuffle((1L to n.toLong).toList)
+        .map(i => (i, rng.nextInt(9)))
+        .toDF("id", "score")
+      val want = data
+        .withColumn("tile",
+          ntile(tiles).over(Window.orderBy($"score".asc, $"id".desc)).cast("long"))
+        .select($"id", $"tile").as[(Long, Long)].collect().toMap
+      val have = Rank.exactNtile(data, Seq($"score".asc, $"id".desc), tiles,
+          numPartitions = parts)
+        .select($"id", $"tile").as[(Long, Long)].collect().toMap
+      assert(have == want, s"n=$n tiles=$tiles parts=$parts")
+    }
   }
 
   test("exactNtile with fewer rows than buckets gives one row per leading tile") {
@@ -53,15 +82,44 @@ class RankSpec extends SparkSpec {
   }
 
   test("the range exchange is computed once: ranking adds no second shuffle job scan") {
-    // structural guarantee: the counting job and the stamping job share one
-    // shuffle — assert the plan has exactly one range exchange below the rdd
-    val ranged = rows.repartitionByRange(7, $"score".desc, $"id".asc)
-      .sortWithinPartitions($"score".desc, $"id".asc)
-    val plan = ranged.queryExecution.toString
-    assert("rangepartitioning".r.findAllIn(plan.toLowerCase).size >= 1)
-    // exactly one Exchange in the physical plan: the range shuffle itself
-    assert("exchange rangepartitioning".r
-      .findAllIn(plan.toLowerCase).nonEmpty)
+    // Every operator runs one range exchange; the boundary job writes it and
+    // the stamp re-reads its files (a skipped stage never completes), so a
+    // call completes exactly one stage that writes shuffle output.
+    val sortCols = Seq($"score".desc, $"id".asc)
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "withGlobalRank" -> (() => Rank.withGlobalRank(rows, sortCols, numPartitions = 7)),
+      "exactNtile" -> (() => Rank.exactNtile(rows, sortCols, 10, numPartitions = 7)),
+      "withGroupRank" ->
+        (() => Rank.withGroupRank(rows, Seq($"id" % 3), sortCols, numPartitions = 7)),
+      "withRunningTotal" -> (() => Rank.withRunningTotal(rows, sortCols, $"score",
+        numPartitions = 7, rankCol = Some("rk"))),
+      "withGroupRunningTotal" -> (() => Rank.withGroupRunningTotal(rows, Seq($"id" % 3),
+        sortCols, $"score", numPartitions = 7, rankCol = Some("rk"))))
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    for ((name, call) <- calls) {
+      val shuffleWrites = new AtomicInteger
+      val plans = new ConcurrentLinkedQueue[SparkPlanInfo]
+      var rowCount = 0
+      inJobGroup(tag => new SparkListener {
+        private val mine = ConcurrentHashMap.newKeySet[Int]()
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          if (SparkSpec.groupOf(e.properties).contains(tag)) mine.add(e.stageInfo.stageId)
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          if (mine.contains(e.stageInfo.stageId) &&
+              e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+            shuffleWrites.incrementAndGet()
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(tag) =>
+            plans.add(s.sparkPlanInfo)
+          case _ =>
+        }
+      }) { rowCount = call().collect().length }
+      assert(rowCount == 997, name)
+      val rangeExchanges = plans.asScala.toSeq.flatMap(nodes).count(p =>
+        p.nodeName == "Exchange" && p.simpleString.toLowerCase.contains("rangepartitioning"))
+      assert(rangeExchanges == 1, s"$name: range exchanges planned")
+      assert(shuffleWrites.get == 1, s"$name: stages that wrote shuffle output")
+    }
   }
 
   // 3 hot groups over 997 rows at 7 partitions: every group spans several
@@ -227,13 +285,21 @@ class RankSpec extends SparkSpec {
         .map(i => (i, (i % groups).toString, rng.nextInt(40).toLong))
         .toDF("id", "grp", "w")
       val win = Window.partitionBy($"grp").orderBy($"w".asc, $"id".asc)
-      val expected = data
+      val withRank = data
         .withColumn("rt", sum($"w").over(win.rowsBetween(Window.unboundedPreceding, 0)))
-        .select($"id", $"rt").as[(Long, Long)].collect().toMap
+        .withColumn("rk", row_number().over(win).cast("long"))
+      val expected = withRank.select($"id", $"rt").as[(Long, Long)].collect().toMap
       val got = Rank.withGroupRunningTotal(data, Seq($"grp"),
           Seq($"w".asc, $"id".asc), $"w", totalCol = "rt", numPartitions = parts)
         .select($"id", $"rt").as[(Long, Long)].collect().toMap
       assert(got == expected, s"trial $trial: n=$n groups=$groups parts=$parts")
+      val expectedRanked =
+        withRank.select($"id", $"rt", $"rk").as[(Long, Long, Long)].collect().toSet
+      val gotRanked = Rank.withGroupRunningTotal(data, Seq($"grp"),
+          Seq($"w".asc, $"id".asc), $"w", totalCol = "rt", numPartitions = parts,
+          rankCol = Some("rk"))
+        .select($"id", $"rt", $"rk").as[(Long, Long, Long)].collect().toSet
+      assert(gotRanked == expectedRanked, s"trial $trial (rankCol): n=$n groups=$groups parts=$parts")
     }
   }
 
