@@ -114,7 +114,14 @@ class MaterializeSpec extends SparkSpec {
     Owner("Dedup", "q87 verdict fold (a dup_of_old column)",
       """\.as\("dup_of_old"\)""".r, codeOnly = true),
     Owner("Rank", "cross-partition stitch (a runJob or mapPartitionsWithIndex call)",
-      """runJob\(|mapPartitionsWithIndex""".r, codeOnly = true))
+      """runJob\(|mapPartitionsWithIndex""".r, codeOnly = true),
+    // query widening, per-member ADC sum, bounded-insertion shortlist,
+    // cap-covers-cell shortcut, member cosine, shortlist membership,
+    // (cosine desc, id asc) cut, member-struct layout match
+    Owner("CellScoring", "IVF-PQ in-cell scoring step",
+      ("""\)\s*=\s*\w+\.getFloat\(\w+\)\.toDouble|code\.getInt\(|slDist|\w+ <= kCand\b|""" +
+        """vB\.getFloat|binarySearch\(slSorted|sortBy\(q => \(-|ArrayType\([_s]: StructType, _\)""").r,
+      codeOnly = true))
 
   /** `line` without its comment: a scaladoc or block-comment line is
     * dropped whole, a trailing `//` comment is cut. */
@@ -141,7 +148,7 @@ class MaterializeSpec extends SparkSpec {
               s"$p:${i + 1}: ${line.trim}"
           }
         }.toList
-      assert(hits.isEmpty, s"go through graft.operators.${o.owner}:\n" +
+      assert(hits.isEmpty, s"go through ${o.owner}:\n" +
         hits.mkString("\n"))
     }
   }

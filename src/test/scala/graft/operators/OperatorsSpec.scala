@@ -696,45 +696,103 @@ class OperatorsSpec extends SparkSpec {
 
   test("knnJoinIvf split pipeline: shortlist+rescore is byte-identical to the fused expression") {
     import graft.functions.AnnExpressions._
-    // 2 subspaces × 4 centroids over 8 dims; 40-member cell with kCand=6 so
-    // the ADC shortlist genuinely gates (and a second pass with kCand=64
-    // covering the cell, the exact-path shortcut)
-    val dims = 8; val m = 2; val subDim = 4
+    // The fused reference is a plain-Scala oracle of the whole rule: sort
+    // by (ADC, id), cut at kCand, take the exact rounded cosine, sort by
+    // (cosine desc, id asc), cut at k. 2 subspaces × 4 centroids over
+    // 8 dims; a 44-member cell with kCand=6 so the ADC shortlist genuinely
+    // gates (and a second pass with kCand=64 covering the cell, the
+    // exact-path shortcut)
+    val dims = 8; val m = 2; val subDim = 4; val k = 5
     val cb: Array[Array[Array[Double]]] = Array.tabulate(m)(s =>
       Array.tabulate(4)(c => Array.tabulate(subDim)(j =>
         math.sin(s * 7.0 + c * 3.0 + j))))
     val rnd = new scala.util.Random(7)
-    val mems = (0 until 40).map { i =>
-      val v = Array.fill(dims)(rnd.nextFloat() * 2 - 1)
-      val norm = math.sqrt(v.map(x => x.toDouble * x).sum)
-      val code = (0 until m).map(s =>
-        (0 until 4).minBy(c => (0 until subDim)
-          .map(j => v(s * subDim + j) - cb(s)(c)(j)).map(x => x * x).sum))
-      (i.toLong, norm, code, v.toSeq)
-    }
+    def nearest(v: Seq[Float]): Seq[Int] = (0 until m).map(s =>
+      (0 until 4).minBy(c => (0 until subDim)
+        .map(j => v(s * subDim + j) - cb(s)(c)(j)).map(x => x * x).sum))
+    def mem(id: Long, v: Seq[Float], code: Seq[Int]) =
+      (id, math.sqrt(v.map(x => x.toDouble * x).sum), code, v)
     val qv = Seq.fill(dims)(rnd.nextFloat())
-    // idA = 5 is a member: self-exclusion must agree between the forms
-    val fusedDf = Seq((5L, qv,
-      mems.map { case (id, nrm, code, v) => FusedMem(id, nrm, code, v) }))
-      .toDF("id_a", "v_a", "members")
-    val splitDf = Seq((5L, qv,
+    def nearQ() = qv.map(x => x + (rnd.nextFloat() - 0.5f) * 0.05f)
+    def adc(code: Seq[Int]): Double = (0 until m).map { s =>
+      var t = 0.0
+      for (j <- 0 until subDim) {
+        val x = qv(s * subDim + j).toDouble - cb(s)(code(s))(j); t += x * x
+      }
+      t
+    }.sum
+    // ids 0, 10, …, 390: room for tie members on either side of a base id
+    val base = (0 until 40).map { i =>
+      val v = Seq.fill(dims)(rnd.nextFloat() * 2 - 1)
+      mem(i * 10L, v, nearest(v))
+    }
+    val self = 50L // a member: self-exclusion must hold in both passes
+    // equal rounded cosine: two members with one vector near the query,
+    // carrying the ADC-best code so both survive the kCand=6 cut
+    val bestCode = base.filter(_._1 != self).minBy(r => (adc(r._3), r._1))._3
+    val twin = nearQ()
+    val withTwins = base ++ Seq(mem(3L, twin, bestCode), mem(7L, twin, bestCode))
+    // equal ADC: the member at the kCand=6 cut gets two neighbours with its
+    // code, one id below and one above, both near the query, so the (ADC,
+    // id) tie-break alone decides which of the three is shortlisted and
+    // the survivor shows in the top k
+    val edge = withTwins.filter(_._1 != self).sortBy(r => (adc(r._3), r._1)).apply(5)
+    val mems = withTwins ++
+      Seq(mem(edge._1 - 1, nearQ(), edge._3), mem(edge._1 + 1, nearQ(), edge._3))
+
+    def round6(x: Double): Double = java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val normQ = math.sqrt(qv.map(x => x.toDouble * x).sum)
+    def oracle(kCand: Int): Seq[(Long, Double)] =
+      mems.filter(_._1 != self).sortBy(r => (adc(r._3), r._1)).take(kCand)
+        .map { case (id, nrm, _, v) =>
+          id -> round6(qv.zip(v).map { case (a, b) => a.toDouble * b }.sum / (normQ * nrm))
+        }
+        .sortBy { case (id, c) => (-c, id) }.take(k)
+
+    val adcOrder = mems.filter(_._1 != self).map(r => adc(r._3)).sorted
+    assert(adcOrder(5) == adcOrder(6), "the kCand=6 cut must fall inside an ADC tie")
+    val splitDf = Seq((self, qv,
       mems.map { case (id, _, code, _) => CodeMem(id, code) },
       mems.map { case (id, nrm, _, v) => VecMem(id, nrm, v) }))
       .toDF("id_a", "v_a", "cm", "vm")
     for (kCand <- Seq(6, 64)) {
-      val fused = fusedDf.select(
-        ivfpq_cell_topk($"id_a", $"v_a", $"members", 5, kCand, cb, subDim))
-        .head().getSeq[org.apache.spark.sql.Row](0)
-        .map(r => (r.getLong(0), r.getDouble(1)))
+      val expected = oracle(kCand)
+      assert(expected.sliding(2).exists { case Seq(a, b) => a._2 == b._2 },
+        s"kCand=$kCand: the top $k must hold an equal-cosine pair")
       val split = splitDf.select(
         cell_rescore_topk($"v_a",
           ivfpq_cell_shortlist($"id_a", $"v_a", $"cm", kCand, cb, subDim),
-          $"vm", 5))
+          $"vm", k))
         .head().getSeq[org.apache.spark.sql.Row](0)
         .map(r => (r.getLong(0), r.getDouble(1)))
-      assert(fused == split, s"kCand=$kCand: fused $fused != split $split")
-      assert(fused.length == 5 && !fused.map(_._1).contains(5L))
+      assert(split == expected, s"kCand=$kCand: oracle $expected != split $split")
+      assert(split.length == k && !split.map(_._1).contains(self))
     }
+  }
+
+  test("cell expressions reject a member struct of the wrong layout at analysis") {
+    import graft.functions.AnnExpressions._
+    val cb = Array(Array(Array(0.0, 0.0)))
+    val df = Seq((1L, Seq(1f, 0f),
+      Seq(LblCodeMem(2L, Seq(0), "x")), Seq(VecMem(2L, 1.0, Seq(1f, 0f)))))
+      .toDF("id_a", "v_a", "cm", "vm")
+    // (id, code, extra) read as (id, norm, v) scored every member 0.0
+    val misread = Seq(
+      "cell_rescore_topk" -> cell_rescore_topk($"v_a", array(lit(2L)), $"cm", 1),
+      "ivfpq_cell_shortlist" -> ivfpq_cell_shortlist($"id_a", $"v_a", $"vm", 1, cb, 2),
+      "leader_dedup_cell" -> leader_dedup_cell($"cm", 0.9))
+    misread.foreach { case (fn, c) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c))
+      assert(e.getMessage.contains(s"$fn expects"), e.getMessage)
+    }
+    // the layouts they are meant for, payload fields appended, still resolve
+    val ok = df.select(
+      cell_rescore_topk($"v_a", array(lit(2L)), $"vm", 1),
+      ivfpq_cell_shortlist($"id_a", $"v_a", $"cm", 1, cb, 2),
+      leader_dedup_cell($"vm", 0.9)).head()
+    assert(ok.getSeq[org.apache.spark.sql.Row](0).map(_.getDouble(1)) == Seq(1.0))
+    assert(ok.getSeq[Long](1) == Seq(2L))
   }
 
   test("knnJoinAuto: small corpora route to LSH, big estimates to IVF, same contract") {
@@ -1677,9 +1735,8 @@ class OperatorsSpec extends SparkSpec {
   }
 }
 
-/** Row shapes for the split-vs-fused cell-expression parity test (top level
-  * so the Product encoders resolve). */
-private[operators] case class FusedMem(id: Long, norm: Double, code: Seq[Int], v: Seq[Float])
+/** Row shapes for the cell-expression tests (top level so the Product
+  * encoders resolve). */
 private[operators] case class CodeMem(id: Long, code: Seq[Int])
 private[operators] case class VecMem(id: Long, norm: Double, v: Seq[Float])
 private[operators] case class LblCodeMem(id: Long, code: Seq[Int], lbl: String)
